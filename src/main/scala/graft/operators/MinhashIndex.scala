@@ -60,15 +60,23 @@ object MinhashIndex {
   /** (doc_id, whs) → (doc_id, band, bk): the affine-rehash signature
     * pass + banding, pure map-side expressions.
     */
-  def bandsOf(base: DataFrame): DataFrame = {
+  def bandsOf(base: DataFrame): DataFrame =
+    bandArrayOf(base)
+      .select(col("doc_id"), explode(col("bands")).as("e"))
+      .select(col("doc_id"), col("e.band").as("band"), col("e.bk").as("bk"))
+
+  /** (doc_id, whs) → (doc_id, whs, bands): each document's
+    * [[bandsOf]] rows as one `array<struct<band, bk>>` beside its
+    * shingle set — one row per document, for callers that collect a
+    * batch's signatures in a single pass.
+    */
+  def bandArrayOf(base: DataFrame): DataFrame = {
     val sigs = base.select(
-      Seq(col("doc_id")) ++
+      Seq(col("doc_id"), col("whs")) ++
         (0 until HASHES).map(i => Dedup.minhashSig(col("whs"), i).as(s"s$i")): _*)
     val bandStructs = (0 until BANDS).map(b =>
       struct(lit(b).as("band"), Dedup.bandKey(b, ROWS).as("bk")))
-    sigs
-      .select(col("doc_id"), explode(array(bandStructs: _*)).as("e"))
-      .select(col("doc_id"), col("e.band").as("band"), col("e.bk").as("bk"))
+    sigs.select(col("doc_id"), col("whs"), array(bandStructs: _*).as("bands"))
   }
 
   // ---------------- artifact lifecycle ----------------

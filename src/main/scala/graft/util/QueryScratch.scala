@@ -15,6 +15,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[release]] after the terminal action. Frames registered here are
   * query-local by definition — anything meant to be shared across
   * queries should be cached explicitly by the application instead.
+  * Frames are keyed by the frame's OWN session, and a `foreachBatch`
+  * batch runs in a cloned session: `release(spark)` on the outer
+  * session does not free what a micro-batch registered.
   */
 object QueryScratch {
 

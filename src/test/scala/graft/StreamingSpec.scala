@@ -5,8 +5,16 @@ import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.streaming.Sessionize
 
+object StreamingSpec {
+  /** Roots, staged input and writer config of a near-dup drain fixture. */
+  final case class DedupFixture(bandsRoot: String, baseRoot: String,
+      resultsRoot: String, inDir: String, files: Seq[String],
+      cfg: graft.writer.BlockWriter.Config)
+}
+
 class StreamingSpec extends AnyFunSuite {
   import TestSpark._
+  import StreamingSpec.DedupFixture
 
   /** Stage DataFrames as one parquet file each under a fresh dir,
     * with strictly increasing modification times — the streaming file
@@ -178,30 +186,31 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming near-dup ingest: batches probe the persisted index, survivors commit, index grows") {
+  /** The near-dup drain fixture at sf0.001: a spec-local index
+    * (bands + base) seeded with the CORPUS partition (the shared
+    * session artifact stays immutable), an empty results root, and
+    * three arriving batches (thirds of the incoming-batch docs) staged
+    * with distinct mtimes so the file source's oldest-first order is
+    * deterministic — the fold oracle replays the same order.
+    */
+  private def dedupFixture(prefix: String): DedupFixture = {
     import graft.lake.LakeTable
     import graft.operators.MinhashIndex
-    import graft.streaming.DedupStream
     import graft.writer.BlockWriter
     val docs = Tables.load(spark, sf, "documents")
-    // spec-local index seeded with the CORPUS partition (the shared
-    // session artifact stays immutable); batches then append to it
-    val bandsRoot = graft.util.Scratch.dir("graft_ddst_idx_")
-    val baseRoot = graft.util.Scratch.dir("graft_ddst_base_")
-    val resultsRoot = graft.util.Scratch.dir("graft_ddst_res_")
+    val bandsRoot = graft.util.Scratch.dir(s"${prefix}idx_")
+    val baseRoot = graft.util.Scratch.dir(s"${prefix}base_")
+    val resultsRoot = graft.util.Scratch.dir(s"${prefix}res_")
     val cfg = BlockWriter.Config("doc_id", "doc_id", maxRecordsPerFile = 1 << 20)
     LakeTable.commit(spark, bandsRoot,
       MinhashIndex.corpusBands(spark, sf), cfg, Seq("doc_id"))
     LakeTable.commit(spark, baseRoot,
       MinhashIndex.corpusBase(spark, sf), cfg, Seq("doc_id"))
-    // three arriving batches (thirds of the incoming-batch docs),
-    // staged with distinct mtimes so the file source's oldest-first
-    // order is deterministic — the fold oracle replays the same order
-    val inDir = graft.util.Scratch.dir("graft_ddst_in_")
+    val inDir = graft.util.Scratch.dir(s"${prefix}in_")
     val files = (0 until 3).map { i =>
       val part = docs.filter(MinhashIndex.batchPred &&
         (col("doc_id") / 10) % 3 === i.toLong)
-      val tmp = graft.util.Scratch.dir(s"graft_ddst_t${i}_")
+      val tmp = graft.util.Scratch.dir(s"${prefix}t${i}_")
       part.coalesce(1).write.mode("overwrite").parquet(tmp)
       val src = new java.io.File(tmp).listFiles()
         .find(_.getName.endsWith(".parquet")).get.toPath
@@ -212,6 +221,15 @@ class StreamingSpec extends AnyFunSuite {
           System.currentTimeMillis() - (3 - i) * 60000L))
       dst.toString
     }
+    DedupFixture(bandsRoot, baseRoot, resultsRoot, inDir, files, cfg)
+  }
+
+  test("streaming near-dup ingest: batches probe the persisted index, survivors commit, index grows") {
+    import graft.lake.LakeTable
+    import graft.operators.MinhashIndex
+    import graft.streaming.DedupStream
+    val DedupFixture(bandsRoot, baseRoot, resultsRoot, inDir, files, cfg) =
+      dedupFixture("graft_ddst_")
     val (resCommits, idxCommits) = DedupStream.runOnceDedupToLake(
       spark, inDir, resultsRoot, bandsRoot, baseRoot, cfg)
     // one commit per surviving batch on BOTH tables (idempotent notes)
@@ -322,6 +340,192 @@ class StreamingSpec extends AnyFunSuite {
       corpusBands.unionByName(forged), corpusBase)
     assert(expected === Seq(100L))
     spark.catalog.clearCache()
+  }
+
+  /** Spark jobs started per streaming batch id by `body`'s drains.
+    * Jobs are told apart by a local property set on this thread: the
+    * stream thread, and any helper thread it starts, inherit a copy of
+    * it, while jobs of other threads carry none. Listener events are
+    * delivered asynchronously, so a marker job run after `body` is
+    * awaited before the counts are read (the bus delivers in order).
+    */
+  private def jobsPerBatch(body: => Unit): Map[Long, Int] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution
+    val key = "graft.spec.jobTag"
+    val tag = java.util.UUID.randomUUID().toString
+    val perBatch = new java.util.concurrent.ConcurrentHashMap[Long,
+      java.util.concurrent.atomic.AtomicInteger]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)) match {
+          case Some(`tag`) =>
+            Option(e.properties.getProperty(MicroBatchExecution.BATCH_ID_KEY))
+              .foreach(b => perBatch.computeIfAbsent(b.toLong,
+                _ => new java.util.concurrent.atomic.AtomicInteger()).incrementAndGet())
+          case Some(t) if t == s"$tag-end" => drained.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      body
+      sc.setLocalProperty(key, s"$tag-end")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the marker job")
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    perBatch.asScala.view.mapValues(_.get).toMap
+  }
+
+  test("streaming dedup batch budget: ≤ 12 Spark jobs per micro-batch, no cached frame left behind") {
+    import graft.streaming.DedupStream
+    val fx = dedupFixture("graft_ddjb_")
+    // the budget covers the whole micro-batch: the stream's own work,
+    // the gate's collected actions and the three commits (the
+    // helper-thread commit included)
+    spark.catalog.clearCache()
+    val jobs = jobsPerBatch {
+      DedupStream.runOnceDedupToLake(spark, fx.inDir, fx.resultsRoot,
+        fx.bandsRoot, fx.baseRoot, fx.cfg): Unit
+    }
+    info(s"Spark jobs per batch: ${jobs.toSeq.sorted.mkString(", ")}")
+    assert(jobs.keySet === Set(0L, 1L, 2L), s"one entry per batch: $jobs")
+    jobs.foreach { case (b, n) =>
+      assert(n <= 12, s"batch $b ran $n Spark jobs (budget 12): $jobs")
+    }
+    // the gate caches nothing: no cached frame may outlive a drain
+    // (a frame cached under the batch's cloned session is not released
+    // by a release keyed on the outer session)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a dedup drain left cached frames in the cache manager")
+  }
+
+  /** A small near-dup fixture: corpus docs 1-4 indexed (bands + base),
+    * one staged batch holding exact copies of docs 1 and 2 (ids 11,
+    * 12), two new docs (13, 14) and one doc too short to shingle (15).
+    * Returns the roots, the batch frame and the fold oracle's
+    * survivors. Failure injection: `baseExtraCol` gives the base table
+    * a column the drain's frames lack (its append fails the schema
+    * check at commit time, after staging); `reservedBatchCol` gives the
+    * batch a reserved row-coordinate column (the results append fails
+    * before staging anything).
+    */
+  private def smallDedupFixture(prefix: String, baseExtraCol: Boolean = false,
+      reservedBatchCol: Boolean = false) = {
+    val s = spark
+    import s.implicits._
+    import graft.lake.LakeTable
+    import graft.operators.MinhashIndex
+    import graft.streaming.DedupStream
+    import graft.writer.BlockWriter
+    def text(d: Int) = (0 until 24).map(j => s"w${d}_$j").mkString(" ")
+    val corpusDf = (1 to 4).map(d => (d.toLong, text(d))).toDF("doc_id", "text")
+    val batchDf0 = Seq((11L, text(1)), (12L, text(2)), (13L, text(13)),
+      (14L, text(14)), (15L, "too short")).toDF("doc_id", "text")
+    val batchDf =
+      if (reservedBatchCol) batchDf0.withColumn(LakeTable.CoordPath, lit("x"))
+      else batchDf0
+    val corpusBase = MinhashIndex.baseOf(corpusDf)
+    val corpusBands = MinhashIndex.bandsOf(corpusBase)
+    val bandsRoot = graft.util.Scratch.dir(s"${prefix}idx_")
+    val baseRoot = graft.util.Scratch.dir(s"${prefix}base_")
+    val resultsRoot = graft.util.Scratch.dir(s"${prefix}res_")
+    val cfg = BlockWriter.Config("doc_id", "doc_id", maxRecordsPerFile = 1 << 20)
+    LakeTable.commit(spark, bandsRoot, corpusBands, cfg, Seq("doc_id"))
+    LakeTable.commit(spark, baseRoot,
+      if (baseExtraCol) corpusBase.withColumn("extra", lit(0)) else corpusBase,
+      cfg, Seq("doc_id"))
+    val inDir = stageBatches(s"${prefix}in_", Seq(batchDf))
+    val file = java.nio.file.Paths.get(inDir, "b00.parquet").toString
+    val survivors = DedupStream.batchFold(spark, Seq(file), corpusBands, corpusBase)
+    assert(survivors === Seq(13L, 14L, 15L), "fixture: exact copies drop, the rest survive")
+    (bandsRoot, baseRoot, resultsRoot, inDir, cfg, batchDf, survivors)
+  }
+
+  test("streaming dedup replay: a batch whose results (and base) landed before a crash re-lands only the rest") {
+    import graft.lake.LakeTable
+    import graft.operators.MinhashIndex
+    import graft.streaming.DedupStream
+    def ids(root: String) =
+      LakeTable.read(spark, root).filter(col("doc_id") > 10L)
+        .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    for (baseLanded <- Seq(false, true)) {
+      val (bandsRoot, baseRoot, resultsRoot, inDir, cfg, batchDf, survivors) =
+        smallDedupFixture(if (baseLanded) "graft_ddrb_" else "graft_ddrr_")
+      val kept = col("doc_id").isin(survivors: _*)
+      // what a crash after the first commit(s) of batch 0 leaves behind
+      LakeTable.commit(spark, resultsRoot, batchDf.filter(kept), cfg,
+        Seq("doc_id"), note = "batch-0")
+      if (baseLanded)
+        LakeTable.commit(spark, baseRoot,
+          MinhashIndex.baseOf(batchDf).filter(kept), cfg, Seq("doc_id"),
+          note = "batch-0")
+      DedupStream.runOnceDedupToLake(spark, inDir, resultsRoot, bandsRoot,
+        baseRoot, cfg)
+      // every survivor in results exactly once: the landed commit is
+      // not repeated
+      assert(ids(resultsRoot) === survivors, s"baseLanded=$baseLanded")
+      assert(LakeTable.currentSnapshot(resultsRoot) === 1)
+      // base and bands gained exactly the shingled survivors (doc 15
+      // is too short to shingle), each once
+      val shingled = survivors.filterNot(_ == 15L)
+      assert(ids(baseRoot) === shingled, s"baseLanded=$baseLanded")
+      assert(ids(bandsRoot) ===
+        shingled.flatMap(Seq.fill(MinhashIndex.BANDS)(_)), s"baseLanded=$baseLanded")
+      assert(LakeTable.manifest(bandsRoot, LakeTable.currentSnapshot(bandsRoot))
+        .note === "batch-0")
+    }
+  }
+
+  test("streaming dedup: a failing overlapped commit fails the drain, after its twin landed") {
+    import graft.lake.LakeTable
+    import graft.streaming.DedupStream
+    def headNote(root: String) =
+      LakeTable.manifest(root, LakeTable.currentSnapshot(root)).note
+    def failure(e: Throwable): IllegalArgumentException =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case i: IllegalArgumentException => i }
+        .getOrElse(fail(s"drain failed with an unexpected exception: $e", e))
+    // results (the stream thread's commit) fails at once, before
+    // staging; base (the helper's, still staging then) must have landed
+    // by the time the drain rethrows
+    locally {
+      val (bandsRoot, baseRoot, resultsRoot, inDir, cfg, _, _) =
+        smallDedupFixture("graft_ddfr_", reservedBatchCol = true)
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        DedupStream.runOnceDedupToLake(spark, inDir, resultsRoot, bandsRoot,
+          baseRoot, cfg)
+      }
+      val cause = failure(e)
+      assert(cause.getMessage.contains(LakeTable.CoordPath) &&
+        cause.getMessage.contains("reserved"), cause.getMessage)
+      assert(LakeTable.currentSnapshot(resultsRoot) === 0)
+      assert(headNote(baseRoot) === "batch-0", "the overlapped base commit must land first")
+      assert(headNote(bandsRoot) !== "batch-0", "bands must not land after a failed commit")
+    }
+    // base (the helper's commit) fails; results must have landed
+    locally {
+      val (bandsRoot, baseRoot, resultsRoot, inDir, cfg, _, survivors) =
+        smallDedupFixture("graft_ddfb_", baseExtraCol = true)
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        DedupStream.runOnceDedupToLake(spark, inDir, resultsRoot, bandsRoot,
+          baseRoot, cfg)
+      }
+      val cause = failure(e)
+      assert(cause.getMessage.contains(s"append schema mismatch for $baseRoot"),
+        cause.getMessage)
+      assert(headNote(resultsRoot) === "batch-0", "the overlapped results commit must land first")
+      assert(LakeTable.read(spark, resultsRoot).count() === survivors.size.toLong)
+      assert(headNote(bandsRoot) !== "batch-0", "bands must not land after a failed commit")
+    }
   }
 
   test("custom-state sessionizer matches native session_window") {
