@@ -1,126 +1,52 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-import graft.writer.BlockWriter
-
-/** BITMAP distinct-count materialized views — `COUNT(DISTINCT x)`
-  * for BOUNDED INTEGRAL key domains, the documented scale path when
-  * the key domain is too large for the exact kind's (group, key)
-  * state rows but small enough to bitmap: state is
-  * O(groups × domain / 8) BYTES (one 64-key word per occupied word
-  * index) instead of O(groups × live keys) ROWS.
+/** BITMAP distinct-count MVs — exact `COUNT(DISTINCT x)` for BOUNDED
+  * INTEGRAL keys in [0, `domain`), a [[SketchStateMv]] law. A cell is
+  * one 64-key word: `_widx = x div 64` holds bit `x mod 64` in `_word`;
+  * cells fold by bit_or and the distinct measure sums bit counts.
+  * State is O(groups × domain / 8) BYTES instead of the exact kind's
+  * O(groups × live keys) rows — a 10^7-key domain is ~1.2 MB per group
+  * (unbounded domains stay with [[DistinctMv]]). A key outside the
+  * domain would alias another key's bit, so it fails pointedly.
   *
-  * State (`<mv>/_bstate`, nested like [[DistinctMv]]'s): one row per
-  * (group, `_widx`) with `_word` holding a 64-key bitset —
-  * `_widx = x div 64`, bit `x mod 64`. A sentinel `_widx = -1` row
-  * carries the group's ROW COUNT in `_word` (so the VISIBLE view —
-  * `n`, `uniq = SUM(bit_count(word))` — derives from state alone,
-  * which is what makes the two-commit protocol crash-safe: both
-  * commits are idempotent re-derivations of durable state).
-  *
-  * Maintenance is the MinMax lattice applied to distinct:
-  *  - APPENDS are OR-DISTRIBUTIVE — new word = stored | Δ-word, the
-  *    sentinel adds. The fold reads ONLY the delta files (one
-  *    incremental scan, no changelog, no fact head) plus the touched
-  *    cells' state rows, and lands as one MoR merge on the stored
-  *    cell key ([[DistinctMv.SKeyCol]] over (group, widx)) — O(Δ)
-  *    reads and writes, untouched state files byte-identical. Mode
-  *    `fold`.
-  *  - DELETES break OR-distributivity (no bit can retire without
-  *    knowing the group's other rows): the change feed names the
-  *    touched GROUPS, which recompute from the fact head through the
-  *    IN-pruned scan and land as one merge whose equality-delete
-  *    mask retires every PRIOR cell of those groups (vanished cells
-  *    and all). Past the `graft.mvrefresh.maxgroups` cap — or when
-  *    retention expired the range — one full recompute (`full`),
-  *    MinMax's own fallback. Mode `targeted`.
-  *
-  * The visible basis note shares [[DistinctMv]]'s `dmv-basis-` name
-  * (modes `fold`/`targeted`/`full`), so the SQL front door's
-  * basis/mode/metadata plumbing and the rewrite rule's freshness
-  * validation serve both distinct kinds unchanged. The rewrite
-  * rule's BITMAP tiers (r18) serve from this state directly —
+  * The rewrite rule's BITMAP tiers serve from this state directly:
   * bit_or is associative across grouped-away dimensions and across
-  * state ∪ delta, so a group-SUBSET COUNT(DISTINCT) re-aggregates
-  * the words and an append-only-STALE view compensates exactly at
-  * read time ([[graft.plans.MvRewrite]], pinned to the
-  * validation-time state basis via [[stateBasisPinned]]); the exact
-  * kind's `_dstate` tiers veto this kind explicitly.
-  *
-  * At 100 TB: a 10^7-key domain is ~1.2 MB of state per group —
-  * exact COUNT(DISTINCT) over fact-scale key traffic with append
-  * folds that never touch the fact. (Unbounded domains stay with
-  * the exact (group, key) kind.)
+  * state ∪ delta, so a group-subset COUNT(DISTINCT) re-aggregates the
+  * words and an append-only-stale view compensates exactly at read
+  * time ([[graft.plans.MvRewrite]], pinned through
+  * [[SketchStateMv.Layout.stateBasisPinned]]).
   */
-object BitmapDistinctMv {
+object BitmapDistinctMv extends SketchStateMv.Layout(
+    "_bstate", "_widx", "_word", "bmvs") {
 
-  /** Word-index column of the hidden state (key >> 6; -1 = the
-    * group's row-count sentinel row).
-    */
-  val WidxCol = "_widx"
+  /** Word-index column (key >> 6; -1 = the row-count sentinel). */
+  val WidxCol: String = idxCol
 
-  /** Word column: a 64-key bitset (widx >= 0) or the row count (the
-    * widx = -1 sentinel).
-    */
-  val WordCol = "_word"
+  /** Word column: a 64-key bitset, or the sentinel's row count. */
+  val WordCol: String = valCol
+}
 
-  private val noteRe = "^dmv-basis-(\\d+)-(fold|targeted|full)$".r
-  private val stateNoteRe = "^bmvs-basis-(\\d+)-(fold|targeted|full)$".r
+final case class BitmapDistinctMv(domain: Long) extends SketchStateMv.Law {
+  import BitmapDistinctMv.{WidxCol, WordCol}
+  require(domain > 0, "bitmap distinct kind needs distinct_domain > 0")
 
-  /** The hidden state table's root, nested inside the MV dir. */
-  def stateRoot(mvRoot: String): String =
-    java.nio.file.Paths.get(mvRoot, "_bstate").toString
+  def layout: SketchStateMv.Layout = BitmapDistinctMv
 
-  /** The fact snapshot the VISIBLE MV head reflects. */
-  def basis(mvRoot: String): Int = DistinctMv.basis(mvRoot)
+  def cellOf(keyCol: String): (Column, Column) =
+    (col(keyCol).cast("long") / 64L,
+      expr(s"shiftleft(1L, int(`$keyCol` % 64))"))
 
-  /** Maintenance mode of the newest refresh the head reflects. */
-  def mode(mvRoot: String): String =
-    LakeTable.findContentNote(mvRoot) {
-      case noteRe(_, m) => Some(m)
-      case _ => None
-    }.getOrElse("?")
+  def foldCell(v: Column): Column = bit_or(v)
 
-  private def stateBasis(stRoot: String): Int =
-    LakeTable.findContentNote(stRoot) {
-      case stateNoteRe(f, _) => Some(f.toInt)
-      case _ => None
-    }.getOrElse(sys.error(s"$stRoot carries no bmvs-basis note"))
+  def derive(cells: RelationalGroupedDataset, n: Column,
+      distinctName: String): DataFrame =
+    cells.agg(n, sum(when(col(WidxCol) >= 0L, bit_count(col(WordCol)))
+      .otherwise(0L)).cast("bigint").as(distinctName))
 
-  /** (state snapshot, fact basis it reflects) read CONSISTENTLY —
-    * the head is re-checked after the note walk so the pair
-    * describes one state incarnation even if a refresh commits
-    * mid-read (the same discipline as
-    * [[DistinctMv.stateBasisPinned]]). The rewrite rule's bitmap
-    * tiers carry this pair on the candidate and pin their state
-    * scans to it.
-    */
-  def stateBasisPinned(mvRoot: String): Option[(Int, Int)] = {
-    val stRoot = stateRoot(mvRoot)
-    var attempts = 0
-    while (attempts < 3) {
-      val snap = scala.util.Try(LakeTable.currentSnapshot(stRoot))
-        .getOrElse(return None)
-      if (snap <= 0) return None
-      val b = scala.util.Try(stateBasis(stRoot)).getOrElse(return None)
-      if (LakeTable.currentSnapshot(stRoot) == snap) return Some((snap, b))
-      attempts += 1
-    }
-    None
-  }
-
-  private def stateCfg(group: Seq[String]): BlockWriter.Config =
-    BlockWriter.Config(group.head, group.head, maxRecordsPerFile = 1 << 20)
-
-  /** Bound check: every non-null key of `rows` must sit in
-    * [0, domain) — a key outside would silently alias another key's
-    * bit. Fails pointedly with the offending extent.
-    */
-  private def checkDomain(rows: DataFrame, keyCol: String,
-      domain: Long): Unit = {
+  override def check(rows: DataFrame, keyCol: String): Unit = {
     val bad = rows.filter(col(keyCol).isNotNull &&
         (col(keyCol) < 0L || col(keyCol) >= domain))
       .agg(count(lit(1)), min(col(keyCol)), max(col(keyCol))).head()
@@ -128,245 +54,5 @@ object BitmapDistinctMv {
       s"bitmap distinct kind: ${bad.getLong(0)} key(s) outside " +
         s"[0, $domain) (seen extent [${bad.get(1)}, ${bad.get(2)}]) — " +
         "widen distinct_domain or use the exact distinct kind")
-  }
-
-  /** The (group, widx, word) state of a plain base read: bit words
-    * for non-null keys plus the widx = -1 row-count sentinel.
-    */
-  private def stateOf(base: DataFrame, group: Seq[String],
-      keyCol: String): DataFrame = {
-    val words = base.filter(col(keyCol).isNotNull)
-      .select(group.map(col) :+
-        (col(keyCol).cast("long") / 64L).cast("long").as(WidxCol) :+
-        expr(s"shiftleft(1L, int(`$keyCol` % 64))").as("_bit"): _*)
-      .groupBy((group :+ WidxCol).map(col): _*)
-      .agg(expr("bit_or(_bit)").cast("long").as(WordCol))
-    val sentinel = base.groupBy(group.map(col): _*)
-      .agg(count(lit(1)).cast("long").as(WordCol))
-      .withColumn(WidxCol, lit(-1L))
-      .select((group :+ WidxCol :+ WordCol).map(col): _*)
-    val st = words.select((group :+ WidxCol :+ WordCol).map(col): _*)
-      .unionByName(sentinel)
-    st.withColumn(DistinctMv.SKeyCol,
-      DistinctMv.cellKey(st.schema, group :+ WidxCol))
-  }
-
-  /** Visible rows from a state frame: n = the sentinel word, uniq =
-    * summed bit_count over the word rows.
-    */
-  private def derive(st: DataFrame, group: Seq[String],
-      distinctName: String): DataFrame =
-    st.groupBy(group.map(col): _*)
-      .agg(
-        sum(when(col(WidxCol) === -1L, col(WordCol)).otherwise(0L))
-          .cast("bigint").as(IncrementalJoinMv.CountCol),
-        sum(when(col(WidxCol) >= 0L, expr(s"bit_count($WordCol)"))
-          .otherwise(0L)).cast("bigint").as(distinctName))
-
-  /** Materialize state + view from the fact head; returns the MV
-    * snapshot.
-    */
-  def create(s: SparkSession, factRoot: String, mvRoot: String,
-      group: Seq[String], keyCol: String, distinctName: String,
-      domain: Long, cfg: BlockWriter.Config,
-      prep: DataFrame => DataFrame = identity): Int = {
-    require(domain > 0, "bitmap distinct kind needs distinct_domain > 0")
-    val f = LakeTable.currentSnapshot(factRoot)
-    val base = prep(LakeTable.read(s, factRoot, Some(f)))
-    checkDomain(base, keyCol, domain)
-    // the hidden state owns its own mask hygiene (see
-    // DistinctMv.StateCompactFiles)
-    AutoMaintain.setPolicy(stateRoot(mvRoot),
-      AutoMaintain.AutoCompactKey, DistinctMv.StateCompactFiles)
-    LakeTable.commit(s, stateRoot(mvRoot), stateOf(base, group, keyCol),
-      stateCfg(group), group, note = s"bmvs-basis-$f-full")
-    LakeTable.commit(s, mvRoot,
-      derive(LakeTable.read(s, stateRoot(mvRoot)), group, distinctName),
-      cfg, group, note = s"dmv-basis-$f-full")
-  }
-
-  /** Fold fact changes since the basis; returns the new fact basis.
-    * Pure-append ranges take the OR-distributive `fold`; ranges with
-    * deletes take the group-`targeted` recompute; over-cap or
-    * expired ranges take one `full` recompute.
-    */
-  def refresh(s: SparkSession, factRoot: String, mvRoot: String,
-      group: Seq[String], keyCol: String, distinctName: String,
-      domain: Long, cfg: BlockWriter.Config,
-      prep: DataFrame => DataFrame = identity): Int = {
-    val f0 = basis(mvRoot)
-    val f1 = LakeTable.currentSnapshot(factRoot)
-    val stRoot = stateRoot(mvRoot)
-    val sb = stateBasis(stRoot)
-    if (f0 == f1 && sb == f0) return f0
-    var mode = "fold"
-    var leads: Option[Seq[Any]] = None
-    if (sb < f1) {
-      val appendOnly =
-        scala.util.Try(IncrementalMv.appendOnly(factRoot, sb, f1))
-          .getOrElse(false)
-      if (appendOnly) {
-        // OR-distributive fold: delta files only, one merge on the
-        // touched cells — the fact head is never read
-        val delta0 = prep(LakeTable.incrementalRead(s, factRoot, sb, f1))
-          .persist()
-        try {
-          // ONE materializing action decides emptiness AND the touched
-          // leads: every delta row has a lead slot (null included), so
-          // zero collected leads ⇔ empty delta — the two isEmpty
-          // probes this replaced cost a scheduled job each
-          val deltaState = stateOf(delta0, group, keyCol)
-          val ls = collectLeads(s, deltaState, group, mvRoot)
-          val empty = ls.contains(Nil)
-          if (empty && sb == f0) return f0
-          if (!empty) {
-            checkDomain(delta0, keyCol, domain)
-            leads = ls
-            foldMerge(s, stRoot, deltaState, group, leads,
-              note = s"bmvs-basis-$f1-fold")
-          }
-        } finally { delta0.unpersist(); () }
-      } else {
-        // deletes in the range: group-targeted recompute (the MinMax
-        // lattice — no bit can retire without the group's other rows)
-        val touchedRows = scala.util.Try(
-          LakeTable.changelogRead(s, factRoot, sb, f1)
-            .select(col(group.head)).distinct()).toOption
-        val cap = AutoMaintain.policies(mvRoot)
-          .getOrElse(AutoMaintain.MvMaxGroupsKey, MinMaxMv.DefaultMaxGroups)
-        val touched: Option[Seq[Any]] = touchedRows.flatMap { tr =>
-          val capN = math.min(cap, Int.MaxValue - 1L).toInt
-          val ls = tr.limit(capN + 1).collect().map(_.get(0)).toSeq
-          if (ls.size <= capN) Some(ls) else None
-        }
-        touched match {
-          case Some(ts) if ts.nonEmpty && !ts.contains(null) =>
-            mode = "targeted"
-            leads = Some(ts)
-            val stored = LakeTable.storedSchemaOf(stRoot).get
-            val cur = prep(
-              s.read.format("graft-lake").option("snapshot", f1.toString)
-                .load(factRoot).filter(col(group.head).isin(ts: _*)))
-            checkDomain(cur, keyCol, domain)
-            val next = stateOf(cur, group, keyCol)
-            // retire EVERY prior cell of the touched groups (vanished
-            // word cells included) via the same commit's mask
-            val oldKeys = DistinctMv.prunedStateRead(s, stRoot, group.head, ts)
-              .select(col(DistinctMv.SKeyCol))
-            val allKeys = oldKeys
-              .unionByName(next.select(col(DistinctMv.SKeyCol))).distinct()
-            // stored column order only — merge's name+type gate needs
-            // no nullability re-stamp, so the rdd round-trip that
-            // broke whole-stage codegen here is gone; allKeys covers
-            // live's keys by construction, so the covered-keys merge
-            // needs no pre-commit isEmpty probe (an all-retired group
-            // commits as a pure-mask delete)
-            val live = next.select(
-              stored.fieldNames.toIndexedSeq.map(col): _*)
-            LakeTable.merge(s, stRoot, DistinctMv.SKeyCol, live,
-              stateCfg(group).copy(
-                writeTasks = Some(math.max(1, ts.size))), group,
-              note = s"bmvs-basis-$f1-targeted",
-              extraDeleteKeys = Some(allKeys),
-              deleteKeysCoverUpdates = true): Unit
-          case Some(ts) if ts.isEmpty =>
-            // content-preserving commits only: nothing to fold
-            if (sb == f0) return f0
-          case _ =>
-            // over-cap, NULL lead, or expired range: one full recompute
-            mode = "full"
-            val base = prep(LakeTable.read(s, factRoot, Some(f1)))
-            checkDomain(base, keyCol, domain)
-            LakeTable.rewrite(s, stRoot, stateOf(base, group, keyCol),
-              stateCfg(group), group, note = s"bmvs-basis-$f1-full"): Unit
-        }
-      }
-    }
-    // visible rows: lead-targeted merge when the fold named the
-    // touched leads and the lead key can equality-mask; else the
-    // group-domain-sized rewrite
-    val visStored = LakeTable.storedSchemaOf(mvRoot)
-    val maskable = leads.exists(ls => ls.nonEmpty && !ls.contains(null)) &&
-      sb == f0 && visStored.exists(_.fields.find(_.name == group.head)
-        .exists(_.dataType != TimestampType))
-    if (maskable) {
-      val vs = visStored.get
-      val ls = leads.get
-      val vis = derive(
-        DistinctMv.prunedStateRead(s, stRoot, group.head, ls), group,
-        distinctName)
-      // liveV's lead values ⊆ the touched leads (it derives from the
-      // lead-pruned state read), so the covered-keys merge retires
-      // vanished leads via the mask with no isEmpty probe; stored
-      // column order only (name+type gate)
-      val liveV = vis.select(vs.fieldNames.toIndexedSeq.map(col): _*)
-      val leadsDf = s.createDataFrame(
-        java.util.Arrays.asList(ls.map(v => Row(v)): _*),
-        StructType(Seq(vs(group.head))))
-      LakeTable.merge(s, mvRoot, group.head, liveV,
-        cfg.copy(writeTasks = Some(math.max(1, ls.size))), group,
-        note = s"dmv-basis-$f1-$mode", extraDeleteKeys = Some(leadsDf),
-        deleteKeysCoverUpdates = true): Unit
-    } else
-      LakeTable.rewrite(s, mvRoot,
-        derive(LakeTable.read(s, stRoot), group, distinctName),
-        cfg, group, note = s"dmv-basis-$f1-$mode"): Unit
-    f1
-  }
-
-  /** Collect the delta's lead-group values when metadata-scale —
-    * one job (cap+1 limit), no count pass.
-    */
-  private def collectLeads(s: SparkSession, deltaState: DataFrame,
-      group: Seq[String], mvRoot: String): Option[Seq[Any]] = {
-    val cap = math.min(AutoMaintain.policies(mvRoot)
-      .getOrElse(AutoMaintain.MvMaxGroupsKey, MinMaxMv.DefaultMaxGroups),
-      Int.MaxValue - 1L).toInt
-    val ls = deltaState.select(col(group.head)).distinct()
-      .limit(cap + 1).collect().map(_.get(0)).toSeq
-    if (ls.size <= cap) Some(ls) else None
-  }
-
-  /** Append fold: stored touched cells ∪ delta cells → bit_or words /
-    * summed sentinels, one merge on the cell key.
-    */
-  private def foldMerge(s: SparkSession, stRoot: String,
-      deltaState: DataFrame, group: Seq[String], leads: Option[Seq[Any]],
-      note: String): Unit = {
-    val stored = LakeTable.storedSchemaOf(stRoot).get
-    val names = stored.fieldNames.toIndexedSeq
-    val stateRead = leads match {
-      case Some(ls) => DistinctMv.prunedStateRead(s, stRoot, group.head, ls)
-      case None => LakeTable.read(s, stRoot)
-    }
-    val touchedKeys = deltaState.select(col(DistinctMv.SKeyCol)).distinct()
-    // the sentinel ADDs, word cells OR — split BEFORE aggregating so
-    // the SUM never touches a bitset word (a high bit summed twice
-    // would overflow long under ANSI)
-    val folded = stateRead.select(names.map(col): _*)
-      .join(touchedKeys, Seq(DistinctMv.SKeyCol), "left_semi")
-      .unionByName(deltaState.select(names.map(col): _*))
-      .withColumn("_sv", when(col(WidxCol) === -1L, col(WordCol))
-        .otherwise(0L))
-      .withColumn("_wv", when(col(WidxCol) >= 0L, col(WordCol))
-        .otherwise(0L))
-      .groupBy((group :+ WidxCol :+ DistinctMv.SKeyCol).map(col): _*)
-      .agg(sum(col("_sv")).cast("long").as("_s"),
-        expr("bit_or(_wv)").cast("long").as("_o"))
-      .withColumn(WordCol,
-        when(col(WidxCol) === -1L, col("_s")).otherwise(col("_o")))
-      .drop("_s", "_o")
-    // folded keys ⊆ touchedKeys (semi-join ∪ delta cells), so the
-    // covered-keys merge stages live once — no persist, no rdd
-    // round-trip, no isEmpty probe (name+type gate)
-    val live = folded.select(names.map(col): _*)
-    // staged files ≤ non-empty lead buckets ≤ collected-lead count:
-    // file-bound task fan-out (bucket width untouched)
-    LakeTable.merge(s, stRoot, DistinctMv.SKeyCol, live,
-      stateCfg(group).copy(
-        writeTasks = leads.map(ls => math.max(1, ls.size))),
-      group, note = note,
-      extraDeleteKeys = Some(touchedKeys),
-      deleteKeysCoverUpdates = true): Unit
   }
 }

@@ -58,19 +58,14 @@ import graft.writer.BlockWriter
   * the touched lead groups' state files (IN-pruned scan under the
   * `graft.mvrefresh.maxgroups` cap; whole-state scan past it) and
   * writes only the touched cells. (When the key domain itself is too
-  * large for (g, x) state, the built scale paths are the BITMAP kind
-  * — [[BitmapDistinctMv]], per-group word-sharded bitsets over
-  * bounded integral keys, OR-distributive under appends — and, for
-  * unbounded domains where an estimate suffices, the HLL kind —
-  * [[HllDistinctMv]], bounded-register sketches.)
+  * large for (g, x) state, the built scale paths are the sketch kinds
+  * of [[SketchStateMv]], which share this kind's visible `dmv-basis-`
+  * note: [[BitmapDistinctMv$ the bitmap law]], per-group word-sharded
+  * bitsets over bounded integral keys, and, for unbounded domains
+  * where an estimate suffices, [[HllDistinctMv$ the HLL law]],
+  * bounded-register sketches.)
   */
 object DistinctMv {
-
-  // `signed`/`full` are this kind's modes; `fold`/`targeted` are the
-  // BITMAP kind's ([[BitmapDistinctMv]]) — it shares the visible note
-  // name so basis/mode plumbing and rewrite freshness serve both
-  private val noteRe = "^dmv-basis-(\\d+)-(signed|full|fold|targeted)$".r
-  private val stateNoteRe = "^dmvs-basis-(\\d+)-(signed|full)$".r
 
   /** Multiplicity column of the hidden state table. */
   val CntCol = "_cnt"
@@ -121,72 +116,21 @@ object DistinctMv {
       if (i == 0) "_dstate" else s"_dstate$i").toString
 
   /** The fact snapshot the VISIBLE MV head reflects. */
-  def basis(mvRoot: String): Int = {
-    require(LakeTable.currentSnapshot(mvRoot) > 0, s"$mvRoot has no MV state")
-    LakeTable.findContentNote(mvRoot) {
-      case noteRe(f, _) => Some(f.toInt)
-      case _ => None
-    }.getOrElse(sys.error(
-      s"$mvRoot carries no dmv-basis note in its live chain — " +
-        "not a distinct-count MV (or its basis commits were expired)"))
-  }
+  def basis(mvRoot: String): Int = MvBasis.of(mvRoot, MvBasis.Distinct).snaps.head
 
   /** Maintenance mode of the newest refresh the head reflects
     * (`signed` — the change-feed fold — or `full`, the CREATE /
-    * expired-range recompute).
+    * expired-range recompute; the sketch kinds add `fold`/`targeted`).
     */
-  def mode(mvRoot: String): String =
-    LakeTable.findContentNote(mvRoot) {
-      case noteRe(_, m) => Some(m)
-      case _ => None
-    }.getOrElse("?")
-
-  private def stateBasis(stRoot: String): (Int, String) =
-    LakeTable.findContentNote(stRoot) {
-      case stateNoteRe(f, m) => Some((f.toInt, m))
-      case _ => None
-    }.getOrElse(sys.error(s"$stRoot carries no dmvs-basis note"))
-
-  /** The fact snapshot the HIDDEN state table reflects — the rewrite
-    * rule's state-rollup tier serves from the state only when this
-    * equals the scanned snapshot exactly (a crash between the two
-    * refresh commits leaves the state AHEAD of the visible view;
-    * serving it then would leak newer data into a pinned read).
-    */
-  def stateBasisOf(mvRoot: String): Int = stateBasis(stateRoot(mvRoot))._1
-
-  /** (state snapshot, fact basis it reflects) read CONSISTENTLY — the
-    * head is re-checked after the note walk so the pair describes one
-    * state incarnation even if a refresh commits mid-read. The
-    * rewrite tiers carry this pair on the CANDIDATE and pin their
-    * state scans to it: validating against live heads at serve time
-    * is a TOCTOU (a refresh landing between candidate validation and
-    * the serve would advance state and visible bases together, pass a
-    * live-alignment check, and leak newer state rows into a read
-    * pinned at the older fact snapshot).
-    */
-  def stateBasisPinned(mvRoot: String): Option[(Int, Int)] =
-    stateBasisPinnedAt(stateRoot(mvRoot))
-
-  private def stateBasisPinnedAt(stRoot: String): Option[(Int, Int)] = {
-    var attempts = 0
-    while (attempts < 3) {
-      val snap = scala.util.Try(LakeTable.currentSnapshot(stRoot))
-        .getOrElse(return None)
-      if (snap <= 0) return None
-      val b = scala.util.Try(stateBasis(stRoot)._1).getOrElse(return None)
-      if (LakeTable.currentSnapshot(stRoot) == snap) return Some((snap, b))
-      attempts += 1
-    }
-    None
-  }
+  def mode(mvRoot: String): String = MvBasis.mode(mvRoot, MvBasis.Distinct)
 
   /** One consistent (state snapshot, fact basis) pin PER distinct
-    * state, first-first; None if any state is unreadable.
+    * state, first-first ([[MvBasis.pinned]]); None if any state is
+    * unreadable.
     */
   def stateBasisPinnedAll(mvRoot: String, n: Int): Option[Seq[(Int, Int)]] = {
     val pins = (0 until math.max(1, n))
-      .map(i => stateBasisPinnedAt(stateRoot(mvRoot, i)))
+      .map(i => MvBasis.pinned(stateRoot(mvRoot, i), MvBasis.ExactState))
     if (pins.exists(_.isEmpty)) None else Some(pins.map(_.get))
   }
 
@@ -221,7 +165,10 @@ object DistinctMv {
     derived.foldLeft(out) { case (d, (n, c)) => d.withColumn(n, c) }
   }
 
-  private def stateCfg(group: Seq[String]): BlockWriter.Config =
+  /** Writer config of a hidden state table: bucketed and sorted on
+    * the lead group column.
+    */
+  private[lake] def stateCfg(group: Seq[String]): BlockWriter.Config =
     BlockWriter.Config(group.head, group.head, maxRecordsPerFile = 1 << 20)
 
   /** Auto-compaction threshold stamped on every hidden state table at
@@ -263,13 +210,13 @@ object DistinctMv {
         AutoMaintain.setPolicy(stateRoot(mvRoot, i),
           AutoMaintain.AutoCompactKey, StateCompactFiles)
         LakeTable.commit(s, stateRoot(mvRoot, i), st, stateCfg(group), group,
-          note = s"dmvs-basis-$f-full"): Unit
+          note = MvBasis.note(MvBasis.ExactState, Seq(f), "full")): Unit
       }
     } finally { if (distincts.size > 1) { baseShared.unpersist(); () } }
     LakeTable.commit(s, mvRoot,
       deriveAll(s, mvRoot, group, distincts, sums, derived,
         r => LakeTable.read(s, r)),
-      cfg, group, note = s"dmv-basis-$f-full")
+      cfg, group, note = MvBasis.note(MvBasis.Distinct, Seq(f), "full"))
   }
 
   /** Visible rows from ALL states: n / SUMs / the first distinct
@@ -321,11 +268,10 @@ object DistinctMv {
     val distincts = (keyCol, distinctName) +: extra
     val f0 = basis(mvRoot)
     val f1 = LakeTable.currentSnapshot(factRoot)
-    val sbs = distincts.indices.map(i => stateBasis(stateRoot(mvRoot, i)))
-    if (f0 == f1 && sbs.forall(_._1 == f0)) return f0
-    val allAligned = sbs.forall(_._1 == f0)
-    val cap = AutoMaintain.policies(mvRoot)
-      .getOrElse(AutoMaintain.MvMaxGroupsKey, MinMaxMv.DefaultMaxGroups)
+    val sbs = distincts.indices
+      .map(i => MvBasis.of(stateRoot(mvRoot, i), MvBasis.ExactState))
+    if (f0 == f1 && sbs.forall(_.snaps.head == f0)) return f0
+    val allAligned = sbs.forall(_.snaps.head == f0)
     var anyFold = false
     var anyFull = false
     // touched LEAD-group values across the states' deltas (the change
@@ -347,14 +293,13 @@ object DistinctMv {
     try {
     distincts.zipWithIndex.foreach { case ((kc, _), i) =>
       val stRoot = stateRoot(mvRoot, i)
-      val sb = sbs(i)._1
+      val sb = sbs(i).snaps.head
       if (sb < f1) {
         var cached: Option[DataFrame] = None
         try {
           // the delta AND its touched leads in ONE materializing job:
           // zero collected leads ⇔ empty delta (every delta row has a
           // lead slot, null included), so no separate isEmpty pass
-          val capN = math.min(cap, Int.MaxValue - 1L).toInt
           val signedDelta: Option[(DataFrame, Option[Seq[Any]])] = try {
             val changes = changesByRange.getOrElseUpdate((sb, f1),
               if (distincts.size == 1) LakeTable.changelogRead(s, factRoot, sb, f1)
@@ -365,10 +310,8 @@ object DistinctMv {
             val delta = stateOf(prep(changes), group, kc, sums,
               signed = true).persist()
             cached = Some(delta)
-            val ls0 = delta.select(col(group.head)).distinct()
-              .limit(capN + 1).collect().map(_.get(0)).toSeq
-            if (ls0.isEmpty) None
-            else Some((delta, if (ls0.size <= capN) Some(ls0) else None))
+            val ls = MvLeads.collect(mvRoot, delta, group.head)
+            if (ls.contains(Nil)) None else Some((delta, ls))
           } catch {
             case _: IllegalStateException => // expired changelog range
               cached.foreach(_.unpersist()); cached = None
@@ -376,7 +319,7 @@ object DistinctMv {
               val full = stateOf(prep(LakeTable.read(s, factRoot, Some(f1))),
                 group, kc, sums, signed = false)
               LakeTable.rewrite(s, stRoot, full, stateCfg(group), group,
-                note = s"dmvs-basis-$f1-full"): Unit
+                note = MvBasis.note(MvBasis.ExactState, Seq(f1), "full")): Unit
               None
           }
           // SIGNED fold as ONE MoR MERGE — O(Δ) writes, never a state
@@ -401,7 +344,7 @@ object DistinctMv {
               case _ => None
             }
             val stateRead = leadsOpt match {
-              case Some(leads) => prunedStateRead(s, stRoot, group.head, leads)
+              case Some(leads) => MvLeads.prunedRead(s, stRoot, group.head, leads)
               case None => LakeTable.read(s, stRoot)
             }
             val touchedKeys = delta.select(col(SKeyCol)).distinct()
@@ -435,7 +378,7 @@ object DistinctMv {
             val stCfg = stateCfg(group).copy(
               writeTasks = leadsOpt.map(ls => math.max(1, ls.size)))
             LakeTable.merge(s, stRoot, SKeyCol, live, stCfg,
-              group, note = s"dmvs-basis-$f1-signed",
+              group, note = MvBasis.note(MvBasis.ExactState, Seq(f1), "signed"),
               extraDeleteKeys = Some(touchedKeys),
               deleteKeysCoverUpdates = true): Unit
           }
@@ -447,7 +390,7 @@ object DistinctMv {
     // put — the next content refresh folds across it for free
     if (!anyFold && !anyFull && allAligned) return f0
     val mode =
-      if (anyFull) "full" else if (anyFold) "signed" else sbs.head._2
+      if (anyFull) "full" else if (anyFold) "signed" else sbs.head.mode
     var visibleDone = false
     // VISIBLE fold, same discipline: only the touched lead groups'
     // visible rows change, so re-derive THEM from the pruned
@@ -471,21 +414,8 @@ object DistinctMv {
         // CACHED folded slices — no state re-scan
         val vis = deriveAll(s, mvRoot, group, distincts, sums, derived,
           r => foldedByState(r))
-        val liveV = vis.select(vs.fieldNames.toIndexedSeq.map(col): _*)
-          .to(vs)
-        val leadsDf = s.createDataFrame(
-          java.util.Arrays.asList(leads.map(v =>
-            org.apache.spark.sql.Row(v)): _*),
-          StructType(Seq(vs(group.head))))
-        // liveV's lead values ⊆ the collected touched leads, so the
-        // covered-keys merge retires vanished leads via the mask and
-        // needs no pre-commit isEmpty probe; lead count bounds the
-        // staged file count → write-task fan-out hint
-        LakeTable.merge(s, mvRoot, group.head, liveV,
-          cfg.copy(writeTasks = Some(math.max(1, leads.size))), group,
-          note = s"dmv-basis-$f1-signed",
-          extraDeleteKeys = Some(leadsDf),
-          deleteKeysCoverUpdates = true): Unit
+        MvLeads.merge(s, mvRoot, vs, group.head, vis.to(vs), leads, cfg,
+          group, MvBasis.note(MvBasis.Distinct, Seq(f1), "signed"))
         visibleDone = true
       }
     }
@@ -493,26 +423,12 @@ object DistinctMv {
       LakeTable.rewrite(s, mvRoot,
         deriveAll(s, mvRoot, group, distincts, sums, derived,
           r => LakeTable.read(s, r)),
-        cfg, group, note = s"dmv-basis-$f1-$mode"): Unit
+        cfg, group, note = MvBasis.note(MvBasis.Distinct, Seq(f1), mode)): Unit
     f1
     } finally {
       foldedByState.values.foreach(_.unpersist())
       if (distincts.size > 1) changesByRange.values.foreach(_.unpersist())
       ()
     }
-  }
-
-  /** A DSv2 read of a state table pruned to the given lead-group
-    * values (manifest stat pruning on the lead column; NULL leads
-    * ride an explicit isNull disjunct).
-    */
-  private[lake] def prunedStateRead(s: SparkSession, stRoot: String,
-      lead: String, leads: Seq[Any]): DataFrame = {
-    val nn = leads.filterNot(_ == null)
-    val pred =
-      if (nn.isEmpty) col(lead).isNull
-      else if (nn.size < leads.size) col(lead).isin(nn: _*) || col(lead).isNull
-      else col(lead).isin(nn: _*)
-    s.read.format("graft-lake").load(stRoot).filter(pred)
   }
 }

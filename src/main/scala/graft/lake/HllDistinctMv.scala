@@ -1,150 +1,71 @@
 package graft.lake
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
-import graft.writer.BlockWriter
-
-/** HLL distinct-count materialized views — APPROXIMATE
-  * `COUNT(DISTINCT x)` for UNBOUNDED key domains, the third point of
-  * the distinct lattice: the exact kind ([[DistinctMv]]) stores one
-  * state row per live (group, key) — the exact-count floor; the
-  * bitmap kind ([[BitmapDistinctMv]]) compresses bounded INTEGRAL
-  * domains to word-sharded bitsets; this kind bounds state at
-  * O(groups × 2^p) REGISTERS regardless of key type or cardinality —
-  * a daily-uniques state over 10^9 string user ids is ~2^p rows per
-  * day, not 10^9 — at the price of an ESTIMATE (±~1.04/√2^p
-  * relative error, Flajolet et al. 2007's HyperLogLog).
+/** HLL distinct-count MVs — APPROXIMATE `COUNT(DISTINCT x)` for
+  * UNBOUNDED key domains, a [[SketchStateMv]] law: state is bounded at
+  * O(groups × 2^p) registers whatever the key type or cardinality, at
+  * the price of an estimate (±~1.04/√2^p relative error, Flajolet et
+  * al. 2007's HyperLogLog). A cell is one register: `_ridx` is the top
+  * p bits of the engine's md5-derived 60-bit hash (the convention
+  * [[LakeTable]]'s bloom/NDV sketches share), `_rval` the max rank —
+  * the leading-zero count + 1 of the remaining (60-p)-bit suffix.
+  * Registers fold by max (the sketch union). Integer/string ops only,
+  * so the register CONTENTS replay exactly in any engine with md5 (the
+  * DuckDB oracle checks occupancy and rank sums verbatim; only the
+  * float estimate is tolerance-gated).
   *
-  * State (`<mv>/_hstate`, nested like [[DistinctMv]]'s): one row per
-  * (group, `_ridx`) occupied register holding the max observed rank
-  * `_rval`; a sentinel `_ridx = -1` row carries the group's ROW
-  * COUNT in `_rval` (so the VISIBLE view — exact `n`, estimated
-  * `uniq` — derives from state alone, keeping the two-commit
-  * protocol crash-safe: both commits are idempotent re-derivations
-  * of durable state). The hash is the engine's md5-derived 60-bit
-  * convention ([[LakeTable]]'s bloom/NDV sketches share it): the
-  * top p bits pick the register, the rank is the remaining
-  * (60-p)-bit suffix's leading-zero count + 1 — integer/string ops
-  * only (`length(bin(w))`), so the register CONTENTS are exactly
-  * reproducible by any engine with md5 (the correctness gate's
-  * DuckDB oracle replays occupancy and rank sums verbatim; only the
-  * float estimator is tolerance-gated).
-  *
-  * Maintenance is the MinMax lattice applied to sketches:
-  *  - APPENDS are MAX-DISTRIBUTIVE (register max is the sketch
-  *    union): new register = max(stored, Δ), the sentinel adds. The
-  *    fold reads ONLY the delta files plus the touched cells' state
-  *    rows and lands as one MoR merge on the stored cell key
-  *    ([[DistinctMv.SKeyCol]] over (group, ridx)) — O(Δ) reads and
-  *    writes, untouched state files byte-identical. Mode `fold`.
-  *  - DELETES break max-distributivity (a register cannot lower
-  *    without rehashing the group's surviving rows): the change feed
-  *    names the touched GROUPS, which recompute from the fact head
-  *    through the IN-pruned scan and land as one merge whose
-  *    equality-delete mask retires every PRIOR cell of those groups.
-  *    Past the `graft.mvrefresh.maxgroups` cap — or when retention
-  *    expired the range — one full recompute (`full`).
-  *    Mode `targeted`.
-  *
-  * The visible basis note shares [[DistinctMv]]'s `dmv-basis-` name
-  * (modes `fold`/`targeted`/`full`), so the SQL front door's
-  * basis/mode/metadata plumbing serves all three distinct kinds
-  * unchanged. The REWRITE RULE refuses HLL MVs entirely
-  * ([[graft.plans.MvRewrite]] vetoes at candidate admission): an
-  * estimate must never substitute an exact `COUNT(DISTINCT)` — the
-  * view answers when queried BY NAME, the warehouse sketch-table
-  * contract.
-  *
-  * The ESTIMATOR (served as the view's distinct column): the
-  * standard HyperLogLog pair — raw E = α_m·m²/(Σ 2^(−M_j) + V)
-  * with V = m − occupied registers each contributing 2^0, switching
-  * to linear counting m·ln(m/V) when E ≤ 2.5m and V > 0 (the
-  * small-range regime where LC dominates). No large-range branch: a
-  * 60-bit hash space collides ~never below 2^30 distincts.
+  * The estimate (the view's distinct column): raw E = α_m·m²/(Σ 2^(−M_j)
+  * + V), with V = m − occupied registers, switching to linear counting
+  * m·ln(m/V) when E ≤ 2.5m and V > 0. No large-range branch: a 60-bit
+  * hash space collides ~never below 2^30 distincts. The rewrite rule
+  * never serves an HLL MV for an exact aggregate
+  * ([[graft.plans.MvRewrite]] vetoes it); the view answers by name.
   */
-object HllDistinctMv {
+object HllDistinctMv extends SketchStateMv.Layout(
+    "_hstate", "_ridx", "_rval", "hmvs") {
 
-  /** Register-index column of the hidden state (top p hash bits;
-    * -1 = the group's row-count sentinel row).
+  /** Register-index column (top p hash bits; -1 = the row-count
+    * sentinel).
     */
-  val RidxCol = "_ridx"
+  val RidxCol: String = idxCol
 
-  /** Register value: the max observed rank (ridx >= 0) or the row
-    * count (the ridx = -1 sentinel).
+  /** Register value: the max observed rank, or the sentinel's row
+    * count.
     */
-  val RvalCol = "_rval"
+  val RvalCol: String = valCol
 
   /** Hash width: 15 md5 hex chars = 60 bits, positive in a signed
     * long — the repo's oracle-determinism convention.
     */
   val HashBits = 60
+}
 
-  private val noteRe = "^dmv-basis-(\\d+)-(fold|targeted|full)$".r
-  private val stateNoteRe = "^hmvs-basis-(\\d+)-(fold|targeted|full)$".r
+final case class HllDistinctMv(p: Int) extends SketchStateMv.Law {
+  import HllDistinctMv.{HashBits, RidxCol, RvalCol}
+  require(p >= 8 && p <= 16,
+    "hll distinct kind needs distinct_precision in [8, 16]")
 
-  /** The hidden state table's root, nested inside the MV dir. */
-  def stateRoot(mvRoot: String): String =
-    java.nio.file.Paths.get(mvRoot, "_hstate").toString
+  def layout: SketchStateMv.Layout = HllDistinctMv
 
-  /** The fact snapshot the VISIBLE MV head reflects. */
-  def basis(mvRoot: String): Int = DistinctMv.basis(mvRoot)
-
-  /** Maintenance mode of the newest refresh the head reflects. */
-  def mode(mvRoot: String): String =
-    LakeTable.findContentNote(mvRoot) {
-      case noteRe(_, m) => Some(m)
-      case _ => None
-    }.getOrElse("?")
-
-  private def stateBasis(stRoot: String): Int =
-    LakeTable.findContentNote(stRoot) {
-      case stateNoteRe(f, _) => Some(f.toInt)
-      case _ => None
-    }.getOrElse(sys.error(s"$stRoot carries no hmvs-basis note"))
-
-  private def stateCfg(group: Seq[String]): BlockWriter.Config =
-    BlockWriter.Config(group.head, group.head, maxRecordsPerFile = 1 << 20)
-
-  /** The (group, ridx, rval) state of a plain base read: per-register
-    * max ranks for non-null keys plus the ridx = -1 row-count
-    * sentinel. Integer/string ops only — no float touches the state.
-    */
-  private def stateOf(base: DataFrame, group: Seq[String],
-      keyCol: String, p: Int): DataFrame = {
+  def cellOf(keyCol: String): (Column, Column) = {
     val b = HashBits - p
     val h = conv(substring(md5(col(keyCol).cast("string")), 1, 15), 16, 10)
       .cast("long")
     val w = h.bitwiseAND(lit((1L << b) - 1L))
     val rank = when(w === 0L, lit((b + 1).toLong))
       .otherwise(lit((b + 1).toLong) - length(bin(w)).cast("long"))
-    val regs = base.filter(col(keyCol).isNotNull)
-      .select(group.map(col) :+
-        shiftright(h, b).cast("long").as(RidxCol) :+ rank.as("_rk"): _*)
-      .groupBy((group :+ RidxCol).map(col): _*)
-      .agg(max(col("_rk")).cast("long").as(RvalCol))
-    val sentinel = base.groupBy(group.map(col): _*)
-      .agg(count(lit(1)).cast("long").as(RvalCol))
-      .withColumn(RidxCol, lit(-1L))
-      .select((group :+ RidxCol :+ RvalCol).map(col): _*)
-    val st = regs.select((group :+ RidxCol :+ RvalCol).map(col): _*)
-      .unionByName(sentinel)
-    st.withColumn(DistinctMv.SKeyCol,
-      DistinctMv.cellKey(st.schema, group :+ RidxCol))
+    (shiftright(h, b), rank)
   }
 
-  /** Visible rows from a state frame: n = the sentinel (exact), the
-    * distinct measure = the HLL estimate over the group's registers.
-    */
-  private def derive(st: DataFrame, group: Seq[String],
-      distinctName: String, p: Int): DataFrame = {
+  def foldCell(v: Column): Column = max(v)
+
+  def derive(cells: RelationalGroupedDataset, n: Column,
+      distinctName: String): DataFrame = {
     val m = (1L << p).toDouble
-    val alpha = 0.7213 / (1.0 + 1.079 / m) // valid for m >= 128 (DDL: p >= 8)
-    st.groupBy(group.map(col): _*)
-      .agg(
-        sum(when(col(RidxCol) === -1L, col(RvalCol)).otherwise(0L))
-          .cast("bigint").as(IncrementalJoinMv.CountCol),
+    val alpha = 0.7213 / (1.0 + 1.079 / m) // valid for m >= 128 (p >= 8)
+    cells.agg(n,
         count(when(col(RidxCol) >= 0L, lit(1))).cast("double").as("_occ"),
         sum(when(col(RidxCol) >= 0L,
           pow(lit(0.5), col(RvalCol).cast("double"))).otherwise(lit(0.0)))
@@ -157,210 +78,5 @@ object HllDistinctMv {
           lit(m) * log(lit(m) / col("_v"))).otherwise(col("_eraw")))
           .cast("bigint"))
       .drop("_occ", "_z", "_v", "_eraw")
-  }
-
-  /** Materialize state + view from the fact head; returns the MV
-    * snapshot.
-    */
-  def create(s: SparkSession, factRoot: String, mvRoot: String,
-      group: Seq[String], keyCol: String, distinctName: String,
-      p: Int, cfg: BlockWriter.Config,
-      prep: DataFrame => DataFrame = identity): Int = {
-    require(p >= 8 && p <= 16,
-      "hll distinct kind needs distinct_precision in [8, 16]")
-    val f = LakeTable.currentSnapshot(factRoot)
-    val base = prep(LakeTable.read(s, factRoot, Some(f)))
-    // the hidden state owns its own mask hygiene (see
-    // DistinctMv.StateCompactFiles)
-    AutoMaintain.setPolicy(stateRoot(mvRoot),
-      AutoMaintain.AutoCompactKey, DistinctMv.StateCompactFiles)
-    LakeTable.commit(s, stateRoot(mvRoot), stateOf(base, group, keyCol, p),
-      stateCfg(group), group, note = s"hmvs-basis-$f-full")
-    LakeTable.commit(s, mvRoot,
-      derive(LakeTable.read(s, stateRoot(mvRoot)), group, distinctName, p),
-      cfg, group, note = s"dmv-basis-$f-full")
-  }
-
-  /** Fold fact changes since the basis; returns the new fact basis.
-    * Pure-append ranges take the max-distributive `fold`; ranges with
-    * deletes take the group-`targeted` recompute; over-cap or
-    * expired ranges take one `full` recompute. `targetedOk = false`
-    * (expression-group views — the lead "column" is a derived bucket
-    * the changelog cannot name and the IN-pruned fact scan cannot
-    * key) sends every delete-bearing range straight to `full`:
-    * appends — the stream-cadence path — keep the O(Δ) fold either
-    * way.
-    */
-  def refresh(s: SparkSession, factRoot: String, mvRoot: String,
-      group: Seq[String], keyCol: String, distinctName: String,
-      p: Int, cfg: BlockWriter.Config,
-      prep: DataFrame => DataFrame = identity,
-      targetedOk: Boolean = true): Int = {
-    val f0 = basis(mvRoot)
-    val f1 = LakeTable.currentSnapshot(factRoot)
-    val stRoot = stateRoot(mvRoot)
-    val sb = stateBasis(stRoot)
-    if (f0 == f1 && sb == f0) return f0
-    var mode = "fold"
-    var leads: Option[Seq[Any]] = None
-    if (sb < f1) {
-      val appendOnly =
-        scala.util.Try(IncrementalMv.appendOnly(factRoot, sb, f1))
-          .getOrElse(false)
-      if (appendOnly) {
-        // max-distributive fold: delta files only, one merge on the
-        // touched cells — the fact head is never read
-        val delta0 = prep(LakeTable.incrementalRead(s, factRoot, sb, f1))
-          .persist()
-        try {
-          // ONE materializing action decides emptiness AND the touched
-          // leads (zero collected leads ⇔ empty delta) — replaces the
-          // two isEmpty probes, each a scheduled job
-          val deltaState = stateOf(delta0, group, keyCol, p)
-          val ls = collectLeads(s, deltaState, group, mvRoot)
-          val empty = ls.contains(Nil)
-          if (empty && sb == f0) return f0
-          if (!empty) {
-            leads = ls
-            foldMerge(s, stRoot, deltaState, group, leads,
-              note = s"hmvs-basis-$f1-fold")
-          }
-        } finally { delta0.unpersist(); () }
-      } else {
-        // deletes in the range: group-targeted recompute (a register
-        // cannot lower without rehashing the group's surviving rows)
-        val touchedRows =
-          if (!targetedOk) None
-          else scala.util.Try(
-            LakeTable.changelogRead(s, factRoot, sb, f1)
-              .select(col(group.head)).distinct()).toOption
-        val cap = AutoMaintain.policies(mvRoot)
-          .getOrElse(AutoMaintain.MvMaxGroupsKey, MinMaxMv.DefaultMaxGroups)
-        val touched: Option[Seq[Any]] = touchedRows.flatMap { tr =>
-          val capN = math.min(cap, Int.MaxValue - 1L).toInt
-          val ls = tr.limit(capN + 1).collect().map(_.get(0)).toSeq
-          if (ls.size <= capN) Some(ls) else None
-        }
-        touched match {
-          case Some(ts) if ts.nonEmpty && !ts.contains(null) =>
-            mode = "targeted"
-            leads = Some(ts)
-            val stored = LakeTable.storedSchemaOf(stRoot).get
-            val cur = prep(
-              s.read.format("graft-lake").option("snapshot", f1.toString)
-                .load(factRoot).filter(col(group.head).isin(ts: _*)))
-            val next = stateOf(cur, group, keyCol, p)
-            // retire EVERY prior cell of the touched groups (vanished
-            // register cells included) via the same commit's mask
-            val oldKeys = DistinctMv.prunedStateRead(s, stRoot, group.head, ts)
-              .select(col(DistinctMv.SKeyCol))
-            val allKeys = oldKeys
-              .unionByName(next.select(col(DistinctMv.SKeyCol))).distinct()
-            // stored column order only (merge's name+type gate needs
-            // no nullability re-stamp); allKeys covers live's keys,
-            // so the covered-keys merge needs no isEmpty probe
-            // (all-retired commits as a pure mask)
-            val live = next.select(
-              stored.fieldNames.toIndexedSeq.map(col): _*)
-            LakeTable.merge(s, stRoot, DistinctMv.SKeyCol, live,
-              stateCfg(group).copy(
-                writeTasks = Some(math.max(1, ts.size))), group,
-              note = s"hmvs-basis-$f1-targeted",
-              extraDeleteKeys = Some(allKeys),
-              deleteKeysCoverUpdates = true): Unit
-          case Some(ts) if ts.isEmpty =>
-            // content-preserving commits only: nothing to fold
-            if (sb == f0) return f0
-          case _ =>
-            // over-cap, NULL lead, or expired range: one full recompute
-            mode = "full"
-            val base = prep(LakeTable.read(s, factRoot, Some(f1)))
-            LakeTable.rewrite(s, stRoot, stateOf(base, group, keyCol, p),
-              stateCfg(group), group, note = s"hmvs-basis-$f1-full"): Unit
-        }
-      }
-    }
-    // visible rows: lead-targeted merge when the fold named the
-    // touched leads and the lead key can equality-mask; else the
-    // group-domain-sized rewrite
-    val visStored = LakeTable.storedSchemaOf(mvRoot)
-    val maskable = leads.exists(ls => ls.nonEmpty && !ls.contains(null)) &&
-      sb == f0 && visStored.exists(_.fields.find(_.name == group.head)
-        .exists(_.dataType != TimestampType))
-    if (maskable) {
-      val vs = visStored.get
-      val ls = leads.get
-      val vis = derive(
-        DistinctMv.prunedStateRead(s, stRoot, group.head, ls), group,
-        distinctName, p)
-      // liveV's lead values ⊆ the touched leads (derived from the
-      // lead-pruned state read): covered-keys merge, no isEmpty probe
-      val liveV = vis.select(vs.fieldNames.toIndexedSeq.map(col): _*)
-      val leadsDf = s.createDataFrame(
-        java.util.Arrays.asList(ls.map(v => Row(v)): _*),
-        StructType(Seq(vs(group.head))))
-      LakeTable.merge(s, mvRoot, group.head, liveV,
-        cfg.copy(writeTasks = Some(math.max(1, ls.size))), group,
-        note = s"dmv-basis-$f1-$mode", extraDeleteKeys = Some(leadsDf),
-        deleteKeysCoverUpdates = true): Unit
-    } else
-      LakeTable.rewrite(s, mvRoot,
-        derive(LakeTable.read(s, stRoot), group, distinctName, p),
-        cfg, group, note = s"dmv-basis-$f1-$mode"): Unit
-    f1
-  }
-
-  /** Collect the delta's lead-group values when metadata-scale —
-    * one job (cap+1 limit), no count pass.
-    */
-  private def collectLeads(s: SparkSession, deltaState: DataFrame,
-      group: Seq[String], mvRoot: String): Option[Seq[Any]] = {
-    val cap = math.min(AutoMaintain.policies(mvRoot)
-      .getOrElse(AutoMaintain.MvMaxGroupsKey, MinMaxMv.DefaultMaxGroups),
-      Int.MaxValue - 1L).toInt
-    val ls = deltaState.select(col(group.head)).distinct()
-      .limit(cap + 1).collect().map(_.get(0)).toSeq
-    if (ls.size <= cap) Some(ls) else None
-  }
-
-  /** Append fold: stored touched cells ∪ delta cells → per-register
-    * MAX / summed sentinels, one merge on the cell key.
-    */
-  private def foldMerge(s: SparkSession, stRoot: String,
-      deltaState: DataFrame, group: Seq[String], leads: Option[Seq[Any]],
-      note: String): Unit = {
-    val stored = LakeTable.storedSchemaOf(stRoot).get
-    val names = stored.fieldNames.toIndexedSeq
-    val stateRead = leads match {
-      case Some(ls) => DistinctMv.prunedStateRead(s, stRoot, group.head, ls)
-      case None => LakeTable.read(s, stRoot)
-    }
-    val touchedKeys = deltaState.select(col(DistinctMv.SKeyCol)).distinct()
-    // the sentinel ADDs, register cells take MAX — split BEFORE
-    // aggregating so neither law touches the other's rows
-    val folded = stateRead.select(names.map(col): _*)
-      .join(touchedKeys, Seq(DistinctMv.SKeyCol), "left_semi")
-      .unionByName(deltaState.select(names.map(col): _*))
-      .withColumn("_sv", when(col(RidxCol) === -1L, col(RvalCol))
-        .otherwise(0L))
-      .withColumn("_rv", when(col(RidxCol) >= 0L, col(RvalCol))
-        .otherwise(0L))
-      .groupBy((group :+ RidxCol :+ DistinctMv.SKeyCol).map(col): _*)
-      .agg(sum(col("_sv")).cast("long").as("_s"),
-        max(col("_rv")).cast("long").as("_m"))
-      .withColumn(RvalCol,
-        when(col(RidxCol) === -1L, col("_s")).otherwise(col("_m")))
-      .drop("_s", "_m")
-    // folded keys ⊆ touchedKeys: covered-keys merge, staged once,
-    // no persist / rdd round-trip / isEmpty probe (name+type gate)
-    val live = folded.select(names.map(col): _*)
-    // staged files ≤ non-empty lead buckets ≤ collected-lead count:
-    // file-bound task fan-out (bucket width untouched)
-    LakeTable.merge(s, stRoot, DistinctMv.SKeyCol, live,
-      stateCfg(group).copy(
-        writeTasks = leads.map(ls => math.max(1, ls.size))),
-      group, note = note,
-      extraDeleteKeys = Some(touchedKeys),
-      deleteKeysCoverUpdates = true): Unit
   }
 }

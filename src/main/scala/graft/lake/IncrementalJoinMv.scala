@@ -66,8 +66,6 @@ object IncrementalJoinMv {
   /** The structural signed row count — reserved column name. */
   val CountCol = "n"
 
-  private val noteRe = "^jmv-basis-(\\d+(?:-\\d+)+)$".r
-
   /** The (factSnap, dimSnaps…) basis vector the MV head reflects.
     * The MoR fold accrues delete-mask debt whose remedy is compaction
     * — a content-PRESERVING commit whose note is not a basis — so the
@@ -77,15 +75,7 @@ object IncrementalJoinMv {
     * jumps to the RESTORED snapshot so the basis rolls back with the
     * data instead of resolving to an abandoned newer note).
     */
-  def basisAll(mvRoot: String): Seq[Int] = {
-    require(LakeTable.currentSnapshot(mvRoot) > 0, s"$mvRoot has no MV state")
-    LakeTable.findContentNote(mvRoot) {
-      case noteRe(v) => Some(v.split('-').toSeq.map(_.toInt))
-      case _ => None
-    }.getOrElse(sys.error(
-      s"$mvRoot carries no jmv-basis note in its live chain — " +
-        "not a join MV (or its basis commits were expired)"))
-  }
+  def basisAll(mvRoot: String): Seq[Int] = MvBasis.of(mvRoot, MvBasis.Join).snaps
 
   /** Single-dimension convenience: the (factSnap, dimSnap) pair. */
   def basis(mvRoot: String): (Int, Int) = {
@@ -94,9 +84,6 @@ object IncrementalJoinMv {
       s"$mvRoot is a ${b.size - 1}-dimension join MV — use basisAll")
     (b(0), b(1))
   }
-
-  private def noteOf(f: Int, dimSnaps: Seq[Int]): String =
-    s"jmv-basis-${(f +: dimSnaps).mkString("-")}"
 
   private def state(df: DataFrame, group: Seq[String], aggs: Seq[Agg]): DataFrame = {
     require(!aggs.exists(_.name == CountCol),
@@ -143,7 +130,8 @@ object IncrementalJoinMv {
         s"join-MV: NULL in leading group column '${group.head}' cannot be " +
           "incrementally maintained (equality-keyed delete mask) — " +
           "coalesce it upstream")
-      LakeTable.commit(s, mvRoot, st, cfg, group, note = noteOf(f, ds))
+      LakeTable.commit(s, mvRoot, st, cfg, group,
+        note = MvBasis.note(MvBasis.Join, f +: ds))
     } finally { st.unpersist(); () }
   }
 
@@ -251,7 +239,7 @@ object IncrementalJoinMv {
           "upstream (e.g. to a sentinel) before maintaining it as an MV key")
       val nChangedKeys =
         math.max(1L, math.min(keyProbe.getLong(1), Int.MaxValue.toLong)).toInt
-      val note = noteOf(f1, d1s)
+      val note = MvBasis.note(MvBasis.Join, f1 +: d1s)
       val mvCur = LakeTable.read(s, mvRoot)
       // fold current values of exactly the touched lead-key rows with
       // the delta; everything else stays on disk untouched

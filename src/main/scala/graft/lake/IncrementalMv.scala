@@ -38,11 +38,6 @@ object IncrementalMv {
 
   final case class Agg(name: String, delta: Column, fold: Column => Column)
 
-  private def basisOf(note: String): Option[Int] = {
-    val m = "^mv-basis-(\\d+)-(incr|full)$".r
-    note match { case m(n, _) => Some(n.toInt); case _ => None }
-  }
-
   /** The basis snapshot the MV head reflects (fails on a non-MV
     * table). Resolved with [[LakeTable.findContentNote]]: content-
     * preserving maintenance (compaction, rewrite-manifests) may stamp
@@ -50,20 +45,12 @@ object IncrementalMv {
     * table jumps the walk to the RESTORED snapshot so the basis rolls
     * back with the data.
     */
-  def basis(mvRoot: String): Int = {
-    require(LakeTable.currentSnapshot(mvRoot) > 0, s"$mvRoot has no MV state")
-    LakeTable.findContentNote(mvRoot)(basisOf).getOrElse(
-      sys.error(s"$mvRoot carries no mv-basis note in its live chain"))
-  }
+  def basis(mvRoot: String): Int = MvBasis.of(mvRoot, MvBasis.Single).snaps.head
 
   /** The maintenance MODE of the newest refresh the head reflects
     * (`incr` / `full`) — surfaced in the `t.mv` metadata row.
     */
-  def mode(mvRoot: String): String =
-    LakeTable.findContentNote(mvRoot) { note =>
-      val m = "^mv-basis-(\\d+)-(incr|full)$".r
-      note match { case m(_, md) => Some(md); case _ => None }
-    }.getOrElse("?")
+  def mode(mvRoot: String): String = MvBasis.mode(mvRoot, MvBasis.Single)
 
   private def state(spark: SparkSession, base: DataFrame,
       group: Seq[String], aggs: Seq[Agg]): DataFrame =
@@ -95,7 +82,7 @@ object IncrementalMv {
       withDerived(state(spark,
         prep(LakeTable.read(spark, baseRoot, Some(baseHead))), group, aggs),
         derived),
-      cfg, group, note = s"mv-basis-$baseHead-full")
+      cfg, group, note = MvBasis.note(MvBasis.Single, Seq(baseHead), "full"))
   }
 
   /** `true` iff every commit in (from, to] only ADDED data files —
@@ -161,7 +148,8 @@ object IncrementalMv {
     // the basis stamp rides the state commit itself — atomic: a
     // reader never sees new state with an old basis or vice versa
     LakeTable.rewrite(spark, mvRoot, withDerived(next, derived), cfg, group,
-      note = s"mv-basis-$baseHead-${if (incr) "incr" else "full"}")
+      note = MvBasis.note(MvBasis.Single, Seq(baseHead),
+        if (incr) "incr" else "full"))
     baseHead
   }
 }

@@ -367,6 +367,14 @@ object MaterializedView {
   private def cfgOf(d: MvDef): BlockWriter.Config =
     BlockWriter.Config(d.group.head, d.group.head, maxRecordsPerFile = 1 << 20)
 
+  /** The sketch law of a bitmap or HLL distinct MV; None otherwise. */
+  private def sketchLaw(d: MvDef): Option[SketchStateMv.Law] =
+    d.distinctKind match {
+      case "bitmap" => Some(BitmapDistinctMv(d.distinctDomain))
+      case "hll" => Some(HllDistinctMv(d.distinctPrecision))
+      case _ => None
+    }
+
   /** Materialize + persist the definition; returns the MV snapshot.
     * The definition lands (atomically) BEFORE the materialization
     * commit: a crash in between leaves a def-only directory that
@@ -379,29 +387,26 @@ object MaterializedView {
       ansi = s.sessionState.conf.ansiEnabled.toString)
     writeDef(mvDir, d)
     try {
-      val snap =
-        if (d.kind == "minmax")
+      val snap = (d.kind, sketchLaw(d)) match {
+        case ("minmax", _) =>
           MinMaxMv.create(s, d.fact, mvDir, d.group.head, d.value, cfgOf(d),
             d.minName, d.maxName, extras = minmaxExtras(d),
             subGroups = d.group.tail, prep = prepFor(s, d),
             keyCol = minmaxKey(s, d))
-        else if (d.kind == "single")
+        case ("single", _) =>
           IncrementalMv.create(s, d.fact, mvDir, d.group, singleAggs(d),
             cfgOf(d), derived = singleDerived(d), prep = prepFor(s, d))
-        else if (d.kind == "distinct" && d.distinctKind == "bitmap")
-          BitmapDistinctMv.create(s, d.fact, mvDir, d.group, d.distinctCol,
-            d.distinctName, d.distinctDomain, cfgOf(d), prep = prepFor(s, d))
-        else if (d.kind == "distinct" && d.distinctKind == "hll")
-          HllDistinctMv.create(s, d.fact, mvDir, d.group, d.distinctCol,
-            d.distinctName, d.distinctPrecision, cfgOf(d),
-            prep = prepFor(s, d))
-        else if (d.kind == "distinct")
+        case ("distinct", Some(law)) =>
+          SketchStateMv.create(s, law, d.fact, mvDir, d.group, d.distinctCol,
+            d.distinctName, cfgOf(d), prep = prepFor(s, d))
+        case ("distinct", None) =>
           DistinctMv.create(s, d.fact, mvDir, d.group, d.distinctCol,
             d.distinctName, cfgOf(d), sums = d.sums,
             derived = singleDerived(d), prep = prepFor(s, d),
             extra = d.extraDistincts)
-        else IncrementalJoinMv.create(s, d.fact, d.joinDims, mvDir,
+        case _ => IncrementalJoinMv.create(s, d.fact, d.joinDims, mvDir,
           d.group, aggsOf(d), cfgOf(d), prep = prepFor(s, d))
+      }
       registerRef(d.fact, mvDir)
       snap
     }
@@ -506,32 +511,28 @@ object MaterializedView {
     // never wrong data). Idempotent re-register on every refresh
     // bounds the loss to one refresh cycle.
     registerRef(d.fact, mvDir)
-    if (d.kind == "minmax")
-      Seq(MinMaxMv.refresh(s, d.fact, mvDir, d.group.head, d.value, cfgOf(d),
-        d.minName, d.maxName, extras = minmaxExtras(d),
-        subGroups = d.group.tail, extraFolds = minmaxExtraFolds(s, d),
-        prep = prepFor(s, d), keyCol = minmaxKey(s, d)))
-    else if (d.kind == "single")
-      Seq(IncrementalMv.refresh(s, d.fact, mvDir, d.group, singleAggs(d),
-        cfgOf(d), derived = singleDerived(d), prep = prepFor(s, d)))
-    else if (d.kind == "distinct")
-      (if (d.distinctKind == "bitmap")
-        Seq(BitmapDistinctMv.refresh(s, d.fact, mvDir, d.group,
-          d.distinctCol, d.distinctName, d.distinctDomain, cfgOf(d),
-          prep = prepFor(s, d)))
-      else if (d.distinctKind == "hll")
-        Seq(HllDistinctMv.refresh(s, d.fact, mvDir, d.group,
-          d.distinctCol, d.distinctName, d.distinctPrecision, cfgOf(d),
-          prep = prepFor(s, d),
+    (d.kind, sketchLaw(d)) match {
+      case ("minmax", _) =>
+        Seq(MinMaxMv.refresh(s, d.fact, mvDir, d.group.head, d.value, cfgOf(d),
+          d.minName, d.maxName, extras = minmaxExtras(d),
+          subGroups = d.group.tail, extraFolds = minmaxExtraFolds(s, d),
+          prep = prepFor(s, d), keyCol = minmaxKey(s, d)))
+      case ("single", _) =>
+        Seq(IncrementalMv.refresh(s, d.fact, mvDir, d.group, singleAggs(d),
+          cfgOf(d), derived = singleDerived(d), prep = prepFor(s, d)))
+      case ("distinct", Some(law)) =>
+        Seq(SketchStateMv.refresh(s, law, d.fact, mvDir, d.group,
+          d.distinctCol, d.distinctName, cfgOf(d), prep = prepFor(s, d),
           // a derived bucket cannot key the IN-pruned targeted scan
           targetedOk = d.groupExprs.isEmpty))
-      else
+      case ("distinct", None) =>
         Seq(DistinctMv.refresh(s, d.fact, mvDir, d.group, d.distinctCol,
           d.distinctName, cfgOf(d), sums = d.sums,
           derived = singleDerived(d), prep = prepFor(s, d),
-          extra = d.extraDistincts)))
-    else IncrementalJoinMv.refresh(s, d.fact, d.joinDims, mvDir,
-      d.group, aggsOf(d), cfgOf(d), prep = prepFor(s, d))
+          extra = d.extraDistincts))
+      case _ => IncrementalJoinMv.refresh(s, d.fact, d.joinDims, mvDir,
+        d.group, aggsOf(d), cfgOf(d), prep = prepFor(s, d))
+    }
   }
 
   /** Scalar-pair convenience for single-table and one-dimension MVs;
@@ -569,16 +570,31 @@ object MaterializedView {
     }).mkString("; ")
   }
 
+  /** The basis vector the MV head reflects and the maintenance MODE of
+    * the refresh that landed it, from one walk over the head's basis
+    * notes — the one kind dispatch for both. Modes: `incr`/`full`
+    * (single), `fold`/`targeted`/`full` (minmax and the sketch distinct
+    * kinds), `signed`/`full` (exact distinct), `delta` (join: always
+    * the delta-join fold).
+    */
+  def basisOf(d: MvDef, mvDir: String): (Seq[Int], String) = {
+    val prefix = d.kind match {
+      case "minmax" => MvBasis.MinMax
+      case "single" => MvBasis.Single
+      case "distinct" => MvBasis.Distinct
+      case _ => MvBasis.Join
+    }
+    val note = MvBasis.of(mvDir, prefix)
+    (note.snaps,
+      if (prefix == MvBasis.Join) "delta"
+      else if (note.mode.isEmpty) "?" else note.mode)
+  }
+
   /** The basis vector the MV head reflects and the CURRENT heads of
     * its base tables, in the same order — equal iff the MV is fresh.
     */
   private def basisVsHeads(d: MvDef, mvDir: String): (Seq[Int], Seq[Int]) = {
-    val basis = d.kind match {
-      case "minmax" => Seq(MinMaxMv.basis(mvDir))
-      case "single" => Seq(IncrementalMv.basis(mvDir))
-      case "distinct" => Seq(DistinctMv.basis(mvDir))
-      case _ => IncrementalJoinMv.basisAll(mvDir)
-    }
+    val basis = basisOf(d, mvDir)._1
     val heads = d.kind match {
       case "join" => LakeTable.currentSnapshot(d.fact) +:
         d.joinDims.map(x => LakeTable.currentSnapshot(x.root))
@@ -637,19 +653,9 @@ object MaterializedView {
     */
   def statusDf(s: SparkSession, mvDir: String): DataFrame = {
     val d = readDef(mvDir)
-    val basisVec: Seq[Int] = basisVsHeads(d, mvDir)._1
+    val (basisVec, mode) = basisOf(d, mvDir)
     val bf = basisVec.head
     val bd = if (basisVec.size > 1) basisVec(1) else 0
-    // the maintenance MODE the head reflects: `incr`/`full` for the
-    // single kind, `fold`/`targeted`/`full` for minmax (append-only
-    // distributive fold / Δ-group recompute / over-cap), `delta`
-    // (always the delta-join fold) for the join kind
-    val mode = d.kind match {
-      case "minmax" => MinMaxMv.mode(mvDir)
-      case "single" => IncrementalMv.mode(mvDir)
-      case "distinct" => DistinctMv.mode(mvDir)
-      case _ => "delta"
-    }
     val measures = measuresOf(d)
     val (dimStr, keyStr) =
       if (d.kind == "join" && d.joinDims.size > 1)

@@ -1,8 +1,7 @@
 package graft.lake
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 import graft.writer.BlockWriter
 
@@ -50,8 +49,6 @@ import graft.writer.BlockWriter
   */
 object MinMaxMv {
 
-  private val noteRe = "^mmv-basis-(\\d+)(?:-(full|targeted|fold))?$".r
-
   /** Past this many touched groups a refresh recomputes the whole
     * view instead of driver-collecting an IN list — overridable per
     * table via the `graft.mvrefresh.maxgroups` policy.
@@ -65,15 +62,7 @@ object MinMaxMv {
     * [[LakeTable.findContentNote]]: a rollback of the MV table jumps
     * to the RESTORED snapshot so the basis rolls back with the data.
     */
-  def basis(mvRoot: String): Int = {
-    require(LakeTable.currentSnapshot(mvRoot) > 0, s"$mvRoot has no MV state")
-    LakeTable.findContentNote(mvRoot) {
-      case noteRe(f, _) => Some(f.toInt)
-      case _ => None
-    }.getOrElse(sys.error(
-      s"$mvRoot carries no mmv-basis note in its live chain — " +
-        "not a min/max MV (or its basis commits were expired)"))
-  }
+  def basis(mvRoot: String): Int = MvBasis.of(mvRoot, MvBasis.MinMax).snaps.head
 
   /** The maintenance mode of the newest refresh the head reflects
     * (`targeted` — the Δ-group fold — or `full`, the over-cap or
@@ -81,11 +70,7 @@ object MinMaxMv {
     * were stamped by creates AND targeted refreshes alike, so they
     * honestly report `?` rather than guessing.
     */
-  def mode(mvRoot: String): String =
-    LakeTable.findContentNote(mvRoot) {
-      case noteRe(_, m) => Some(Option(m).getOrElse("?"))
-      case _ => None
-    }.getOrElse("?")
+  def mode(mvRoot: String): String = MvBasis.mode(mvRoot, MvBasis.MinMax)
 
   private def state(df: DataFrame, group: String, subGroups: Seq[String],
       valueCol: String, minName: String, maxName: String,
@@ -126,7 +111,7 @@ object MinMaxMv {
         s"min/max MV: NULL in key column '$key' cannot be " +
           "incrementally maintained — coalesce it upstream")
       LakeTable.commit(s, mvRoot, st, cfg, Seq(group),
-        note = s"mmv-basis-$f-full")
+        note = MvBasis.note(MvBasis.MinMax, Seq(f), "full"))
     } finally { st.unpersist(); () }
   }
 
@@ -203,31 +188,23 @@ object MinMaxMv {
         val live = folded.select(
           stored.fieldNames.toIndexedSeq.map(col): _*)
         LakeTable.merge(s, mvRoot, key, live, cfg, Seq(group),
-          note = s"mmv-basis-$f1-fold",
+          note = MvBasis.note(MvBasis.MinMax, Seq(f1), "fold"),
           extraDeleteKeys = Some(touchedLead),
           deleteKeysCoverUpdates = true): Unit
         return f1
       } finally { deltaState.unpersist(); () }
     }
     // Δ group keys: every group any change row names — insert or
-    // delete pre-image. Distinct is computed DISTRIBUTED; the driver
-    // first learns only the cardinality, and collects the values
-    // only when they are metadata-scale (under the cap).
-    val touchedRows = LakeTable.changelogRead(s, factRoot, f0, f1)
-      .select(col(key)).distinct()
-    val cap = AutoMaintain.policies(mvRoot)
-      .getOrElse(AutoMaintain.MvMaxGroupsKey, DefaultMaxGroups)
-    val capN = math.min(cap, Int.MaxValue - 1L).toInt
-    // ONE capped collect decides emptiness, over-cap AND the values
-    // (the count + collect pair it replaces was two scheduled jobs —
-    // the collect stays bounded at cap + 1 rows either way)
-    val touched0: Seq[Any] =
-      touchedRows.limit(capN + 1).collect().map(_.get(0)).toSeq
+    // delete pre-image, distinct computed DISTRIBUTED. ONE capped
+    // collect decides emptiness, over-cap AND the values, which reach
+    // the driver only when metadata-scale (under the cap)
+    val touched0 = MvLeads.collect(mvRoot,
+      LakeTable.changelogRead(s, factRoot, f0, f1), key)
     // content-preserving commits only (compaction emits zero change
     // rows): nothing to fold — leave the basis where it is, the next
     // real refresh folds across the maintenance commits for free
-    if (touched0.isEmpty) return f0
-    if (touched0.size > capN) {
+    if (touched0.contains(Nil)) return f0
+    if (touched0.isEmpty) {
         // OVER-CAP FALLBACK: a delta touching this many groups is a
         // reshape, not a trickle — one full recompute commit beats an
         // unbounded driver collect + a giant IN expression (and reads
@@ -241,7 +218,7 @@ object MinMaxMv {
             s"min/max MV: NULL in key column '$key' cannot be " +
               "incrementally maintained — coalesce it upstream")
           LakeTable.rewrite(s, mvRoot, full, cfg, Seq(group),
-            note = s"mmv-basis-$f1-full"): Unit
+            note = MvBasis.note(MvBasis.MinMax, Seq(f1), "full")): Unit
       } finally { full.unpersist(); () }
       return f1
     }
@@ -249,7 +226,7 @@ object MinMaxMv {
     // end-to-end (timestamp, decimal, binary group keys stay exact
     // — no String round-trip), feeding both the IN filter and the
     // equality-delete frame
-    val touched = touched0
+    val touched = touched0.get
     // the IN filter and the eq-delete mask are equality-keyed: a NULL
     // group can neither be recomputed nor retired — fail pointedly
     require(!touched.contains(null),
@@ -265,28 +242,10 @@ object MinMaxMv {
       prep(s.read.format("graft-lake").option("snapshot", f1).load(factRoot)
         .filter(col(key).isin(touched: _*))),
       group, subGroups, valueCol, mn, mx, extras)
-    // align to the MANIFEST schema exactly (merge's unmapped-table
-    // gate compares full schema JSON; a mask-applied read's column
-    // order is join-shaped)
-    // the delete frame is built from the TYPED values under the
-    // stored key field — exact for every group type
-    val touchedDf = s.createDataFrame(
-      java.util.Arrays.asList(touched.map(v => Row(v)): _*),
-      StructType(Seq(stored(key))))
-    // stored column ORDER, types checked by merge's name+type gate
-    // (no nullability re-stamp — the manifest keeps the parent's
-    // schema regardless); touchedDf covers live's keys (recomputed
-    // groups ⊆ touched), so the covered-keys merge needs no isEmpty
-    // probe — every touched group vanishing commits as a pure
-    // retirement mask
-    val live = cur.select(
-      stored.fieldNames.toIndexedSeq.map(col): _*)
-    // staged files ≤ non-empty lead buckets ≤ touched-group count:
-    // file-bound task fan-out (bucket width untouched)
-    LakeTable.merge(s, mvRoot, key, live,
-      cfg.copy(writeTasks = Some(math.max(1, touched.size))), Seq(group),
-      note = s"mmv-basis-$f1-targeted", extraDeleteKeys = Some(touchedDf),
-      deleteKeysCoverUpdates = true): Unit
+    // touched covers the recomputed groups, so a vanished group
+    // retires through the merge's mask
+    MvLeads.merge(s, mvRoot, stored, key, cur, touched, cfg, Seq(group),
+      MvBasis.note(MvBasis.MinMax, Seq(f1), "targeted"))
     f1
   }
 }

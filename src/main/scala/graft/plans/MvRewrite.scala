@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
-import graft.lake.{DistinctMv, IncrementalJoinMv, IncrementalMv, LakeTable, MaterializedView, MinMaxMv}
+import graft.lake.{DistinctMv, IncrementalJoinMv, IncrementalMv, LakeTable, MaterializedView}
 import graft.sources.GraftLakeTable
 
 /** AUTOMATIC QUERY REWRITE over materialized views — the read-side
@@ -113,7 +113,7 @@ case class MvRewrite(spark: SparkSession) extends Rule[LogicalPlan]
       // require the used state's basis to equal the candidate's
       // validated fact snapshot and scan it AT the pinned snapshot —
       // re-reading live heads at serve time is a TOCTOU window (see
-      // DistinctMv.stateBasisPinned)
+      // MvBasis.pinned)
       stateInfo: Seq[(Int, Int)] = Nil,
       // the VALIDATED visible basis (single-table kinds: basis.head
       // at candidate creation; == the scanned fact snapshot for a
@@ -343,12 +343,7 @@ case class MvRewrite(spark: SparkSession) extends Rule[LogicalPlan]
         // answers only when queried by name (the warehouse
         // sketch-table contract)
         if (d0.kind == "distinct" && d0.distinctKind == "hll") return None
-        val b = d0.kind match {
-          case "single" => Seq(IncrementalMv.basis(mvDir))
-          case "minmax" => Seq(MinMaxMv.basis(mvDir))
-          case "distinct" => Seq(DistinctMv.basis(mvDir))
-          case _ => IncrementalJoinMv.basisAll(mvDir)
-        }
+        val b = MaterializedView.basisOf(d0, mvDir)._1
         val si =
           if (d0.kind == "distinct" && d0.distinctKind == "bitmap")
             graft.lake.BitmapDistinctMv.stateBasisPinned(mvDir).toSeq

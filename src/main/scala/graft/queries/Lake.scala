@@ -4130,7 +4130,7 @@ object Lake {
   // distinct view — q_sql_mv_distinct_bm's deployment shape, closing
   // the kind×surface square for the bitmap kind (batch law + SQL DDL
   // + read tiers + streaming): the fact table's CDF stream triggers a
-  // BitmapDistinctMv.refresh per micro-batch under the same
+  // SketchStateMv.refresh per micro-batch under the same
   // exactly-once-by-construction law (the basis rides the MV head
   // note; replayed/coalesced batches no-op; word state and visible
   // view re-derive idempotently from durable state). Per-trigger cost
@@ -4142,7 +4142,7 @@ object Lake {
   // recompute — the captured `targeted` literal gates that the stream
   // path lands the same lattice as batch.
   def streamMvBitmap(s: SparkSession, dir: String): DataFrame = {
-    import graft.lake.BitmapDistinctMv
+    import graft.lake.{BitmapDistinctMv, SketchStateMv}
     import org.apache.spark.sql.streaming.Trigger
     val fact = tmp("graft_sbvf_")
     val mv = tmp("graft_sbv_")
@@ -4154,15 +4154,15 @@ object Lake {
     val mvCfg = BlockWriter.Config("event_type", "event_type", maxRecordsPerFile = 1 << 20)
     LakeTable.commit(s, fact, ev.filter(col("event_id") % 3 === 0), cfg,
       Seq("event_id", "event_type", "uid"))
-    BitmapDistinctMv.create(s, fact, mv, Seq("event_type"), "uid", "uniq",
-      1024L, mvCfg)
+    SketchStateMv.create(s, BitmapDistinctMv(1024L), fact, mv,
+      Seq("event_type"), "uid", "uniq", mvCfg)
     def drain(): Unit = {
       val q = s.readStream.format("graft-lake")
         .option("changeFeed", "true").load(fact)
         .writeStream
         .foreachBatch { (_: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          BitmapDistinctMv.refresh(s, fact, mv, Seq("event_type"), "uid",
-            "uniq", 1024L, mvCfg): Unit
+          SketchStateMv.refresh(s, BitmapDistinctMv(1024L), fact, mv,
+            Seq("event_type"), "uid", "uniq", mvCfg): Unit
         }
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
@@ -4198,7 +4198,7 @@ object Lake {
   // distinct view — q_sql_mv_distinct_hll's deployment shape, closing
   // the kind×surface square for the HLL kind (batch law + SQL DDL +
   // rewrite veto + streaming): the fact CDF stream triggers an
-  // HllDistinctMv.refresh per micro-batch; an append trigger folds
+  // SketchStateMv.refresh per micro-batch; an append trigger folds
   // MAX-distributively (register max = sketch union) from the
   // trigger's delta files alone — at stream cadence over an UNBOUNDED
   // key domain this is the whole point: per-trigger writes bounded by
@@ -4209,7 +4209,7 @@ object Lake {
   // register state replays EXACTLY in the oracle (same md5/rank
   // math), and the estimate is tolerance-gated (est_ok).
   def streamMvHll(s: SparkSession, dir: String): DataFrame = {
-    import graft.lake.HllDistinctMv
+    import graft.lake.{HllDistinctMv, SketchStateMv}
     import org.apache.spark.sql.streaming.Trigger
     val fact = tmp("graft_shvf_")
     val mv = tmp("graft_shv_")
@@ -4221,15 +4221,15 @@ object Lake {
     val mvCfg = BlockWriter.Config("event_type", "event_type", maxRecordsPerFile = 1 << 20)
     LakeTable.commit(s, fact, ev.filter(col("event_id") % 3 === 0), cfg,
       Seq("event_id", "event_type", "uid"))
-    HllDistinctMv.create(s, fact, mv, Seq("event_type"), "uid", "uniq",
-      12, mvCfg)
+    SketchStateMv.create(s, HllDistinctMv(12), fact, mv,
+      Seq("event_type"), "uid", "uniq", mvCfg)
     def drain(): Unit = {
       val q = s.readStream.format("graft-lake")
         .option("changeFeed", "true").load(fact)
         .writeStream
         .foreachBatch { (_: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          HllDistinctMv.refresh(s, fact, mv, Seq("event_type"), "uid",
-            "uniq", 12, mvCfg): Unit
+          SketchStateMv.refresh(s, HllDistinctMv(12), fact, mv,
+            Seq("event_type"), "uid", "uniq", mvCfg): Unit
         }
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())

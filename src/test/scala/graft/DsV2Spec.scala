@@ -2335,7 +2335,7 @@ class DsV2Spec extends AnyFunSuite {
   }
 
   test("bitmap distinct MV: state is words not keys (O(domain/8) per group); appends fold from delta files only; deletes recompute targeted") {
-    import graft.lake.{BitmapDistinctMv, DistinctMv, LakeTable}
+    import graft.lake.{BitmapDistinctMv, DistinctMv, LakeTable, SketchStateMv}
     val s = spark
     import s.implicits._
     val fact = graft.util.Scratch.dir("graft_bdm_fact_")
@@ -2348,7 +2348,8 @@ class DsV2Spec extends AnyFunSuite {
       ids.map(i => (i, s"k${i % 2}", (i / 2) % 1024)).toDF("id", "g", "uid")
     LakeTable.commit(s, fact, rows(0L until 800L), fCfg, Seq("id", "g"))
     DistinctMv.create(s, fact, mvE, Seq("g"), "uid", "uniq", mCfg)
-    BitmapDistinctMv.create(s, fact, mvB, Seq("g"), "uid", "uniq", 1024, mCfg)
+    SketchStateMv.create(s, BitmapDistinctMv(1024), fact, mvB, Seq("g"),
+      "uid", "uniq", mCfg)
     def vis(mv: String): Map[String, (Long, Long)] =
       LakeTable.read(s, mv).collect().map(r =>
         r.getAs[String]("g") ->
@@ -2390,8 +2391,8 @@ class DsV2Spec extends AnyFunSuite {
     }
     val hidden = preAppend ++ stAway
     shift(hidden, hide = true)
-    try BitmapDistinctMv.refresh(s, fact, mvB, Seq("g"), "uid", "uniq",
-      1024, mCfg): Unit
+    try SketchStateMv.refresh(s, BitmapDistinctMv(1024), fact, mvB, Seq("g"),
+      "uid", "uniq", mCfg): Unit
     finally shift(hidden, hide = false)
     assert(BitmapDistinctMv.mode(mvB) === "fold",
       "a pure-append range must take the OR-distributive fold")
@@ -2402,8 +2403,8 @@ class DsV2Spec extends AnyFunSuite {
     // 0 and 1): no bit can retire without the group's other rows —
     // targeted recompute of the touched group only
     LakeTable.deleteWhere(s, fact, "id", Seq(0L, 2L).toDF("id"))
-    BitmapDistinctMv.refresh(s, fact, mvB, Seq("g"), "uid", "uniq",
-      1024, mCfg): Unit
+    SketchStateMv.refresh(s, BitmapDistinctMv(1024), fact, mvB, Seq("g"),
+      "uid", "uniq", mCfg): Unit
     assert(BitmapDistinctMv.mode(mvB) === "targeted")
     assert(vis(mvB) === Map("k0" -> ((418L, 408L)), "k1" -> ((400L, 400L))),
       "uids 0 and 1 must retire from k0 (sole carriers deleted)")
@@ -2411,8 +2412,8 @@ class DsV2Spec extends AnyFunSuite {
     LakeTable.commit(s, fact,
       Seq((900L, "k0", 5000L)).toDF("id", "g", "uid"), fCfg, Seq("id", "g"))
     val e = intercept[IllegalArgumentException] {
-      BitmapDistinctMv.refresh(s, fact, mvB, Seq("g"), "uid", "uniq",
-        1024, mCfg)
+      SketchStateMv.refresh(s, BitmapDistinctMv(1024), fact, mvB, Seq("g"),
+        "uid", "uniq", mCfg)
     }
     assert(e.getMessage.contains("outside"), e.getMessage)
   }
@@ -2491,7 +2492,7 @@ class DsV2Spec extends AnyFunSuite {
   }
 
   test("hll distinct MV: bounded-register state for unbounded domains; appends fold max-distributively from delta files only; deletes recompute targeted") {
-    import graft.lake.{DistinctMv, HllDistinctMv, LakeTable}
+    import graft.lake.{DistinctMv, HllDistinctMv, LakeTable, SketchStateMv}
     val s = spark
     import s.implicits._
     val fact = graft.util.Scratch.dir("graft_hdm_fact_")
@@ -2506,7 +2507,8 @@ class DsV2Spec extends AnyFunSuite {
       ids.map(i => (i, s"k${i % 2}", s"u${i / 2}")).toDF("id", "g", "uid")
     LakeTable.commit(s, fact, rows(0L until 3000L), fCfg, Seq("id", "g"))
     DistinctMv.create(s, fact, mvE, Seq("g"), "uid", "uniq", mCfg)
-    HllDistinctMv.create(s, fact, mvH, Seq("g"), "uid", "uniq", p, mCfg)
+    SketchStateMv.create(s, HllDistinctMv(p), fact, mvH, Seq("g"),
+      "uid", "uniq", mCfg)
     def vis(mv: String): Map[String, (Long, Long)] =
       LakeTable.read(s, mv).collect().map(r =>
         r.getAs[String]("g") ->
@@ -2551,8 +2553,8 @@ class DsV2Spec extends AnyFunSuite {
     }
     val hidden = preAppend ++ stAway
     shift(hidden, hide = true)
-    try HllDistinctMv.refresh(s, fact, mvH, Seq("g"), "uid", "uniq",
-      p, mCfg): Unit
+    try SketchStateMv.refresh(s, HllDistinctMv(p), fact, mvH, Seq("g"),
+      "uid", "uniq", mCfg): Unit
     finally shift(hidden, hide = false)
     assert(HllDistinctMv.mode(mvH) === "fold",
       "a pure-append range must take the max-distributive fold")
@@ -2565,8 +2567,8 @@ class DsV2Spec extends AnyFunSuite {
     // recompute of the touched group only, prior cells retired
     LakeTable.deleteWhere(s, fact,
       "id", (0L until 200L by 2L).toDF("id"))
-    HllDistinctMv.refresh(s, fact, mvH, Seq("g"), "uid", "uniq",
-      p, mCfg): Unit
+    SketchStateMv.refresh(s, HllDistinctMv(p), fact, mvH, Seq("g"),
+      "uid", "uniq", mCfg): Unit
     assert(HllDistinctMv.mode(mvH) === "targeted")
     estOk(vis(mvH)("k0"), 1430L, 1430L)
     estOk(vis(mvH)("k1"), 1500L, 1500L)
@@ -2574,7 +2576,8 @@ class DsV2Spec extends AnyFunSuite {
     // k0 slice re-derives from exactly the surviving rows, so a fresh
     // CREATE over the same fact produces the SAME k0 estimate
     val mvF = graft.util.Scratch.dir("graft_hdm_fresh_")
-    HllDistinctMv.create(s, fact, mvF, Seq("g"), "uid", "uniq", p, mCfg)
+    SketchStateMv.create(s, HllDistinctMv(p), fact, mvF, Seq("g"),
+      "uid", "uniq", mCfg)
     assert(vis(mvF)("k0") === vis(mvH)("k0"),
       "targeted recompute must equal a from-scratch sketch")
   }

@@ -342,47 +342,15 @@ class StreamingSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
-  /** Spark jobs started per streaming batch id by `body`'s drains.
-    * Jobs are told apart by a local property set on this thread: the
-    * stream thread, and any helper thread it starts, inherit a copy of
-    * it, while jobs of other threads carry none. Listener events are
-    * delivered asynchronously, so a marker job run after `body` is
-    * awaited before the counts are read (the bus delivers in order).
+  /** Spark jobs started per streaming batch id by `body`'s drains:
+    * the jobs [[SparkJobs.during]] saw, keyed by the batch id the
+    * stream thread (and any helper thread it starts) carries.
     */
   private def jobsPerBatch(body: => Unit): Map[Long, Int] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution
-    val key = "graft.spec.jobTag"
-    val tag = java.util.UUID.randomUUID().toString
-    val perBatch = new java.util.concurrent.ConcurrentHashMap[Long,
-      java.util.concurrent.atomic.AtomicInteger]()
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(key)) match {
-          case Some(`tag`) =>
-            Option(e.properties.getProperty(MicroBatchExecution.BATCH_ID_KEY))
-              .foreach(b => perBatch.computeIfAbsent(b.toLong,
-                _ => new java.util.concurrent.atomic.AtomicInteger()).incrementAndGet())
-          case Some(t) if t == s"$tag-end" => drained.countDown()
-          case _ =>
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, tag)
-      body
-      sc.setLocalProperty(key, s"$tag-end")
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "listener bus did not deliver the marker job")
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-    import scala.jdk.CollectionConverters._
-    perBatch.asScala.view.mapValues(_.get).toMap
+    SparkJobs.during(spark)(body)
+      .flatMap(p => Option(p.getProperty(MicroBatchExecution.BATCH_ID_KEY)))
+      .groupBy(_.toLong).view.mapValues(_.size).toMap
   }
 
   test("streaming dedup batch budget: ≤ 12 Spark jobs per micro-batch, no cached frame left behind") {
