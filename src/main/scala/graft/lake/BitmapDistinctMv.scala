@@ -35,9 +35,15 @@ final case class BitmapDistinctMv(domain: Long) extends SketchStateMv.Law {
 
   def layout: SketchStateMv.Layout = BitmapDistinctMv
 
-  def cellOf(keyCol: String): (Column, Column) =
-    (col(keyCol).cast("long") / 64L,
+  def cellOf(keyCol: String): (Column, Column) = {
+    val k = col(keyCol)
+    (SketchStateMv.reject(k < 0L || k >= domain,
+        concat(lit("bitmap distinct kind: key "), k.cast("string"),
+          lit(s" outside [0, $domain) — widen distinct_domain or use " +
+            "the exact distinct kind")))
+      .otherwise(k.cast("long") / 64L),
       expr(s"shiftleft(1L, int(`$keyCol` % 64))"))
+  }
 
   def foldCell(v: Column): Column = bit_or(v)
 
@@ -45,14 +51,4 @@ final case class BitmapDistinctMv(domain: Long) extends SketchStateMv.Law {
       distinctName: String): DataFrame =
     cells.agg(n, sum(when(col(WidxCol) >= 0L, bit_count(col(WordCol)))
       .otherwise(0L)).cast("bigint").as(distinctName))
-
-  override def check(rows: DataFrame, keyCol: String): Unit = {
-    val bad = rows.filter(col(keyCol).isNotNull &&
-        (col(keyCol) < 0L || col(keyCol) >= domain))
-      .agg(count(lit(1)), min(col(keyCol)), max(col(keyCol))).head()
-    require(bad.getLong(0) == 0L,
-      s"bitmap distinct kind: ${bad.getLong(0)} key(s) outside " +
-        s"[0, $domain) (seen extent [${bad.get(1)}, ${bad.get(2)}]) — " +
-        "widen distinct_domain or use the exact distinct kind")
-  }
 }

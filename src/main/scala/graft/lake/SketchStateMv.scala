@@ -69,13 +69,14 @@ object SketchStateMv {
   }
 
   /** What one sketch kind contributes: its layout, how a key becomes a
-    * cell, how a cell folds, how the view reads the cells back, and an
-    * optional check on rows entering the state.
+    * cell, how a cell folds, and how the view reads the cells back.
     */
   trait Law {
     def layout: Layout
 
-    /** (cell index, cell contribution) of a row's non-null key. */
+    /** (cell index, cell contribution) of a row's non-null key. A key
+      * that cannot enter the state fails the index with [[reject]].
+      */
     def cellOf(keyCol: String): (Column, Column)
 
     /** The append-distributive fold of a cell's contributions. */
@@ -86,10 +87,28 @@ object SketchStateMv {
       */
     def derive(cells: RelationalGroupedDataset, n: Column,
         distinctName: String): DataFrame
-
-    /** Fails pointedly when `rows` cannot enter the state. */
-    def check(rows: DataFrame, keyCol: String): Unit = ()
   }
+
+  /** `msg` as the failure of the Spark job evaluating a row where
+    * `cond` holds. A law guards its cell index with it: every state
+    * job computes the index of every row it folds (the index is
+    * written and keyed on), so the check rides reads the refresh makes
+    * anyway and fails before anything commits. [[create]] and
+    * [[refresh]] rethrow it as an IllegalArgumentException.
+    */
+  def reject(cond: Column, msg: Column): Column = when(cond, raise_error(msg))
+
+  private val rethrowRejected: PartialFunction[Throwable, Nothing] = {
+    case e: Exception if rejection(e).isDefined =>
+      throw new IllegalArgumentException(rejection(e).get, e)
+  }
+
+  private def rejection(e: Throwable): Option[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).collectFirst {
+      case t: org.apache.spark.SparkThrowable
+          if t.getCondition == "USER_RAISED_EXCEPTION" =>
+        t.getMessageParameters.get("errorMessage")
+    }
 
   private def stateNote(law: Law, f: Int, mode: String): String =
     MvBasis.note(law.layout.notePrefix, Seq(f), mode)
@@ -133,11 +152,10 @@ object SketchStateMv {
   def create(s: SparkSession, law: Law, factRoot: String, mvRoot: String,
       group: Seq[String], keyCol: String, distinctName: String,
       cfg: BlockWriter.Config,
-      prep: DataFrame => DataFrame = identity): Int = {
+      prep: DataFrame => DataFrame = identity): Int = try {
     val stRoot = law.layout.stateRoot(mvRoot)
     val f = LakeTable.currentSnapshot(factRoot)
     val base = prep(LakeTable.read(s, factRoot, Some(f)))
-    law.check(base, keyCol)
     // the hidden state owns its own mask hygiene (see
     // DistinctMv.StateCompactFiles)
     AutoMaintain.setPolicy(stRoot,
@@ -147,20 +165,23 @@ object SketchStateMv {
     LakeTable.commit(s, mvRoot,
       derive(law, LakeTable.read(s, stRoot), group, distinctName),
       cfg, group, note = MvBasis.note(MvBasis.Distinct, Seq(f), "full"))
-  }
+  } catch rethrowRejected
 
   /** Fold fact changes since the basis; returns the new fact basis. */
   def refresh(s: SparkSession, law: Law, factRoot: String, mvRoot: String,
       group: Seq[String], keyCol: String, distinctName: String,
       cfg: BlockWriter.Config, prep: DataFrame => DataFrame = identity,
-      targetedOk: Boolean = true): Int = {
+      targetedOk: Boolean = true): Int = try {
     val lead = group.head
     val f0 = DistinctMv.basis(mvRoot)
     val f1 = LakeTable.currentSnapshot(factRoot)
     val stRoot = law.layout.stateRoot(mvRoot)
-    val sb = MvBasis.of(stRoot, law.layout.notePrefix).snaps.head
+    val stNote = MvBasis.of(stRoot, law.layout.notePrefix)
+    val sb = stNote.snaps.head
     if (f0 == f1 && sb == f0) return f0
-    var mode = "fold"
+    // with no state commit below, the view re-derives from the state
+    // as its last commit left it (crash recovery): that commit's mode
+    var mode = stNote.mode
     var leads: Option[Seq[Any]] = None
     if (sb < f1) {
       val appendOnly =
@@ -178,7 +199,7 @@ object SketchStateMv {
           val empty = ls.contains(Nil)
           if (empty && sb == f0) return f0
           if (!empty) {
-            law.check(delta0, keyCol)
+            mode = "fold"
             leads = ls
             foldMerge(s, law, stRoot, deltaState, group, leads, f1)
           }
@@ -196,7 +217,6 @@ object SketchStateMv {
             val cur = prep(
               s.read.format("graft-lake").option("snapshot", f1.toString)
                 .load(factRoot).filter(col(lead).isin(ts: _*)))
-            law.check(cur, keyCol)
             val next = stateOf(law, cur, group, keyCol)
             // retire EVERY prior cell of the touched groups (vanished
             // cells included) through the same commit's mask; the mask
@@ -218,7 +238,6 @@ object SketchStateMv {
           case _ =>
             mode = "full"
             val base = prep(LakeTable.read(s, factRoot, Some(f1)))
-            law.check(base, keyCol)
             LakeTable.rewrite(s, stRoot, stateOf(law, base, group, keyCol),
               DistinctMv.stateCfg(group), group,
               note = stateNote(law, f1, "full")): Unit
@@ -244,7 +263,7 @@ object SketchStateMv {
         derive(law, LakeTable.read(s, stRoot), group, distinctName),
         cfg, group, note = note): Unit
     f1
-  }
+  } catch rethrowRejected
 
   /** Append fold: stored touched cells ∪ delta cells → the law's cell
     * fold / summed sentinels, one merge on the cell key.

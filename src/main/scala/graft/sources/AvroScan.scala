@@ -29,7 +29,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * and a container decodes strictly serially per sync block anyway.
   *
   * Merge-on-read: equality deletes mask by VALUE downstream of the
-  * decode (the reader emits the group's augmented schema and
+  * decode (the reader emits the scan's augmented schema and
   * [[DeleteFilterReader]] probes it unchanged). Positional/DV deletes
   * key on parquet row indexes and cannot target avro files — the
   * avro plane rejects them at the write verbs — so the per-file
@@ -74,7 +74,7 @@ private[sources] object AvroScanSupport {
 }
 
 /** Streams one snappy Avro container file as [[InternalRow]]s of
-  * `emit` (the group's read/augmented schema). Values decode straight
+  * `emit` (the scan's read/augmented schema). Values decode straight
   * to Catalyst representations — strings to [[UTF8String] ] without a
   * char round-trip, timestamps stay the epoch-micros longs the plane
   * serializes ([[graft.lake.AvroPlane]] writes micros; Catalyst's

@@ -9,7 +9,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Predicate}
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, PartitionSpec, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, FilePartition, FileStatusWithMetadata, PartitionDirectory, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetScanBuilder}
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
@@ -52,24 +53,36 @@ object DsV2Shim {
     exprs.flatMap(e =>
       DataSourceStrategy.translateFilter(e, supportNestedPredicatePushdown = true))
 
-  /** Re-point a planned parquet scan at a different file set and/or
-    * read schema (used per delete-group and per micro-batch — the
-    * scan is a case class, so this is a metadata-only copy). The
-    * hadoop Configuration is CLONED: `createReaderFactory` writes the
-    * requested read schema into it, and in local mode `broadcast`
-    * hands executors the original object — two scan copies sharing
-    * one mutable conf would clobber each other's reader schemas.
+  /** The file partitions Spark's parquet scan would plan for `files`
+    * (manifest path, size): the same data-path filter and empty-file
+    * drop as a file index listing, the same `maxSplitBytes` over the
+    * set, the same splits sorted largest first and the same packing —
+    * computed from the manifest sizes, with no file index, scan copy or
+    * hadoop conf per call.
     */
-  def withFiles(scan: ParquetScan, spark: SparkSession,
-      files: Seq[(String, Long)]): ParquetScan =
-    scan.copy(fileIndex = new ManifestFileIndex(spark, files),
-      hadoopConf = new org.apache.hadoop.conf.Configuration(scan.hadoopConf))
+  def filePartitions(scan: ParquetScan, files: Seq[(String, Long)]): Seq[FilePartition] = {
+    val listed = files.collect { case (p, len) if len > 0 && isDataPath(p) =>
+      FileStatusWithMetadata(fileStatus(p, len))
+    }
+    val maxSplit = FilePartition.maxSplitBytes(scan.sparkSession,
+      Seq(PartitionDirectory(InternalRow.empty, listed)))
+    val splits = listed.flatMap(f => PartitionedFileUtil.splitFiles(f, f.getPath,
+        scan.isSplitable(f.getPath), maxSplit, InternalRow.empty))
+      .sortBy(_.length)(Ordering[Long].reverse)
+    FilePartition.getFilePartitions(scan.sparkSession, splits, maxSplit)
+  }
 
-  def withFilesAndSchema(scan: ParquetScan, spark: SparkSession,
-      files: Seq[(String, Long)], readSchema: StructType): ParquetScan =
-    scan.copy(fileIndex = new ManifestFileIndex(spark, files),
-      hadoopConf = new org.apache.hadoop.conf.Configuration(scan.hadoopConf),
-      readDataSchema = readSchema)
+  // a file index's listing filter (`PartitioningAwareFileIndex.isDataPath`)
+  private def isDataPath(p: String): Boolean = {
+    val name = new Path(p).getName
+    !((name.startsWith("_") && !name.contains("=")) || name.startsWith("."))
+  }
+
+  /** A manifest file's status. The block size is chosen so that
+    * maxPartitionBytes, not fake block boundaries, drives split planning.
+    */
+  def fileStatus(p: String, len: Long): FileStatus =
+    new FileStatus(len, false, 1, 128L << 20, 0L, new Path(p))
 
   /** Materialize a (metadata-scale) frame as the InternalRow array a
     * DSv2 `LocalScan` serves — the executed plan's collect, so the
@@ -196,27 +209,23 @@ final class ConfBox(@transient private var conf: org.apache.hadoop.conf.Configur
 final class ManifestFileIndex(spark: SparkSession, files: Seq[(String, Long)])
     extends PartitioningAwareFileIndex(spark, Map.empty, None) {
 
-  private val statuses: Seq[(Path, FileStatus)] = files.map { case (p, len) =>
-    val path = new Path(p)
-    // block size chosen so maxPartitionBytes, not fake block
-    // boundaries, drives split planning
-    (path, new FileStatus(len, false, 1, 128L << 20, 0L, path))
-  }
+  private val statuses: Seq[FileStatus] =
+    files.map { case (p, len) => DsV2Shim.fileStatus(p, len) }
 
-  override def rootPaths: Seq[Path] = statuses.map(_._1.getParent).distinct
+  override def rootPaths: Seq[Path] = statuses.map(_.getPath.getParent).distinct
   override def partitionSpec(): PartitionSpec = PartitionSpec.emptySpec
   override val leafFiles: LinkedHashMap[Path, FileStatus] = {
     val m = LinkedHashMap.empty[Path, FileStatus]
-    statuses.foreach { case (p, s) => m += p -> s }
+    statuses.foreach(s => m += s.getPath -> s)
     m
   }
   override val leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
-    statuses.groupBy(_._1.getParent).map { case (d, fs) => d -> fs.map(_._2).toArray }
+    statuses.groupBy(_.getPath.getParent).map { case (d, fs) => d -> fs.toArray }
   /** The default resolves through root-path re-qualification — serve
     * the manifest list verbatim instead (this is what `listFiles`
     * consumes when the partition spec is empty).
     */
-  override def allFiles(): Seq[FileStatus] = statuses.map(_._2)
+  override def allFiles(): Seq[FileStatus] = statuses
   override def refresh(): Unit = ()
 }
 

@@ -49,8 +49,9 @@ import graft.writer.BlockWriter
   *
   * Merge-on-read deletes are applied PER READER (the Iceberg model):
   * data files are grouped by the delete files that apply to them
-  * (sequence-number rule), clean groups keep the zero-overhead
-  * columnar path, and dirty groups read row-wise with the delete
+  * (sequence-number rule). A scan no delete touches keeps the
+  * zero-overhead columnar path; otherwise every group reads row-wise
+  * through the scan's one parquet reader, with the delete
   * payload hash-probed per executor ([[DeleteSideCache]] — loaded
   * once per JVM, never via the driver). Positional deletes ride the
   * parquet row-index column, so they are exact even under split files
@@ -580,8 +581,8 @@ object LakeFilters {
   * an accessor tag, and the delete-file paths); `posFiles` =
   * positional-delete files whose (path, row-index) coordinates are
   * probed against the parquet row index at `rowIdxOrd`. `augSchema`
-  * is what the inner parquet readers emit; rows project back to its
-  * first `baseLen` fields.
+  * is what the scan's one parquet reader emits (the same for every
+  * group of a scan); rows project back to its first `baseLen` fields.
   */
 private[sources] final case class EqDeleteSpec(ord: Int, tag: String, files: Seq[String])
 private[sources] final case class GroupDeleteSpec(
@@ -594,7 +595,7 @@ private[sources] final case class GroupDeleteSpec(
     // (O(1) bit test; payload O(files) bytes, never row-proportional)
     dvFiles: Seq[String] = Nil)
 
-private[sources] final case class TaggedPartition(tag: Int, inner: FilePartition,
+private[graft] final case class TaggedPartition(tag: Int, inner: FilePartition,
     bucket: Int = -1,
     // a micro-batch whose file set mixes formats must plan EVERY
     // partition row-wise (Spark forbids mixing columnar and row
@@ -639,7 +640,7 @@ object GraftScan {
 /** The lake's DSv2 scan: ONE logical `BatchScan` whose partitions are
   * planned by Spark's parquet scan over the manifest-pruned file
   * list, grouped by applicable merge-on-read deletes (sequence rule).
-  * Groups with no deletes keep the columnar fast path untouched.
+  * A scan with no deletes keeps the columnar fast path untouched.
   * Implements runtime (join-driven) file pruning: a broadcast-join
   * key set arriving at execution time re-prunes the planned files
   * through the same manifest stats — the lake-native analog of
@@ -757,7 +758,9 @@ final class GraftScan(spark: SparkSession, root: String, m: Manifest,
     // narrowing by join keys is sound with deletes (masked rows can
     // only shrink the result further) but NOT under a complete
     // aggregate pushdown, whose footer answer must cover every file
-    if (!aggPushed) planned = prune(planned, filters.toIndexedSeq)
+    if (!aggPushed) synchronized {
+      planned = prune(planned, filters.toIndexedSeq); plannedParts = null
+    }
 
   override def readSchema(): StructType =
     if (aggPushed) template.readDataSchema
@@ -881,15 +884,16 @@ final class GraftScan(spark: SparkSession, root: String, m: Manifest,
 
   /** Data-file groups by the delete set that applies to them (same
     * grouping as the Scala read path): commits are few, so the group
-    * count is small. Each group gets its own delegated parquet scan;
-    * dirty groups read an AUGMENTED schema (missing key columns, the
-    * parquet row index) that the delete-filtering reader projects
-    * away. Built from the UNPRUNED file list so group indexes are
-    * STABLE: the reader factory and a runtime-narrowed partition
+    * count is small. One parquet reader serves every group. On a dirty
+    * scan it reads an AUGMENTED schema — the base columns, then every
+    * group's missing equality-delete key columns, then the parquet row
+    * index when any group needs it — and each group's delete spec
+    * indexes into it (a clean group's spec only projects the helper
+    * columns away). Built from the UNPRUNED file list so group indexes
+    * are STABLE: the reader factory and a runtime-narrowed partition
     * plan must agree on them.
     */
-  private case class Group(scan: ParquetScan, spec: Option[GroupDeleteSpec],
-      paths: Set[String])
+  private case class Group(spec: Option[GroupDeleteSpec], paths: Set[String])
 
   /** Any `.avro` data file at this snapshot forces the whole scan
     * row-wise (Spark forbids mixing columnar and row partitions) and
@@ -901,64 +905,71 @@ final class GraftScan(spark: SparkSession, root: String, m: Manifest,
 
   private lazy val groups: Seq[Group] = {
     val base = template.readDataSchema
-    m.files.groupBy(f => m.deletes.filter(_.seq > f.seq).map(_.path))
+    val sets = m.files.groupBy(f => m.deletes.filter(_.seq > f.seq).map(_.path))
       .toSeq.sortBy(_._2.head.path)
-      .map { case (_, fs) =>
-        val dels: Seq[DeleteEntry] = m.deletes.filter(_.seq > fs.head.seq)
-        // the delegated scan is parquet machinery — only its files go
-        // in; `.avro` files plan as [[AvroPartition]]s under the same
-        // group tag (same delete spec, container-decoded row-wise)
-        val files = fs.filterNot(_.path.endsWith(".avro"))
-          .map(f => (f.path, GraftScan.bytesOf(f)))
-        val paths = fs.map(_.path).toSet
-        if (dels.isEmpty && !coordsRequested)
-          Group(DsV2Shim.withFiles(template, spark, files), None, paths)
-        else {
-          val posDels = dels.filter(_.kind == "pos")
-          val eqDels = dels.filter(_.kind == "eq")
-          val dvDels = dels.filter(_.kind == "dv")
-          var aug = base
-          val eqs = eqDels.groupBy(_.keyCol).toSeq.sortBy(_._1).map {
-            case (kc, entries) =>
-              // kc is a PHYSICAL name; `aug` (the file read schema) is
-              // physical too, so the lookup and any added field stay
-              // in the physical domain
-              val kf = graft.lake.ColumnMapping.fieldByPhysical(tableSchema, kc)
-                .getOrElse(throw new IllegalStateException(
-                  s"equality-delete key $kc not in schema of $root"))
-              val ord = aug.fieldNames.indexOf(kc) match {
-                case -1 =>
-                  aug = aug.add(StructField(kc, kf.dataType, kf.nullable))
-                  aug.length - 1
-                case i => i
-              }
-              EqDeleteSpec(ord, GraftScan.keyTag(kf.dataType),
-                entries.map(_.path))
-          }
-          val needRowIdx = posDels.nonEmpty || dvDels.nonEmpty ||
-            requested.exists(_.fieldNames.contains(LakeTable.CoordIdx))
-          val rowIdxOrd =
-            if (!needRowIdx) -1
-            // nullable: the column is absent from the FILES (the
-            // reader's row-index generator back-fills it after the
-            // batch is read), and a required-but-missing column fails
-            // the vectorized reader's schema check
-            else { aug = aug.add(StructField(DsV2Shim.rowIndexCol, LongType, nullable = true)); aug.length - 1 }
-          val outMap = requested.map(_.fields.map { f =>
-            if (f.name == LakeTable.CoordPath) -1
-            else if (f.name == LakeTable.CoordIdx) rowIdxOrd
-            else aug.fieldNames.indexOf(phys(f.name))
-          }.toSeq)
-          val spec = GroupDeleteSpec(eqs, posDels.map(_.path), rowIdxOrd,
-            aug, base.length, outMap, dvDels.map(_.path))
-          Group(DsV2Shim.withFilesAndSchema(template, spark, files, aug),
-            Some(spec), paths)
+      .map { case (_, fs) => (m.deletes.filter(_.seq > fs.head.seq), fs.map(_.path).toSet) }
+    val dels = sets.flatMap(_._1)
+    if (dels.isEmpty && !coordsRequested) sets.map { case (_, paths) => Group(None, paths) }
+    else {
+      // key columns are PHYSICAL names, as is the file read schema, so
+      // the lookup and any added field stay in the physical domain
+      def keyField(kc: String): StructField =
+        graft.lake.ColumnMapping.fieldByPhysical(tableSchema, kc).getOrElse(
+          throw new IllegalStateException(s"equality-delete key $kc not in schema of $root"))
+      val withKeys = dels.filter(_.kind == "eq").map(_.keyCol).distinct.sorted
+        .filterNot(base.fieldNames.contains).foldLeft(base) { (aug, kc) =>
+          aug.add(StructField(kc, keyField(kc).dataType, keyField(kc).nullable))
         }
+      val aug =
+        if (dels.exists(d => d.kind == "pos" || d.kind == "dv") ||
+            requested.exists(_.fieldNames.contains(LakeTable.CoordIdx)))
+          // nullable: the column is absent from the FILES (the reader's
+          // row-index generator back-fills it after the batch is read),
+          // and a required-but-missing column fails the vectorized
+          // reader's schema check
+          withKeys.add(StructField(DsV2Shim.rowIndexCol, LongType, nullable = true))
+        else withKeys
+      val rowIdxOrd = aug.fieldNames.indexOf(DsV2Shim.rowIndexCol)
+      val outMap = requested.map(_.fields.map { f =>
+        if (f.name == LakeTable.CoordPath) -1
+        else if (f.name == LakeTable.CoordIdx) rowIdxOrd
+        else aug.fieldNames.indexOf(phys(f.name))
+      }.toSeq)
+      sets.map { case (ds, paths) =>
+        def files(kind: String): Seq[String] = ds.filter(_.kind == kind).map(_.path)
+        val eqs = ds.filter(_.kind == "eq").groupBy(_.keyCol).toSeq.sortBy(_._1).map {
+          case (kc, es) => EqDeleteSpec(aug.fieldNames.indexOf(kc),
+            GraftScan.keyTag(keyField(kc).dataType), es.map(_.path))
+        }
+        Group(Some(GroupDeleteSpec(eqs, files("pos"), rowIdxOrd, aug, base.length,
+          outMap, files("dv"))), paths)
       }
+    }
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val current = planned
+  // what the one parquet reader emits: a dirty scan's augmented schema
+  private lazy val emitSchema: StructType =
+    groups.flatMap(_.spec).headOption.fold(template.readDataSchema)(_.augSchema)
+
+  // the one parquet scan every group reads through
+  private[graft] lazy val scan: ParquetScan =
+    if (emitSchema eq template.readDataSchema) template
+    else template.copy(readDataSchema = emitSchema)
+
+  // Spark asks every copy of the scan's exec node for partitions and a
+  // reader factory (`supportsColumnar` reads both); the factory is made
+  // once per scan, the partitions once per planned file set
+  private lazy val readerFactory: GraftReaderFactory =
+    new GraftReaderFactory(scan.createReaderFactory(),
+      groups.map(_.spec).toArray, emitSchema, anyAvro = hasAvroFiles)
+  private var plannedParts: Array[InputPartition] = _
+
+  override def planInputPartitions(): Array[InputPartition] = synchronized {
+    if (plannedParts == null) plannedParts = partitionsOf(planned)
+    plannedParts
+  }
+
+  private def partitionsOf(current: Seq[FileEntry]): Array[InputPartition] = {
     val spj = spjSpec.isDefined
     var i = -1
     groups.zipWithIndex.flatMap { case (g, tag) =>
@@ -970,10 +981,11 @@ final class GraftScan(spark: SparkSession, root: String, m: Manifest,
         else if (spj) keep.groupBy(_.bucket).toSeq.sortBy(_._1)
         else Seq((-1, keep))
       byBucket.flatMap { case (bucket, fs) =>
+        // `.avro` files plan as [[AvroPartition]]s under the same group
+        // tag (same delete spec, container-decoded row-wise)
         val (avroFs, pqFs) = fs.partition(_.path.endsWith(".avro"))
-        val parts = DsV2Shim.withFiles(g.scan, spark,
-            pqFs.map(f => (f.path, GraftScan.bytesOf(f))))
-          .planInputPartitions().map(_.asInstanceOf[FilePartition])
+        val parts = DsV2Shim.filePartitions(scan,
+          pqFs.map(f => (f.path, GraftScan.bytesOf(f))))
         val shaped =
           if (g.spec.exists(s => s.posFiles.nonEmpty || s.dvFiles.nonEmpty ||
               s.outMap.isDefined))
@@ -990,31 +1002,21 @@ final class GraftScan(spark: SparkSession, root: String, m: Manifest,
     }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(
-      groups.map(_.scan.createReaderFactory()).toArray,
-      groups.map(_.spec).toArray,
-      // avro partitions emit the same schema the group's parquet
-      // readers do (augmented for dirty groups), so the delete
-      // filter and output projection apply unchanged
-      groups.map(g => g.spec.map(_.augSchema).getOrElse(template.readDataSchema))
-        .toArray,
-      anyAvro = hasAvroFiles)
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new GraftMicroBatchStream(spark, root, template)
 }
 
-/** Delegates each partition to its group's parquet reader factory —
-  * clean groups keep columnar batches end to end; dirty groups read
-  * row-wise through [[DeleteFilterReader]] — or, for an
-  * [[AvroPartition]], to the avro container decoder
-  * ([[AvroRowReader]]), which emits the group's same schema so the
+/** Delegates each partition to the scan's one parquet reader factory
+  * — a clean scan keeps columnar batches end to end; a dirty scan
+  * reads row-wise through [[DeleteFilterReader]] with the partition's
+  * group spec — or, for an [[AvroPartition]], to the avro container
+  * decoder ([[AvroRowReader]]), which emits the same schema so the
   * delete filter applies unchanged.
   */
-final class GraftReaderFactory(inner: Array[PartitionReaderFactory],
-    specs: Array[Option[GroupDeleteSpec]],
-    emitSchemas: Array[StructType] = Array.empty,
+final class GraftReaderFactory(private[graft] val inner: PartitionReaderFactory,
+    specs: Array[Option[GroupDeleteSpec]], emitSchema: StructType,
     anyAvro: Boolean = false) extends PartitionReaderFactory {
 
   // Spark requires every partition of one scan to agree on columnar
@@ -1028,14 +1030,12 @@ final class GraftReaderFactory(inner: Array[PartitionReaderFactory],
   override def supportColumnarReads(partition: InputPartition): Boolean =
     partition match {
       case t: TaggedPartition =>
-        allClean && !t.forceRow && inner(t.tag).supportColumnarReads(t.inner)
+        allClean && !t.forceRow && inner.supportColumnarReads(t.inner)
       case _ => false
     }
 
-  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] = {
-    val t = partition.asInstanceOf[TaggedPartition]
-    inner(t.tag).createColumnarReader(t.inner)
-  }
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
+    inner.createColumnarReader(partition.asInstanceOf[TaggedPartition].inner)
 
   private def withDeletes(r: PartitionReader[InternalRow], tag: Int,
       filePath: => String): PartitionReader[InternalRow] =
@@ -1054,10 +1054,10 @@ final class GraftReaderFactory(inner: Array[PartitionReaderFactory],
         // the delete filter / output projection key rows by the
         // MANIFEST-form path, which is exactly what the partition
         // carries (no parquet PartitionedFile round-trip to undo)
-        withDeletes(new AvroRowReader(a.path, emitSchemas(a.tag),
+        withDeletes(new AvroRowReader(a.path, emitSchema,
           Set(DsV2Shim.rowIndexCol)), a.tag, a.path)
       case t: TaggedPartition =>
-        withDeletes(inner(t.tag).createReader(t.inner), t.tag,
+        withDeletes(inner.createReader(t.inner), t.tag,
           t.inner.files.head.filePath.toPath.toString)
     }
 }
@@ -1227,8 +1227,8 @@ object DeleteSideCache {
   * appended (append-scan semantics, as in Iceberg's incremental
   * scans) — no directory listing, no re-read of older data, and the
   * checkpointed offset makes consumption exactly-once across
-  * restarts. Partitions are planned by re-pointing the negotiated
-  * parquet scan at the added files.
+  * restarts. Partitions are packed from the added files' manifest
+  * sizes exactly as the negotiated parquet scan would plan them.
   */
 final case class GraftOffset(snap: Int) extends Offset {
   override def json(): String = snap.toString
@@ -1261,17 +1261,16 @@ final class GraftMicroBatchStream(spark: SparkSession, root: String,
       // parquet partitions row-wise (Spark forbids mixing columnar
       // and row partitions within one batch)
       val (avro, pq) = added.partition(_.path.endsWith(".avro"))
-      val parts = DsV2Shim.withFiles(template, spark,
-          pq.map(f => (f.path, GraftScan.bytesOf(f)))).planInputPartitions()
-        .map(p => TaggedPartition(0, p.asInstanceOf[FilePartition],
-          forceRow = avro.nonEmpty): InputPartition)
-      parts ++ avro.map(f => AvroPartition(0, f.path): InputPartition)
+      val parts = DsV2Shim.filePartitions(template,
+          pq.map(f => (f.path, GraftScan.bytesOf(f))))
+        .map(p => TaggedPartition(0, p, forceRow = avro.nonEmpty): InputPartition)
+      (parts ++ avro.map(f => AvroPartition(0, f.path): InputPartition)).toArray
     }
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(Array(template.createReaderFactory()),
-      Array(None), Array(template.readDataSchema))
+    new GraftReaderFactory(template.createReaderFactory(), Array(None),
+      template.readDataSchema)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

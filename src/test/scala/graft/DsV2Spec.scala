@@ -127,6 +127,242 @@ class DsV2Spec extends AnyFunSuite {
     graft.util.Scratch.rmNow(root)
   }
 
+  // ---- the single-schema read: one parquet reader per scan ----
+
+  /** A table of four appends on disjoint `event_id` quarters (range
+    * clustered, so a runtime key filter prunes whole appends), with
+    * `dels(k)` run after the k-th append.
+    */
+  private def quarters(prefix: String)(dels: PartialFunction[Int, String => Unit]): String = {
+    val root = graft.util.Scratch.dir(prefix)
+    (0 until 4).foreach { k =>
+      LakeTable.commit(spark, root,
+        events.filter(col("event_id") >= k * 250 && col("event_id") < (k + 1) * 250)
+          .orderBy(col("event_id")),
+        BlockWriter.Config("user_id", "event_id", maxRecordsPerFile = 64),
+        Seq("event_id", "event_type"), rangeCluster = true)
+      dels.lift(k).foreach(_(root))
+    }
+    root
+  }
+
+  private def splitKey(pf: org.apache.spark.sql.execution.datasources.PartitionedFile) =
+    (pf.filePath.toPath.toString, pf.start, pf.length)
+
+  /** Each group's and bucket's file splits equal what Spark's own
+    * parquet scan plans over a file index of the same files.
+    */
+  private def assertSparkSplits(g: GraftScan): Unit = {
+    val parts = g.planInputPartitions().toSeq
+      .collect { case t: graft.sources.TaggedPartition => t }
+    parts.groupBy(t => (t.tag, t.bucket)).foreach { case (key, ps) =>
+      val paths = ps.flatMap(_.inner.files.map(_.filePath.toPath.toString)).toSet
+      val files = g.plannedFiles.filter(f => paths(f.path))
+      assert(files.map(_.path).toSet === paths, s"group $key: unknown files")
+      val expect = g.scan.copy(fileIndex = new org.apache.spark.sql.graftshim
+          .ManifestFileIndex(spark, files.map(f => (f.path, f.bytes))))
+        .planInputPartitions().toSeq
+        .map(_.asInstanceOf[org.apache.spark.sql.execution.datasources.FilePartition])
+      val got = ps.map(_.inner.files.toSeq.map(splitKey))
+      val want = expect.map(_.files.toSeq.map(splitKey))
+      // a group that needs file coordinates plans one file per partition
+      if (got.size == want.size) assert(got === want, s"group $key")
+      else {
+        assert(got.forall(_.size == 1), s"group $key: $got vs $want")
+        assert(got.flatten === want.flatten, s"group $key")
+      }
+    }
+  }
+
+  private def assertSameAsLibrary(root: String, shape: DataFrame => DataFrame): GraftScan = {
+    val byFormat = shape(spark.read.format("graft-lake").load(root))
+    assert(sorted(byFormat) === sorted(shape(LakeTable.read(spark, root))))
+    val g = graftScanOf(byFormat)
+    assertSparkSplits(g)
+    g
+  }
+
+  test("single-schema read: positional, two equality keys, a DV and a clean group in one scan match LakeTable.read") {
+    val root = quarters("graft_v2one_") {
+      case 0 => r => LakeTable.deletePositions(spark, r,
+        LakeTable.withRowCoords(spark, r).filter(col("event_id") % 10 === 3)): Unit
+      case 1 => r => LakeTable.deleteWhere(spark, r, "event_type",
+        spark.range(1).select(lit("click").as("event_type"))): Unit
+      case 2 => r =>
+        LakeTable.deleteWhere(spark, r, "user_id",
+          events.select(col("user_id")).distinct().orderBy(col("user_id")).limit(3)): Unit
+        LakeTable.deletePositionsDv(spark, r, LakeTable.withRowCoords(spark, r)
+          .filter(col("event_id") % 10 === 7)
+          .select(col(LakeTable.CoordPath), col(LakeTable.CoordIdx))): Unit
+    }
+    val m = LakeTable.manifest(root, LakeTable.currentSnapshot(root))
+    assert(m.deletes.map(_.kind).toSet === Set("pos", "eq", "dv"))
+    assert(m.deletes.filter(_.kind == "eq").map(_.keyCol).toSet ===
+      Set("event_type", "user_id"))
+    // four groups: the last append is clean
+    val g = assertSameAsLibrary(root, identity)
+    assert(g.planInputPartitions().collect {
+      case t: graft.sources.TaggedPartition => t.tag
+    }.distinct.length === 4)
+    // both key columns and the row index pruned from the output
+    assertSameAsLibrary(root, _.filter(col("event_id") > 100)
+      .select(col("event_id"), col("value")))
+    assertSameAsLibrary(root, _.select(col("user_id"), col("ts")))
+    // the row coordinates requested: every group emits them
+    val coords = spark.read.format("graft-lake").load(root)
+      .select(col("event_id"), col(LakeTable.CoordPath), col(LakeTable.CoordIdx))
+    val viaScala = LakeTable.withRowCoords(spark, root)
+      .select(col("event_id"), col(LakeTable.CoordPath), col(LakeTable.CoordIdx))
+    assert(coords.exceptAll(viaScala).isEmpty && viaScala.exceptAll(coords).isEmpty)
+    assert(coords.count() === LakeTable.read(spark, root).count())
+    assertSparkSplits(graftScanOf(coords))
+    graft.util.Scratch.rmNow(root)
+  }
+
+  test("single-schema read: avro files in a dirty scan emit the augmented schema") {
+    val root = graft.util.Scratch.dir("graft_v2oneav_")
+    LakeTable.appendAvro(spark, root, events.filter(col("event_id") < 500),
+      Seq("event_id"))
+    LakeTable.deleteWhere(spark, root, "event_type",
+      spark.range(1).select(lit("view").as("event_type")))
+    LakeTable.appendAvro(spark, root, events.filter(col("event_id") >= 500),
+      Seq("event_id"))
+    LakeTable.deleteWhere(spark, root, "user_id",
+      events.select(col("user_id")).distinct().orderBy(col("user_id")).limit(2))
+    assertSameAsLibrary(root, identity)
+    assertSameAsLibrary(root, _.select(col("event_id"), col("value")))
+    graft.util.Scratch.rmNow(root)
+  }
+
+  test("single-schema read: runtime filtering re-plans a subset of the first plan with stable group tags") {
+    val root = quarters("graft_v2onerf_") {
+      case 0 => r => LakeTable.deletePositions(spark, r,
+        LakeTable.withRowCoords(spark, r).filter(col("event_id") % 10 === 3)): Unit
+      case 1 => r => LakeTable.deleteWhere(spark, r, "event_type",
+        spark.range(1).select(lit("click").as("event_type"))): Unit
+    }
+    val g = assertSameAsLibrary(root, identity)
+    val first = g.planInputPartitions()
+    def tagged(ps: Array[org.apache.spark.sql.connector.read.InputPartition]) =
+      ps.toSeq.collect { case t: graft.sources.TaggedPartition =>
+        t.inner.files.toSeq.map(pf => splitKey(pf) -> t.tag)
+      }.flatten
+    // a join-key set over the first quarter only
+    g.filter(Array[org.apache.spark.sql.sources.Filter](org.apache.spark.sql.sources.In("event_id",
+      Array[Any](3L, 17L, 101L))))
+    val narrowed = g.planInputPartitions()
+    assert(narrowed ne first, "a narrowed file set must re-plan")
+    assert(g.plannedFiles.size < g.survivors.size)
+    val before = tagged(first).toMap
+    assert(tagged(narrowed).nonEmpty)
+    tagged(narrowed).foreach { case (split, tag) =>
+      assert(before.get(split) === Some(tag), s"$split: re-planned outside the first plan")
+    }
+    assertSparkSplits(g)
+    graft.util.Scratch.rmNow(root)
+  }
+
+  test("single-schema read: a storage-partitioned join over a dirty bucketed table plans per group and bucket") {
+    spark.conf.set("spark.sql.catalog.graft",
+      classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graft.root",
+      graft.util.Scratch.root.resolve("psdcat").toString)
+    val s = spark
+    import s.implicits._
+    val left = (0 until 3000).map(i => (i.toLong, i.toLong % 97, i * 1.5))
+      .toDF("event_id", "user_id", "value")
+    val right = (0 until 300).map(i => (s"seg${i % 9}", i.toLong % 97))
+      .toDF("segment", "user_id").distinct()
+    left.createOrReplaceTempView("v2one_spj_left")
+    right.createOrReplaceTempView("v2one_spj_right")
+    val id = System.nanoTime()
+    val lt = s"graft.psd.onel_$id"; val rt = s"graft.psd.oner_$id"
+    spark.sql(s"CREATE TABLE $lt PARTITIONED BY (bucket(8, user_id)) AS SELECT * FROM v2one_spj_left WHERE event_id < 2000")
+    spark.sql(s"CREATE TABLE $rt PARTITIONED BY (bucket(8, user_id)) AS SELECT * FROM v2one_spj_right")
+    spark.sql(s"DELETE FROM $lt WHERE event_id % 10 = 3")
+    spark.sql(s"INSERT INTO $lt SELECT * FROM v2one_spj_left WHERE event_id >= 2000")
+    val q = s"""SELECT r.segment, count(*) AS n, sum(l.value) AS sv
+               |FROM %s l JOIN %s r ON l.user_id = r.user_id
+               |GROUP BY r.segment""".stripMargin
+    val expect = spark.sql(q.format(
+        "(SELECT * FROM v2one_spj_left WHERE event_id % 10 != 3 OR event_id >= 2000)",
+        "v2one_spj_right"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+    val saved = Seq("spark.sql.sources.v2.bucketing.enabled",
+      "spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.enabled")
+      .map(k => k -> spark.conf.getOption(k))
+    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val joined = spark.sql(q.format(lt, rt))
+      val plan = joined.queryExecution.executedPlan
+      val smj = plan.collect {
+        case j: org.apache.spark.sql.execution.joins.SortMergeJoinExec => j
+      }
+      assert(smj.nonEmpty && smj.head.collect {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+      }.isEmpty, s"the join must be storage-partitioned:\n$plan")
+      assert(joined.collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sorted.toSeq === expect)
+      val scans = plan.collect { case b: BatchScanExec => b.scan }
+        .collect { case g: GraftScan => g }
+      val dirty = scans.find(_.planInputPartitions().exists {
+        case t: graft.sources.TaggedPartition => t.tag > 0
+        case _ => false
+      }).getOrElse(fail(s"no two-group scan in:\n$plan"))
+      assert(dirty.planInputPartitions().collect {
+        case t: graft.sources.TaggedPartition => t.bucket
+      }.distinct.length > 1)
+      scans.foreach(assertSparkSplits)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    spark.sql(s"DROP TABLE $lt"); spark.sql(s"DROP TABLE $rt")
+  }
+
+  test("plan once: every plan copy of a scan shares one reader factory holding one parquet factory, and partitions plan once per file set") {
+    // three groups: two under positional deletes, the last append clean
+    val root = graft.util.Scratch.dir("graft_v2once_")
+    (0 until 3).foreach { k =>
+      LakeTable.commit(spark, root,
+        events.filter(col("event_id") >= k * 300 && col("event_id") < (k + 1) * 300),
+        cfg, Seq("event_id"))
+      if (k < 2) LakeTable.deletePositions(spark, root,
+        LakeTable.withRowCoords(spark, root)
+          .filter(col("event_id") % 10 === 3 + k)): Unit
+    }
+    def query: DataFrame = spark.read.format("graft-lake").load(root)
+      .filter(col("user_id") > 2)
+    val df = query
+    val jobs = SparkJobs.during(spark)(df.collect(): Unit).size
+    // the same count as before the single-reader change: planning once
+    // adds or removes no Spark job
+    assert(jobs === 1)
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val nodes = Seq(df.queryExecution.sparkPlan, df.queryExecution.executedPlan)
+      .flatMap(p => helper.collect(p) { case b: BatchScanExec => b })
+    assert(nodes.size >= 2, df.queryExecution.executedPlan.toString)
+    val g = nodes.head.scan.asInstanceOf[GraftScan]
+    assert(nodes.forall(_.scan eq g))
+    val factory = g.createReaderFactory()
+    nodes.foreach(n => assert(n.readerFactory eq factory))
+    factory match {
+      case f: graft.sources.GraftReaderFactory =>
+        assert(f.inner.isInstanceOf[org.apache.spark.sql.execution.datasources
+          .v2.parquet.ParquetPartitionReaderFactory])
+      case other => fail(s"unexpected factory $other")
+    }
+    assert(g.planInputPartitions() eq g.planInputPartitions())
+    assert(g.planInputPartitions().collect {
+      case t: graft.sources.TaggedPartition => t.tag
+    }.distinct.length === 3)
+    assert(sorted(query) === sorted(LakeTable.read(spark, root)
+      .filter(col("user_id") > 2)))
+    graft.util.Scratch.rmNow(root)
+  }
+
   test("format write: append + overwrite round-trip, distributed commit") {
     val root = graft.util.Scratch.dir("graft_v2w_")
     events.limit(100).write.format("graft-lake")

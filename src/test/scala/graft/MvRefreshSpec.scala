@@ -8,8 +8,8 @@ import graft.writer.BlockWriter
 
 /** Refresh-mode coverage of the state-backed distinct MVs: the
   * over-cap `full` fallback, recovery from a crash between the state
-  * commit and the visible commit, and the Spark job budget of each
-  * sketch refresh mode.
+  * commit and the visible commit, the bitmap domain check, and the
+  * Spark job budget of each sketch refresh mode.
   */
 object MvRefreshSpec {
   /** One state-backed distinct kind, as these specs drive it: create
@@ -121,10 +121,96 @@ class MvRefreshSpec extends AnyFunSuite {
     }
   }
 
+  test("sketch MV crash after a targeted or full state commit: the recovery refresh re-derives the view and t.mv reports that commit's mode (bitmap, hll)") {
+    spark.conf.set("spark.sql.catalog.graft",
+      classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graft.root",
+      graft.util.Scratch.root.resolve("psdcat").toString)
+    val cat = spark.sessionState.catalogManager.catalog("graft")
+      .asInstanceOf[graft.sources.GraftCatalog]
+    val laws = Seq(
+      (bitmap, "distinct_kind = 'bitmap', distinct_domain = 1024"),
+      (hll, "distinct_kind = 'hll', distinct_precision = 10"))
+    for ((k, props) <- laws; crashed <- Seq("targeted", "full")) {
+      val id = System.nanoTime()
+      val fact = s"graft.psd.mvrc_f_$id"; val mv = s"graft.psd.mvrc_v_$id"
+      spark.sql(s"CREATE TABLE $fact (id BIGINT, g STRING, uid BIGINT)")
+      spark.sql(s"INSERT INTO $fact SELECT id, concat('k', id % 2), " +
+        s"(id * 7) % 1024 FROM range(400)")
+      spark.sql(s"""CREATE MATERIALIZED VIEW $mv WITH ($props) AS
+                   |SELECT g, COUNT(*) AS n, COUNT(DISTINCT uid) AS uniq
+                   |FROM $fact GROUP BY g""".stripMargin)
+      val mvDir = cat.tableDir(s"psd.mvrc_v_$id")
+      val factDir = cat.tableDir(s"psd.mvrc_f_$id")
+      def mode(): String = spark.sql(s"SELECT mode FROM $mv.mv").head().getString(0)
+      def refresh(): Unit =
+        spark.sql(s"CALL graft.system.refresh_mv(table => 'psd.mvrc_v_$id')"): Unit
+      if (crashed == "full") {
+        AutoMaintain.setPolicy(mvDir, AutoMaintain.MvMaxGroupsKey, 1L)
+        spark.sql(s"DELETE FROM $fact WHERE id IN (4, 5)") // k0 and k1
+      } else spark.sql(s"DELETE FROM $fact WHERE id IN (0, 2)") // k0 only
+      refresh()
+      assert(mode() === crashed, s"${k.name}")
+      // undo the visible commit only, as a crash between the state and
+      // visible commits leaves it
+      LakeTable.rollback(mvDir, LakeTable.currentSnapshot(mvDir) - 1)
+      val st = k.stateRoot(mvDir)
+      val stSnap = LakeTable.currentSnapshot(st)
+      refresh()
+      assert(LakeTable.currentSnapshot(st) === stSnap,
+        s"${k.name} after $crashed: recovery must not commit to the state")
+      assert(mode() === crashed, s"${k.name} after $crashed")
+      assert(DistinctMv.basis(mvDir) === LakeTable.currentSnapshot(factDir))
+      assertSameAsCreate(k, factDir, mvDir)
+      spark.sql(s"DROP MATERIALIZED VIEW $mv"); spark.sql(s"DROP TABLE $fact")
+    }
+  }
+
+  test("bitmap MV domain check: an out-of-domain key fails create, fold, targeted and full with the key named, and nothing commits") {
+    def failsNamingKey(body: => Unit): Unit = {
+      val e = intercept[IllegalArgumentException](body)
+      assert(e.getMessage.contains("key 5000 outside [0, 1024)"), e.getMessage)
+    }
+    val s = spark
+    import s.implicits._
+    def badRow(id: Long, g: String) =
+      Seq((id, g, 5000L)).toDF("id", "g", "uid")
+    // create
+    val fact0 = graft.util.Scratch.dir("graft_mvr_dom_fact0_")
+    val mv0 = graft.util.Scratch.dir("graft_mvr_dom_mv0_")
+    append(fact0, 0L until 40L, 2)
+    LakeTable.commit(spark, fact0, badRow(900L, "k0"), fCfg, Seq("id", "g"))
+    failsNamingKey(bitmap.create(fact0, mv0))
+    assert(LakeTable.currentSnapshot(mv0) === 0)
+    assert(LakeTable.currentSnapshot(BitmapDistinctMv.stateRoot(mv0)) === 0)
+    // refresh: each mode's state job meets the key before any commit
+    val (fact, mv) = fixture(bitmap, "graft_mvr_dom_", groups = 2)
+    val st = BitmapDistinctMv.stateRoot(mv)
+    val (mvSnap, stSnap) = (LakeTable.currentSnapshot(mv), LakeTable.currentSnapshot(st))
+    def refreshFails(): Unit = {
+      failsNamingKey(bitmap.refresh(fact, mv))
+      assert(LakeTable.currentSnapshot(mv) === mvSnap)
+      assert(LakeTable.currentSnapshot(st) === stSnap)
+    }
+    LakeTable.commit(spark, fact, badRow(900L, "k0"), fCfg, Seq("id", "g"))
+    refreshFails() // an append-only range: fold
+    delete(fact, 0L) // k0 touched by a delete: targeted
+    refreshFails()
+    AutoMaintain.setPolicy(mv, AutoMaintain.MvMaxGroupsKey, 1L)
+    delete(fact, 1L) // k0 and k1 over the cap: full
+    refreshFails()
+    // with the key gone the same range refreshes
+    delete(fact, 900L)
+    bitmap.refresh(fact, mv)
+    assert(DistinctMv.mode(mv) === "full")
+    assertSameAsCreate(bitmap, fact, mv)
+  }
+
   test("sketch MV refresh job budgets: fold, targeted and full each run a pinned number of Spark jobs (bitmap, hll)") {
     // (fold, targeted, full) Spark jobs per refresh, as measured on
-    // local[4] with 4 shuffle partitions
-    val budgets = Map("bitmap" -> ((13, 11, 21)), "hll" -> ((11, 9, 17)))
+    // local[4] with 4 shuffle partitions; the bitmap domain check rides
+    // the state jobs, so both laws run the same jobs
+    val budgets = Map("bitmap" -> ((11, 9, 17)), "hll" -> ((11, 9, 17)))
     val measured = Seq(bitmap, hll).map { k =>
       val (fact, mv) = fixture(k, "graft_mvr_jobs_", groups = 2)
       def refreshJobs(mode: String): Int = {
