@@ -97,8 +97,8 @@ object LakeTable {
     * equality deletes apply only to files with a strictly smaller seq.
     * `bytes` = on-disk size recorded at commit time so scan planning
     * (split sizing, join-side statistics) never stats the filesystem;
-    * -1 on manifests written before the field existed (readers fall
-    * back to a stat).
+    * -1 on manifests written before the field existed. Every reader
+    * takes a file's size from [[fileBytes]], which stats only those.
     */
   /** `bucket` = the hash-bucket every row of the file belongs to
     * (pmod(murmur3(partitionCol), nBuckets) — [[graft.writer.BlockWriter.writeFlat]]
@@ -110,6 +110,14 @@ object LakeTable {
     */
   final case class FileEntry(path: String, rows: Long, stats: Map[String, ColStats],
       seq: Int = 0, bytes: Long = -1L, bucket: Int = -1)
+  /** A data file's on-disk size: the manifest's record, or a stat on
+    * the driver for an entry written before sizes were recorded. The
+    * one size source of both read paths ([[read]] and the DSv2 scan).
+    */
+  private[graft] def fileBytes(f: FileEntry): Long =
+    if (f.bytes >= 0) f.bytes
+    else Files.size(Paths.get(new java.net.URI(f.path).getPath))
+
   /** A delete file; applies to data files with seq < this.seq.
     * `kind` "eq": parquet of distinct `keyCol` values (equality
     * delete). `kind` "pos": parquet of (path, idx) row coordinates
@@ -907,7 +915,7 @@ object LakeTable {
         val baseW =
           if (basisMapped.isEmpty) base
           else base.select(base.columns.toIndexedSeq.map(c => col(c).as(phys(c))): _*)
-        scanStatsPaths(spark, dataFiles.map(_._1), baseW, statCols.map(phys))
+        scanStatsPaths(spark, dataFiles.map(_._1), baseW.schema, statCols.map(phys))
       }
     val referenced: Set[String] =
       if (deleteFiles.isEmpty) Set.empty
@@ -956,13 +964,13 @@ object LakeTable {
     * schema, later ones must carry it, additive evolution allowed),
     * records per-file stats in one read-back pass over exactly those
     * files, and binds them with the CAS. Returns the snapshot id, or
-    * -1 when the head already carries `note` (an idempotent replay).
+    * -1 when `note` already landed (an idempotent replay, see
+    * [[landed]]).
     */
   def commitStaged(spark: SparkSession, root: String,
       files: Seq[(String, Long)], schema: StructType,
       statCols: Seq[String], note: String): Int = {
-    val head = currentSnapshot(root)
-    if (head > 0 && note.nonEmpty && manifest(root, head).note == note) return -1
+    if (note.nonEmpty && landed(root, note)) return -1
     // staged files carry PHYSICAL names on a mapped table (the
     // streaming writer factory physicalizes its row schema)
     val parentMapped = storedSchemaOf(root).filter(ColumnMapping.hasMapping)
@@ -971,8 +979,11 @@ object LakeTable {
     val readSchema =
       if (parentMapped.isEmpty) schema
       else StructType(schema.fields.map(f => f.copy(name = phys(f.name))))
-    val df = spark.read.schema(readSchema).parquet(files.map(_._1): _*)
-    val entries = scanStatsPaths(spark, files.map(_._1), df, statCols.map(phys))
+    // the staged files' schema is all the stats pass needs: footers
+    // serve it without a frame, and its fallback scan builds its own
+    val entries = scanStatsPaths(spark, files.map(_._1),
+      org.apache.spark.sql.graftshim.DsV2Shim.fileSourceSchema(readSchema),
+      statCols.map(phys))
     val stagedSnap = casLoop(root) { parent =>
       var stored = schema
       if (parent > 0) {
@@ -1621,7 +1632,7 @@ object LakeTable {
   private def scanStats(spark: SparkSession, staging: String, df: DataFrame,
       statCols: Seq[String], bloomCols: Seq[String] = Nil,
       bucketOf: Option[(String, Int)] = None): Seq[FileEntry] =
-    scanStatsPaths(spark, Seq(staging), df, statCols, bloomCols, bucketOf)
+    scanStatsPaths(spark, Seq(staging), df.schema, statCols, bloomCols, bucketOf)
 
   /** Thrown (and caught locally) when a stat is not footer-expressible. */
   private object FooterBail extends scala.util.control.ControlThrowable
@@ -1795,17 +1806,17 @@ object LakeTable {
   }
 
   private def scanStatsPaths(spark: SparkSession, paths: Seq[String],
-      df: DataFrame, statCols: Seq[String],
+      schema: StructType, statCols: Seq[String],
       bloomCols: Seq[String] = Nil,
       bucketOf: Option[(String, Int)] = None): Seq[FileEntry] = {
     // blooms need real row values; everything else comes from footers
     if (bloomCols.isEmpty)
-      footerStats(paths, df.schema, statCols, bucketOf) match {
+      footerStats(paths, schema, statCols, bucketOf) match {
         case Some(es) => return es
         case None => ()
       }
     val kinds: Seq[(String, String, Column => Column)] = statCols.map { c =>
-      df.schema(c).dataType match {
+      schema(c).dataType match {
         case StringType => (c, "s", (x: Column) => x)
         case TimestampType => (c, "i", (x: Column) => unix_micros(x))
         case DateType => (c, "i", (x: Column) => datediff(x, to_date(lit("1970-01-01"))).cast("bigint"))
@@ -2294,13 +2305,21 @@ object LakeTable {
       if (mapped) ColumnMapping.toLogical(stored.get) else Map.empty
     def tagPath(d: DataFrame): DataFrame =
       if (pathTag) d.withColumn(FlatPathCol, col("_metadata.file_path")) else d
-    def rdParquet(paths: Seq[String]): DataFrame = stored match {
-      case None => tagPath(spark.read.parquet(paths: _*))
-      case Some(s) if !mapped => tagPath(spark.read.schema(s).parquet(paths: _*))
-      case Some(s) =>
-        val names = ColumnMapping.logicalClean(s).fieldNames.toIndexedSeq
-        tagPath(spark.read.schema(ColumnMapping.physicalSchema(s)).parquet(paths: _*))
-          .toDF((if (pathTag) names :+ FlatPathCol else names): _*)
+    // a snapshot with a schema reads straight from the manifest's file
+    // list, sized by `fileBytes` as the DSv2 scan is: no glob, listing
+    // or listing job at any file count. Only a schema-less manifest
+    // goes through Spark's reader, for its schema inference
+    def rdParquet(fs: Seq[FileEntry]): DataFrame = {
+      def fromManifest(s: StructType) = org.apache.spark.sql.graftshim.DsV2Shim
+        .manifestParquet(spark, s, fs.map(f => (f.path, fileBytes(f))))
+      stored match {
+        case None => tagPath(spark.read.parquet(fs.map(_.path): _*))
+        case Some(s) if !mapped => tagPath(fromManifest(s))
+        case Some(s) =>
+          val names = ColumnMapping.logicalClean(s).fieldNames.toIndexedSeq
+          tagPath(fromManifest(ColumnMapping.physicalSchema(s)))
+            .toDF((if (pathTag) names :+ FlatPathCol else names): _*)
+      }
     }
     // FORMAT DISPATCH: the avro data plane's container files decode
     // through their own reader and union with any parquet siblings;
@@ -2308,37 +2327,37 @@ object LakeTable {
     // presentation) is format-agnostic because it operates on the
     // decoded frame. Avro tables forbid evolution/mapping at commit
     // time, so the snapshot schema IS the file schema.
-    def rd(paths: Seq[String]): DataFrame = {
-      val (avro, pq) = paths.partition(_.endsWith(".avro"))
-      if (avro.isEmpty) rdParquet(paths)
+    def rd(fs: Seq[FileEntry]): DataFrame = {
+      val (avro, pq) = fs.partition(_.path.endsWith(".avro"))
+      if (avro.isEmpty) rdParquet(fs)
       else {
         require(!mapped,
           "avro data plane: column mapping unsupported on avro files")
         val s = stored.getOrElse(throw new IllegalStateException(
           "avro data plane: manifest lacks a schema"))
-        val av = AvroPlane.read(spark, avro, s)
+        val av = AvroPlane.read(spark, avro.map(_.path), s)
         if (pq.isEmpty) av else rdParquet(pq).unionByName(av)
       }
     }
     val needCoords = coords ||
       m.deletes.exists(d => d.kind == "pos" || d.kind == "dv")
-    def rdc(paths: Seq[String]): DataFrame =
-      if (!needCoords) rd(paths)
+    def rdc(fs: Seq[FileEntry]): DataFrame =
+      if (!needCoords) rd(fs)
       else {
         // row coordinates ride parquet's _metadata.row_index — an avro
         // container file has no equivalent, so the avro plane is
         // append-only w.r.t. positional/DV deletes by construction
-        require(!paths.exists(_.endsWith(".avro")),
+        require(!fs.exists(_.path.endsWith(".avro")),
           "avro data plane is append-only: positional/deletion-vector " +
             "deletes need parquet row indexes (use equality deletes)")
-        rd(paths)
+        rd(fs)
         .withColumn(CoordPath, col("_metadata.file_path"))
         .withColumn(CoordIdx, col("_metadata.row_index"))
       }
     def strip(d: DataFrame): DataFrame =
       if (needCoords && !coords) d.drop(CoordPath, CoordIdx) else d
     if (m.deletes.isEmpty)
-      strip(rdc(files.map(_.path)))
+      strip(rdc(files))
     else {
       // Anti-join side strategy: the manifest records every delete
       // file's row count, so the plan picks broadcast for
@@ -2359,7 +2378,7 @@ object LakeTable {
           val eqDels = dels.filter(_.kind == "eq")
           val dvDels = dels.filter(_.kind == "dv")
           val afterEq = eqDels.groupBy(_.keyCol).toSeq.sortBy(_._1)
-            .foldLeft(rdc(fs.map(_.path))) {
+            .foldLeft(rdc(fs)) {
               case (d, (kc, entries)) =>
                 // delete entries key by PHYSICAL name; the data frame
                 // presents logical names. Delete files hold exactly
@@ -3452,6 +3471,21 @@ object LakeTable {
     }
     None
   }
+
+  /** Notes of the maintenance commits [[AutoMaintain.afterCommit]]
+    * lands on top of a writer's commit; each re-lays content already
+    * in the table.
+    */
+  private val MaintenanceNotes = Set("autocompact", "compact-avro", "rewrite-manifests")
+
+  /** Is `note` the latest content commit of `root`? The replay ledger
+    * of every drain: a batch landed iff its note is the head's, once
+    * the maintenance commits above it are stepped over (walking as
+    * [[findContentNote]] does). A foreign append on top still hides
+    * the batch's note.
+    */
+  def landed(root: String, note: String): Boolean =
+    findContentNote(root)(n => Some(n).filterNot(MaintenanceNotes)).contains(note)
 
   def manifest(root: String, snap: Int): Manifest = {
     manifestResolutions.get()(0) += 1

@@ -3,14 +3,15 @@ package org.apache.spark.sql.graftshim
 import scala.collection.mutable.LinkedHashMap
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{classic, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.SparkCharVarcharUtils
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Predicate}
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.execution.PartitionedFileUtil
-import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, FilePartition, FileStatusWithMetadata, PartitionDirectory, PartitionSpec, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, FilePartition, FileStatusWithMetadata, HadoopFsRelation, LogicalRelation, PartitionDirectory, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetScanBuilder}
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
@@ -83,6 +84,28 @@ object DsV2Shim {
     */
   def fileStatus(p: String, len: Long): FileStatus =
     new FileStatus(len, false, 1, 128L << 20, 0L, new Path(p))
+
+  /** The data schema `spark.read.schema(s).parquet(..)` gives its
+    * relation: char/varchar refused as the reader refuses them, every
+    * field nullable.
+    */
+  def fileSourceSchema(s: StructType): StructType =
+    SparkCharVarcharUtils.failIfHasCharVarchar(s).asInstanceOf[StructType].asNullable
+
+  /** A parquet frame over exactly `files` (manifest path, size) under
+    * `schema`: a file-source relation over a [[ManifestFileIndex]],
+    * so the read never globs, lists or stats a path and never starts a
+    * listing job. Plans, `_metadata` columns and size statistics are
+    * those of `spark.read.schema(schema).parquet(paths)`.
+    */
+  def manifestParquet(spark: SparkSession, schema: StructType,
+      files: Seq[(String, Long)]): DataFrame = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val relation = HadoopFsRelation(new ManifestFileIndex(spark, files),
+      partitionSchema = new StructType(), dataSchema = fileSourceSchema(schema),
+      bucketSpec = None, fileFormat = new ParquetFileFormat, options = Map.empty)(session)
+    classic.Dataset.ofRows(session, LogicalRelation(relation))
+  }
 
   /** Materialize a (metadata-scale) frame as the InternalRow array a
     * DSv2 `LocalScan` serves — the executed plan's collect, so the

@@ -321,7 +321,7 @@ class GraftLakeTable(spark: SparkSession, val root: String, asOf: Option[Int],
       if (mapped) graft.lake.ColumnMapping.physicalSchema(stored)
       else graft.lake.ColumnMapping.logicalClean(stored)
     new DelegatedScanBuilder(spark, fileSchema, options,
-      m.files.map(f => (f.path, GraftScan.bytesOf(f))),
+      m.files.map(f => (f.path, LakeTable.fileBytes(f))),
       // footer aggregate answers bind by file column name — disabled
       // under a mapping rather than risking a logical/physical mixup,
       // on float→double-widened tables (parquet float footer bounds
@@ -612,11 +612,6 @@ private[graft] final case class TaggedPartition(tag: Int, inner: FilePartition,
 }
 
 object GraftScan {
-  private[sources] def bytesOf(f: FileEntry): Long =
-    if (f.bytes >= 0) f.bytes
-    else java.nio.file.Files.size(
-      java.nio.file.Paths.get(new java.net.URI(f.path).getPath))
-
   /** InternalRow accessor tag for an equality-delete key column. The
     * unsupported types are rejected at PLAN time with a pointer to
     * the paths that do handle them.
@@ -871,7 +866,7 @@ final class GraftScan(spark: SparkSession, root: String, m: Manifest,
     }
     new Statistics {
       override def sizeInBytes(): OptionalLong =
-        OptionalLong.of(math.max(1L, survivors.map(GraftScan.bytesOf).sum))
+        OptionalLong.of(math.max(1L, survivors.map(LakeTable.fileBytes).sum))
       override def numRows(): OptionalLong =
         OptionalLong.of(survivors.map(_.rows).sum)
       override def columnStats(): java.util.Map[
@@ -985,7 +980,7 @@ final class GraftScan(spark: SparkSession, root: String, m: Manifest,
         // tag (same delete spec, container-decoded row-wise)
         val (avroFs, pqFs) = fs.partition(_.path.endsWith(".avro"))
         val parts = DsV2Shim.filePartitions(scan,
-          pqFs.map(f => (f.path, GraftScan.bytesOf(f))))
+          pqFs.map(f => (f.path, LakeTable.fileBytes(f))))
         val shaped =
           if (g.spec.exists(s => s.posFiles.nonEmpty || s.dvFiles.nonEmpty ||
               s.outMap.isDefined))
@@ -1262,15 +1257,19 @@ final class GraftMicroBatchStream(spark: SparkSession, root: String,
       // and row partitions within one batch)
       val (avro, pq) = added.partition(_.path.endsWith(".avro"))
       val parts = DsV2Shim.filePartitions(template,
-          pq.map(f => (f.path, GraftScan.bytesOf(f))))
+          pq.map(f => (f.path, LakeTable.fileBytes(f))))
         .map(p => TaggedPartition(0, p, forceRow = avro.nonEmpty): InputPartition)
       (parts ++ avro.map(f => AvroPartition(0, f.path): InputPartition)).toArray
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
+  // `template` is fixed for the stream's life, so one factory (one
+  // conf broadcast) serves every micro-batch, as in [[GraftScan]]
+  private lazy val readerFactory: GraftReaderFactory =
     new GraftReaderFactory(template.createReaderFactory(), Array(None),
       template.readDataSchema)
+
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -1489,8 +1488,8 @@ private[graft] object LakeFormatWrite {
 
 /** v1 streaming sink: every micro-batch is ONE atomic lake commit,
   * made idempotent by recording the batch id in the manifest note — a
-  * replayed batch whose id is already the head commit is skipped (the
-  * recipe Iceberg's streaming writers use; same contract as
+  * replayed batch whose id is already the latest content commit is
+  * skipped (the recipe Iceberg's streaming writers use; same contract as
   * [[graft.streaming.LakeStream]], now behind
   * `writeStream.format("graft-lake")`).
   */
@@ -1498,8 +1497,7 @@ final class GraftStreamSink(spark: SparkSession, root: String,
     options: CaseInsensitiveStringMap) extends Sink {
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
-    val head = LakeTable.currentSnapshot(root)
-    if (head > 0 && LakeTable.manifest(root, head).note == s"batch-$batchId") return
+    if (LakeTable.landed(root, s"batch-$batchId")) return
     // re-plan the micro-batch frame as a batch frame (the plan's RDD
     // feeds the write; ForeachBatchSink does the same re-wrap).
     // Emptiness is decided from the staged write's entries inside the

@@ -67,17 +67,6 @@ object DedupStream {
     */
   val TauBp = 5000
 
-  /** Has `root`'s HEAD commit already recorded this batch? Batches
-    * are sequential (one foreachBatch at a time), so the head note is
-    * a complete replay ledger for the table it sits on — but ONLY for
-    * that table: results, base and bands are separate commits, and a
-    * crash between them must leave the un-committed ones still due.
-    */
-  private def hasBatch(root: String, id: Long): Boolean = {
-    val head = LakeTable.currentSnapshot(root)
-    head > 0 && LakeTable.manifest(root, head).note == s"batch-$id"
-  }
-
   /** ASYMMETRIC INDEX PROBE over a band FRAME — which of the batch
     * docs in `bands` LSH-collide with anything already indexed? The
     * corpus-scale side is the persisted band index, so it must be the
@@ -246,19 +235,21 @@ object DedupStream {
       .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(inDir)
     val q = in.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        // per-TABLE idempotence: a replay after a crash between the
+        // per-TABLE idempotence: batches are sequential, so each
+        // table's latest content note (`LakeTable.landed`) is its own
+        // replay ledger, and a replay after a crash between the
         // commits repairs exactly the missing ones — the dedup result
         // is reproducible because the bands table (the probe side)
         // lands last, so it never holds this batch's entries while
         // any commit is due
-        val resultsDone = hasBatch(resultsRoot, id)
-        val baseDone = hasBatch(baseRoot, id)
-        val bandsDone = hasBatch(bandsRoot, id)
+        val note = s"batch-$id"
+        val resultsDone = LakeTable.landed(resultsRoot, note)
+        val baseDone = LakeTable.landed(baseRoot, note)
+        val bandsDone = LakeTable.landed(bandsRoot, note)
         if (!(resultsDone && baseDone && bandsDone)) {
           val df = batch.toDF()
           val v = verdict(spark, df, bandsRoot, baseRoot)
           if (v.keepsAny) {
-            val note = s"batch-$id"
             // results keep the batch's columns, doc_id first
             val results = df.select(col("doc_id") +:
               df.columns.toSeq.filter(_ != "doc_id").map(col): _*)

@@ -15,9 +15,11 @@ import graft.writer.BlockWriter
   *
   * Exactly-once: `foreachBatch` is at-least-once under retries, so
   * the commit is made idempotent by recording the batch id in the
-  * manifest note — a replayed batch whose id is already the head
-  * commit is skipped. This is the same recipe Iceberg's own streaming
-  * writers use (commit metadata carries the checkpoint epoch).
+  * manifest note — a replayed batch whose id is already the latest
+  * content commit ([[LakeTable.landed]]: post-commit maintenance on
+  * top does not count) is skipped. This is the same recipe Iceberg's
+  * own streaming writers use (commit metadata carries the checkpoint
+  * epoch).
   */
 object LakeStream {
 
@@ -46,8 +48,7 @@ object LakeStream {
       else in
     val q = restored.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val head = LakeTable.currentSnapshot(root)
-        val done = head > 0 && LakeTable.manifest(root, head).note == s"batch-$id"
+        val done = LakeTable.landed(root, s"batch-$id")
         if (!done && !batch.isEmpty)
           // declared CHECK constraints gate this ingest path too —
           // same in-flight guard as the DSv2 sinks
@@ -84,8 +85,7 @@ object LakeStream {
       .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(inDir)
     val q = in.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val head = LakeTable.currentSnapshot(root)
-        val done = head > 0 && LakeTable.manifest(root, head).note == s"avro-batch-$id"
+        val done = LakeTable.landed(root, s"avro-batch-$id")
         if (!done && !batch.isEmpty)
           // declared CHECK constraints gate this ingest path exactly
           // like the parquet twin — the table's integrity contract
@@ -133,8 +133,7 @@ object LakeStream {
       .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(inDir)
     val q = in.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val head = LakeTable.currentSnapshot(root)
-        val done = head > 0 && LakeTable.manifest(root, head).note == s"cdc-batch-$id"
+        val done = LakeTable.landed(root, s"cdc-batch-$id")
         if (!done && !batch.isEmpty) {
           // latest-per-key WITHIN the batch (cross-batch latest-wins
           // falls out of the merge's delete-older-files rule)

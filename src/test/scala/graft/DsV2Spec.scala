@@ -427,6 +427,35 @@ class DsV2Spec extends AnyFunSuite {
     graft.util.Scratch.rmNow(root); graft.util.Scratch.rmNow(sink); graft.util.Scratch.rmNow(ckpt)
   }
 
+  test("micro-batch stream read: every micro-batch of one stream gets the same reader factory") {
+    import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
+    val root = graft.util.Scratch.dir("graft_v2mbf_")
+    val ckpt = graft.util.Scratch.dir("graft_v2mbf_ck_")
+    LakeTable.commit(spark, root, events.filter(col("event_id") % 2 === 0), cfg, Seq("event_id"))
+    val q = spark.readStream.format("graft-lake").load(root)
+      .writeStream.format("noop").option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(50))
+      .start()
+    try {
+      def lastScan(): (Long, MicroBatchScanExec) = {
+        q.processAllAvailable()
+        val exec = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime
+          .StreamingQueryWrapper].streamingQuery.lastExecution
+        val scans = exec.executedPlan.collect { case s: MicroBatchScanExec => s }
+        assert(scans.size === 1, exec.executedPlan.toString)
+        (exec.currentBatchId, scans.head)
+      }
+      val (b1, s1) = lastScan()
+      LakeTable.commit(spark, root, events.filter(col("event_id") % 2 === 1), cfg, Seq("event_id"))
+      val (b2, s2) = lastScan()
+      assert(b2 > b1)
+      assert(s2.stream eq s1.stream)
+      assert(s2.readerFactory eq s1.readerFactory)
+      assert(s1.readerFactory.isInstanceOf[graft.sources.GraftReaderFactory])
+    } finally q.stop()
+    graft.util.Scratch.rmNow(root); graft.util.Scratch.rmNow(ckpt)
+  }
+
   test("SQL catalog: CTAS, INSERT alignment, VERSION AS OF, join with a view") {
     spark.conf.set("spark.sql.catalog.graft",
       classOf[graft.sources.GraftCatalog].getName)

@@ -453,6 +453,61 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("streaming dedup replay: a batch landed under an autocompact is not re-committed") {
+    import graft.lake.LakeTable
+    import graft.operators.MinhashIndex
+    import graft.streaming.DedupStream
+    def ids(root: String) =
+      LakeTable.read(spark, root).filter(col("doc_id") > 10L)
+        .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    val (bandsRoot, baseRoot, resultsRoot, inDir, cfg, batchDf, survivors) =
+      smallDedupFixture("graft_ddac_")
+    val kept = col("doc_id").isin(survivors: _*)
+    // a crash after results and base landed batch 0 and post-commit
+    // compaction landed on top of each
+    LakeTable.commit(spark, resultsRoot, batchDf.filter(kept), cfg,
+      Seq("doc_id"), note = "batch-0")
+    LakeTable.commit(spark, baseRoot, MinhashIndex.baseOf(batchDf).filter(kept),
+      cfg, Seq("doc_id"), note = "batch-0")
+    Seq(resultsRoot, baseRoot).foreach { r =>
+      LakeTable.rewrite(spark, r, LakeTable.read(spark, r), cfg, Seq("doc_id"),
+        note = "autocompact")
+    }
+    DedupStream.runOnceDedupToLake(spark, inDir, resultsRoot, bandsRoot,
+      baseRoot, cfg)
+    assert(ids(resultsRoot) === survivors)
+    val shingled = survivors.filterNot(_ == 15L)
+    assert(ids(baseRoot) === shingled)
+    assert(ids(bandsRoot) === shingled.flatMap(Seq.fill(MinhashIndex.BANDS)(_)))
+    assert(LakeTable.manifest(resultsRoot, LakeTable.currentSnapshot(resultsRoot))
+      .note === "autocompact")
+  }
+
+  test("lake stream replay: a batch landed under an autocompact is not re-committed") {
+    import graft.lake.LakeTable
+    import graft.streaming.LakeStream
+    import graft.writer.BlockWriter
+    val ev = Tables.load(spark, sf, "events").select(col("event_id"), col("user_id"))
+    val inDir = stageBatches("graft_lsac_in_",
+      Seq(ev.filter(col("event_id") % 2 === 0), ev.filter(col("event_id") % 2 === 1)))
+    val root = graft.util.Scratch.dir("graft_lsac_")
+    val cfg = BlockWriter.Config("user_id", "event_id", maxRecordsPerFile = 4096)
+    // a crash after batch 0's commit and its post-commit compaction,
+    // before the stream's checkpoint recorded the batch
+    LakeTable.commit(spark, root, spark.read.parquet(s"$inDir/b00.parquet"), cfg,
+      Seq("event_id"), note = "batch-0")
+    LakeTable.rewrite(spark, root, LakeTable.read(spark, root), cfg, Seq("event_id"),
+      note = "autocompact")
+    LakeStream.runOnceToLake(spark, inDir, root, cfg, Seq("event_id"),
+      checkpoint = graft.util.Scratch.dir("graft_lsac_ck_"))
+    val ids = LakeTable.read(spark, root).select("event_id").collect()
+      .map(_.getLong(0)).sorted.toSeq
+    assert(ids === ev.select("event_id").collect().map(_.getLong(0)).sorted.toSeq)
+    assert((1 to LakeTable.currentSnapshot(root)).map(LakeTable.manifest(root, _).note) ===
+      Seq("batch-0", "autocompact", "batch-1"))
+    graft.util.Scratch.rmNow(root); graft.util.Scratch.rmNow(inDir)
+  }
+
   test("streaming dedup: a failing overlapped commit fails the drain, after its twin landed") {
     import graft.lake.LakeTable
     import graft.streaming.DedupStream
