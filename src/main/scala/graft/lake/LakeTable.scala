@@ -903,20 +903,21 @@ object LakeTable {
     // staged delta files carry PHYSICAL names (the delta writer
     // physicalizes its row schema) — stat keys and the type-lookup
     // frame must match
-    val basisMapped = Option(manifest(root, basis).schemaJson).filter(_.nonEmpty)
+    val basisSchema = Option(manifest(root, basis).schemaJson).filter(_.nonEmpty)
       .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-      .filter(ColumnMapping.hasMapping)
-    val physMap = basisMapped.map(ColumnMapping.toPhysical).getOrElse(Map.empty)
+    val physMap = basisSchema.filter(ColumnMapping.hasMapping)
+      .map(ColumnMapping.toPhysical).getOrElse(Map.empty)
     def phys(c: String) = physMap.getOrElse(c, c)
+    // the stats pass needs only the files' schema: the basis manifest
+    // stores it (physicalized, as the files carry it); a schema-less
+    // manifest (never mapped) learns it from a read
     val entries =
       if (dataFiles.isEmpty) Nil
-      else {
-        val base = read(spark, root, Some(basis))
-        val baseW =
-          if (basisMapped.isEmpty) base
-          else base.select(base.columns.toIndexedSeq.map(c => col(c).as(phys(c))): _*)
-        scanStatsPaths(spark, dataFiles.map(_._1), baseW.schema, statCols.map(phys))
-      }
+      else scanStatsPaths(spark, dataFiles.map(_._1), basisSchema match {
+        case Some(s) => org.apache.spark.sql.graftshim.DsV2Shim
+          .fileSourceSchema(ColumnMapping.physicalSchema(s))
+        case None => read(spark, root, Some(basis)).schema
+      }, statCols.map(phys))
     val referenced: Set[String] =
       if (deleteFiles.isEmpty) Set.empty
       else spark.read.parquet(deleteFiles.map(_._1): _*)
@@ -1454,8 +1455,7 @@ object LakeTable {
     val entries = listParquet(Paths.get(staging)).map { fp =>
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(fp.toUri),
-          new org.apache.hadoop.conf.Configuration()))
+          new org.apache.hadoop.fs.Path(fp.toUri), footerConf))
       val rows =
         try asScala(r.getFooter.getBlocks.iterator()).map(_.getRowCount).sum
         finally r.close()
@@ -1686,6 +1686,18 @@ object LakeTable {
     finally walk.close()
   }
 
+  /** The hadoop conf every footer read shares (commit stats, delete
+    * file row counts), built once: a new `Configuration` re-parses its
+    * default resources. Loaded eagerly, because `Configuration` parses
+    * them lazily on first get, which is not thread-safe, and the
+    * stats pool reads footers concurrently.
+    */
+  private lazy val footerConf: org.apache.hadoop.conf.Configuration = {
+    val c = new org.apache.hadoop.conf.Configuration()
+    c.get("fs.defaultFS"): Unit
+    c
+  }
+
   /** FOOTER-ONLY commit stats: per-file row counts, byte sizes and
     * min/max column stats read from the staged parquet files'
     * FOOTERS — zero data-page IO, the way production table formats
@@ -1722,14 +1734,9 @@ object LakeTable {
           else Paths.get(p0)
         if (Files.isDirectory(raw)) listParquet(raw) else Seq(raw)
       }
-      val conf = new org.apache.hadoop.conf.Configuration()
-      // force eager property loading: Configuration lazily parses its
-      // resource list on first get, which is not thread-safe — the
-      // pool below shares this instance across footer reads
-      conf.get("fs.defaultFS"): Unit
       def entryOf(fp: Path): FileEntry = {
         val r = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(fp.toUri), conf))
+          HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(fp.toUri), footerConf))
         val (rows, colStats) =
           try {
             val blocks = asScala(r.getFooter.getBlocks.iterator()).toSeq

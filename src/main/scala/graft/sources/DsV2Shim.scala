@@ -6,13 +6,14 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{classic, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.util.SparkCharVarcharUtils
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Predicate}
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.execution.PartitionedFileUtil
 import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, FilePartition, FileStatusWithMetadata, HadoopFsRelation, LogicalRelation, PartitionDirectory, PartitionSpec, PartitioningAwareFileIndex}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions}
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetScanBuilder}
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.sources.Filter
@@ -160,14 +161,16 @@ object DsV2Shim {
   def fieldRef(name: String): org.apache.spark.sql.connector.expressions.NamedReference =
     org.apache.spark.sql.connector.expressions.FieldReference.column(name)
 
-  // ---- executor-side parquet writing (the delta-write data path) ----
+  // ---- parquet writing outside a Spark write job (the delta-write
+  // tasks, the driver's local-relation writes) ----
 
-  /** The hadoop conf a task-side parquet writer needs, prepared
-    * driver-side from the session (the same keys Spark's own
+  /** The hadoop conf a parquet writer of `compression`-coded files
+    * needs, prepared from the session (the same keys Spark's own
     * `ParquetUtils.prepareWrite` pins before handing the conf to
     * write tasks).
     */
-  def writeConf(spark: SparkSession): org.apache.hadoop.conf.Configuration = {
+  def writeConf(spark: SparkSession, compression: String)
+      : org.apache.hadoop.conf.Configuration = {
     import org.apache.spark.sql.internal.SQLConf
     val sqlConf = spark.sessionState.conf
     val conf = spark.sessionState.newHadoopConf()
@@ -183,8 +186,45 @@ object DsV2Shim {
       sqlConf.getConf(SQLConf.PARQUET_REBASE_MODE_IN_WRITE).toString)
     conf.set(SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE.key,
       sqlConf.getConf(SQLConf.PARQUET_INT96_REBASE_MODE_IN_WRITE).toString)
-    conf.set(org.apache.parquet.hadoop.ParquetOutputFormat.COMPRESSION, "snappy")
+    // the codec name as a `compression` write option resolves it
+    // (short names, case-insensitive; an unknown one is refused)
+    conf.set(org.apache.parquet.hadoop.ParquetOutputFormat.COMPRESSION,
+      new ParquetOptions(Map(ParquetOptions.COMPRESSION -> compression), sqlConf)
+        .compressionCodecClassName)
     conf
+  }
+
+  /** The file extension Spark's parquet writer gives a file written
+    * under `conf`'s codec: `.snappy.parquet`, `.zstd.parquet`, or
+    * `.parquet` uncompressed.
+    */
+  def parquetExtension(conf: org.apache.hadoop.conf.Configuration): String =
+    org.apache.parquet.hadoop.metadata.CompressionCodecName
+      .fromConf(conf.get(org.apache.parquet.hadoop.ParquetOutputFormat.COMPRESSION))
+      .getExtension + ".parquet"
+
+  /** True when Spark's parquet writer takes `schema` as it is: every
+    * column type supported, no variant column (whose shredding the
+    * writer's job set-up decides).
+    */
+  def parquetWritable(schema: StructType): Boolean =
+    schema.forall(f => new ParquetFileFormat().supportDataType(f.dataType)) &&
+      !schema.existsRecursively(_.isInstanceOf[org.apache.spark.sql.types.VariantType])
+
+  /** The rows of `df` when the driver already holds them: its
+    * optimized plan is a local relation (`createDataFrame` of rows,
+    * `Seq.toDF`, and a project or filter over either, which
+    * `ConvertToLocalRelation` folds). None for every other frame; one
+    * with a leaf that is not a local relation is refused from its
+    * analyzed plan, so it pays no extra optimizer pass.
+    */
+  def localRows(df: DataFrame): Option[Seq[InternalRow]] = {
+    val qe = df.asInstanceOf[classic.Dataset[_]].queryExecution
+    if (!qe.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
+    else qe.optimizedPlan match {
+      case r: LocalRelation if !r.isStreaming => Some(r.data)
+      case _ => None
+    }
   }
 
   /** A task-side writer of [[InternalRow]]s to one parquet file —

@@ -136,7 +136,7 @@ final class GraftDeltaWrite(spark: SparkSession, root: String, basis: Int,
       // staged data files store PHYSICAL column names (column mapping)
       GraftDeltaWriterFactory(staging,
         LakeTable.physicalizeSchema(root, info.schema()),
-        new ConfBox(DsV2Shim.writeConf(spark)),
+        new ConfBox(DsV2Shim.writeConf(spark, "snappy")),
         // declared CHECK constraints gate every INSERTED row (MERGE
         // inserts and UPDATE reinsertions alike; deletes are exempt)
         CheckEnforce.bind(spark, root, info.schema()))
@@ -196,7 +196,7 @@ final class GraftStreamingWrite(spark: SparkSession, root: String,
     // staged data files store PHYSICAL column names (column mapping)
     GraftStreamWriterFactory(staging,
       LakeTable.physicalizeSchema(root, info.schema()),
-      new ConfBox(DsV2Shim.writeConf(spark)),
+      new ConfBox(DsV2Shim.writeConf(spark, "snappy")),
       CheckEnforce.bind(spark, root, info.schema()))
 
   override def commit(epochId: Long,

@@ -1,8 +1,13 @@
 package graft.writer
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, RowOrdering, SortOrder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftshim.DsV2Shim
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** The reference's write path, Spark-idiomatic (reference
   * main.go:48-87: BlockManager + FilesystemStorageAdapter — buffer
@@ -20,6 +25,13 @@ import org.apache.spark.sql.expressions.Window
   * `partitionBy` lays out `partition=<value>/` dirs. MaxAge has no
   * batch meaning — the streaming analog lives in
   * [[graft.streaming.StreamWriter]] (trigger interval = MaxAge).
+  *
+  * The one place the reference's shape survives literally is a frame
+  * the driver built from rows it holds (a local relation): the
+  * hash-bucket [[writeFlat]] buckets, sorts and flushes those rows on
+  * the driver, as the BlockManager does, and starts no Spark job —
+  * the same files the job path writes, without its scheduling,
+  * shuffle and stage round-trips.
   */
 object BlockWriter {
 
@@ -136,6 +148,12 @@ object BlockWriter {
     * A hash repartition would scatter each key range across every
     * task, giving every file near-full-span min/max stats and
     * defeating stats pruning.
+    *
+    * A hash-bucket parquet write of a frame whose optimized plan is a
+    * local relation takes the driver path ([[writeLocal]]): the same
+    * bucket dirs, files, row order and bytes, and no Spark job. The
+    * choice follows the plan's shape alone; range-clustered writes,
+    * other formats and every frame that reads a source keep the job.
     */
   def writeFlat(df: DataFrame, basePath: String, cfg: Config,
       rangeCluster: Boolean = false): Unit = {
@@ -165,6 +183,11 @@ object BlockWriter {
         .filter(_ < parallelism)
         .map(t => divisorFanout(parallelism, t))
         .getOrElse(parallelism)
+      val local = for {
+        rows <- DsV2Shim.localRows(df)
+        if cfg.format == "parquet" && DsV2Shim.parquetWritable(df.schema)
+        cols <- clusterOrdinals(df.schema, cfg)
+      } yield (rows, cols)
       def save(): Unit =
         df.withColumn(BucketDir, bucketExpr(cfg.partitionCol, parallelism))
           .repartition(tasks, col(cfg.partitionCol))
@@ -179,18 +202,82 @@ object BlockWriter {
           .partitionBy(BucketDir)
           .format(cfg.format)
           .save(basePath)
-      // a writeTasks-hinted write is DECLARED small and fully sized
-      // driver-side (file-bound fan-out above): AQE has nothing left
-      // to decide for it, but still materializes every exchange as a
-      // separate query stage — one extra scheduler round-trip plus a
-      // re-plan/codegen pause per shuffle, pure per-commit fixed cost
-      // on a staged write that runs tens of times per refresh. Plan
-      // it statically instead (conf-gated escape hatch below; at
-      // cluster scale the same argument holds — the hint is only ever
-      // passed for metadata-scale staged frames).
-      if (tasks < parallelism && smallWriteAqeOff(df)) withAqeOff(df)(save())
-      else save()
+      local match {
+        case Some((rows, cols)) =>
+          writeLocal(df, rows, cols, basePath, cfg, parallelism, tasks)
+        // a writeTasks-hinted write is DECLARED small and fully sized
+        // driver-side (file-bound fan-out above): AQE has nothing left
+        // to decide for it, but still materializes every exchange as a
+        // separate query stage — one extra scheduler round-trip plus a
+        // re-plan/codegen pause per shuffle, pure per-commit fixed cost
+        // on a staged write that runs tens of times per refresh. Plan
+        // it statically instead (conf-gated escape hatch below; at
+        // cluster scale the same argument holds — the hint is only ever
+        // passed for metadata-scale staged frames).
+        case None if tasks < parallelism && smallWriteAqeOff(df) =>
+          withAqeOff(df)(save())
+        case None => save()
+      }
     }
+  }
+
+  /** The ordinals of the (partition, key) columns when each resolves
+    * to one top-level column of an orderable type — the frames whose
+    * layout the driver path computes as the job path would. None keeps
+    * the job path, which raises its errors as before.
+    */
+  private def clusterOrdinals(schema: StructType, cfg: Config): Option[(Int, Int)] = {
+    val resolver = SQLConf.get.resolver
+    val Seq(p, k) = Seq(cfg.partitionCol, cfg.keyCol).map { c =>
+      val hits = schema.fields.indices.filter(i => resolver(schema(i).name, c))
+      if (hits.length == 1 && RowOrdering.isOrderable(schema(hits.head).dataType))
+        hits.head else -1
+    }
+    if (p < 0 || k < 0) None else Some((p, k))
+  }
+
+  /** The hash-bucket [[writeFlat]] of rows the driver already holds,
+    * with no Spark job: the layout the job path's shuffle, sort and
+    * file writer produce, computed here.
+    *   - bucket `pmod(murmur3(partitionCol), nBuckets)`, as
+    *     [[bucketExpr]] and `repartition(n, col)` assign it;
+    *   - within a bucket, a stable sort by (partitionCol, keyCol) in
+    *     Catalyst's ordering, a new file every `maxRecordsPerFile`
+    *     rows;
+    *   - each file written by Spark's own parquet writer under
+    *     `_graft_bucket=K/part-<task>-<job>.c<n><codec ext>`, named as
+    *     write task `K mod tasks` of one job names it.
+    * An empty frame leaves what the job path leaves: the directory
+    * and its `_SUCCESS` marker, no data file.
+    */
+  private def writeLocal(df: DataFrame, rows: Seq[InternalRow], cols: (Int, Int),
+      basePath: String, cfg: Config, nBuckets: Int, tasks: Int): Unit = {
+    val schema = df.schema
+    val (p, k) = cols
+    val pType = schema(p).dataType
+    val ordering = new InterpretedOrdering(Seq(p, k).map(i =>
+      SortOrder(BoundReference(i, schema(i).dataType, nullable = true), Ascending)))
+    val conf = DsV2Shim.writeConf(df.sparkSession, cfg.compression)
+    val ext = DsV2Shim.parquetExtension(conf)
+    val base = new org.apache.hadoop.fs.Path(basePath)
+    val fs = base.getFileSystem(conf)
+    if (fs.exists(base))
+      throw new org.apache.hadoop.fs.FileAlreadyExistsException(s"path $basePath already exists")
+    fs.mkdirs(base)
+    val job = java.util.UUID.randomUUID()
+    rows.groupBy(r => Math.floorMod(DsV2Shim.murmur3(r.get(p, pType), pType).toInt, nBuckets))
+      .foreach { case (b, rs) =>
+        val sorted = rs.sorted(ordering)
+        val files =
+          if (cfg.maxRecordsPerFile > 0) sorted.grouped(cfg.maxRecordsPerFile)
+          else Iterator(sorted)
+        files.zipWithIndex.foreach { case (chunk, n) =>
+          val w = DsV2Shim.newRowWriter(
+            f"$basePath/$BucketDir=$b/part-${b % tasks}%05d-$job.c$n%03d$ext", schema, conf)
+          try chunk.foreach(w.write) finally w.close()
+        }
+      }
+    fs.create(new org.apache.hadoop.fs.Path(base, "_SUCCESS")).close()
   }
 
   /** Conf gate for the static-plan small-write path (default on). */

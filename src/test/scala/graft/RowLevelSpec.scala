@@ -146,6 +146,71 @@ class RowLevelSpec extends AnyFunSuite {
     spark.sql(s"DROP TABLE $t")
   }
 
+  private def rootOf(t: String): String =
+    spark.sql(s"SELECT path FROM $t.files").head.getString(0)
+      .replaceFirst("^file:", "").replaceFirst("/data/c[^/]*/.*$", "")
+
+  test("UPDATE over outstanding equality deletes on a mapped table records the files' own stats") {
+    val s = spark
+    import s.implicits._
+    val (t, _) = catalogTable("rl_eqd")
+    val root = rootOf(t)
+    spark.sql(s"ALTER TABLE $t RENAME COLUMN day TO d")
+    LakeTable.deleteWhere(spark, root, "event_type", Seq("t3").toDF("event_type")): Unit
+    spark.sql(s"UPDATE $t SET value = -1 WHERE user_id = 5")
+    val m = LakeTable.manifest(root, LakeTable.currentSnapshot(root))
+    val added = m.files.filter(_.seq == m.snapshotId)
+    assert(added.nonEmpty, "the UPDATE staged data files")
+    added.foreach { f =>
+      // stats key by PHYSICAL name: `d` is stored as `day`
+      assert(f.stats.keySet === Set("event_id", "user_id", "event_type", "day"))
+      val file = spark.read.parquet(f.path)
+      val agg = file.agg(count(lit(1)), min("event_id"), max("event_id"),
+        min("user_id"), max("user_id"), min("day"), max("day"),
+        min("event_type"), max("event_type")).head
+      assert(f.rows === agg.getLong(0))
+      Seq("event_id", "user_id", "day").zipWithIndex.foreach { case (c, i) =>
+        assert((f.stats(c).min, f.stats(c).max) ===
+          ((agg.getLong(1 + 2 * i), agg.getLong(2 + 2 * i))), c)
+      }
+      assert((f.stats("event_type").minS, f.stats("event_type").maxS) ===
+        ((agg.getString(7), agg.getString(8))))
+    }
+    val got = spark.table(t)
+    assert(got.filter(col("event_type") === "t3").count() === 0)
+    assert(got.filter(col("user_id") === 5L && col("value") =!= -1.0).count() === 0)
+    assert(got.count() === 1600)
+    spark.sql(s"DROP TABLE $t")
+  }
+
+  test("a delta commit reads no delete file of its basis: the stats schema comes from the manifest") {
+    val s = spark
+    import s.implicits._
+    val root = graft.util.Scratch.dir("graft_rl_cdelta_")
+    LakeTable.commit(spark, root, events, cfg, Seq("event_id", "user_id"))
+    LakeTable.deleteWhere(spark, root, "event_type", Seq("t3").toDF("event_type")): Unit
+    val basis = LakeTable.currentSnapshot(root)
+    // a staged file as the delta write stages it
+    val staging = LakeTable.newStagingDir(root)
+    events.filter(col("event_id") < 10).withColumn("event_id", col("event_id") + 100000L)
+      .coalesce(1).write.mode("append").parquet(staging)
+    val dataFiles = java.nio.file.Files.list(java.nio.file.Paths.get(staging)).toArray
+      .map(_.toString).filter(_.endsWith(".parquet")).map(p => (p, 10L)).toSeq
+    // the delete file is unreadable while the commit runs: building
+    // the basis frame would fail on it
+    val del = java.nio.file.Paths.get(new java.net.URI(
+      LakeTable.manifest(root, basis).deletes.head.path).getPath)
+    val hidden = del.resolveSibling("hidden-" + del.getFileName)
+    java.nio.file.Files.move(del, hidden)
+    val snap =
+      try LakeTable.commitDelta(spark, root, basis, dataFiles, Nil, Seq("event_id", "user_id"))
+      finally java.nio.file.Files.move(hidden, del)
+    val added = LakeTable.manifest(root, snap).files.filter(_.seq == snap)
+    assert(added.map(f => (f.rows, f.stats("event_id").min, f.stats("event_id").max)) ===
+      Seq((10L, 100000L, 100009L)))
+    assert(LakeTable.read(spark, root).filter(col("event_id") >= 100000L).count() === 10L)
+  }
+
   test("ALTER TABLE ADD COLUMNS evolves metadata-only; old rows null-fill") {
     val (t, _) = catalogTable("rl_alter")
     val filesBefore = spark.sql(s"SELECT path FROM $t.files")

@@ -358,7 +358,9 @@ class StreamingSpec extends AnyFunSuite {
     val fx = dedupFixture("graft_ddjb_")
     // the budget covers the whole micro-batch: the stream's own work,
     // the gate's collected actions and the three commits (the
-    // helper-thread commit included)
+    // helper-thread commit included); the base and bands commits are
+    // local relations, written on the driver with no job. The budget
+    // was 12 before that; the test keeps its name as its stable id
     spark.catalog.clearCache()
     val jobs = jobsPerBatch {
       DedupStream.runOnceDedupToLake(spark, fx.inDir, fx.resultsRoot,
@@ -367,7 +369,7 @@ class StreamingSpec extends AnyFunSuite {
     info(s"Spark jobs per batch: ${jobs.toSeq.sorted.mkString(", ")}")
     assert(jobs.keySet === Set(0L, 1L, 2L), s"one entry per batch: $jobs")
     jobs.foreach { case (b, n) =>
-      assert(n <= 12, s"batch $b ran $n Spark jobs (budget 12): $jobs")
+      assert(n <= 5, s"batch $b ran $n Spark jobs (budget 5): $jobs")
     }
     // the gate caches nothing: no cached frame may outlive a drain
     // (a frame cached under the batch's cloned session is not released
