@@ -3,7 +3,7 @@ package graft.lake
 import org.apache.avro.Schema
 import org.apache.avro.file.{CodecFactory, DataFileStream, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 /** AVRO DATA FILES on the lake's data plane — the reference's actual
@@ -180,97 +180,5 @@ object AvroPlane {
       new GenericDatumReader[GenericRecord]())
     try Option(r.getMetaString("avro.codec")).getOrElse("null")
     finally r.close()
-  }
-
-  private def external(v: AnyRef, dt: DataType): Any = v match {
-    case null => null
-    case u: org.apache.avro.util.Utf8 => u.toString
-    case l: java.lang.Long if dt == TimestampType =>
-      java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
-        Math.floorDiv(l.longValue(), 1000000L),
-        Math.floorMod(l.longValue(), 1000000L) * 1000L))
-    case other => other
-  }
-
-  /** Decode the given container files into a DataFrame under the
-    * SNAPSHOT schema (the avro plane forbids evolution — enforced at
-    * both the append AND the evolve verbs — so the file schema and
-    * snapshot schema agree by construction). One [[DataFileReader]]
-    * per file, streamed — never materialized per file; files
-    * distribute across partitions so a many-file table decodes in
-    * parallel. The currently-open reader is tracked per task and
-    * closed by a TASK COMPLETION LISTENER, so an early-terminating
-    * consumer (LIMIT, take, a short-circuit join) cannot leak a file
-    * handle — exhaustion alone never fires for an abandoned iterator.
-    */
-  def read(spark: SparkSession, paths: Seq[String], schema: StructType): DataFrame =
-    decode(spark, paths, schema, withPath = false)
-
-  private def decode(spark: SparkSession, paths: Seq[String],
-      schema: StructType, withPath: Boolean): DataFrame = {
-    val out =
-      if (withPath) StructType(
-        StructField(PathCol, StringType, nullable = false) +: schema.fields)
-      else schema
-    val schemaJson = schema.json
-    val parts = math.max(1, math.min(paths.size,
-      spark.sessionState.conf.numShufflePartitions))
-    val ds = spark.createDataset(paths)(Encoders.STRING).repartition(parts)
-    ds.mapPartitions { it =>
-      val s = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-      val open = new java.util.concurrent.atomic.AtomicReference[java.io.Closeable]()
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit] { _ =>
-          Option(open.get()).foreach(r =>
-            try r.close() catch { case _: Exception => () })
-        })
-      it.flatMap { p =>
-        val rows = readFile(p, s, open)
-        if (withPath) rows.map(r => Row.fromSeq(p +: r.toSeq)) else rows
-      }
-    }(Encoders.row(out))
-  }
-
-  /** The file-attribution column [[readWithPath]] prepends. */
-  val PathCol = "_graft_avro_path"
-
-  /** [[read]] plus per-row file attribution (the avro analog of
-    * `input_file_name()`): each row carries the manifest-form path it
-    * was decoded from, so per-file accounting (ANALYZE sketches)
-    * works over avro files too.
-    */
-  def readWithPath(spark: SparkSession, paths: Seq[String],
-      schema: StructType): DataFrame =
-    decode(spark, paths, schema, withPath = true)
-
-  private def readFile(path: String, schema: StructType,
-      open: java.util.concurrent.atomic.AtomicReference[java.io.Closeable]): Iterator[Row] = {
-    val reader = new DataFileStream(LakeIO.open(path),
-      new GenericDatumReader[GenericRecord]())
-    open.set(reader)
-    // READER-SCHEMA RESOLUTION, Avro's own evolution rule: bind each
-    // requested column to the container's writer schema BY NAME (one
-    // position lookup per file, not per row); a column the file
-    // predates resolves to null — which is exactly what makes
-    // additive nullable evolution native to the format instead of a
-    // rewrite. Writer field ORDER never matters.
-    val ws = reader.getSchema
-    val pos: Array[Int] = schema.fields.map(f =>
-      Option(ws.getField(f.name)).map(_.pos()).getOrElse(-1))
-    var closed = false
-    new Iterator[Row] {
-      def hasNext: Boolean = {
-        val h = !closed && reader.hasNext
-        if (!h && !closed) { reader.close(); closed = true; open.set(null) }
-        h
-      }
-      def next(): Row = {
-        val rec = reader.next()
-        Row.fromSeq(schema.fields.indices.map { i =>
-          if (pos(i) < 0) null
-          else external(rec.get(pos(i)), schema.fields(i).dataType)
-        })
-      }
-    }
   }
 }

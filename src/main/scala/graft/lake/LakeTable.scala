@@ -35,10 +35,10 @@ import graft.writer.BlockWriter
   *    two concurrent appenders both land, in some serial order.
   *  - '''Merge-on-read DELETE''': a delete commit adds an equality-
   *    delete file (key values) to the manifest and rewrites NOTHING —
-  *    readers anti-join the delete keys (broadcast when the manifest
-  *    says they're small, shuffle anti-join for bulk deletes) against
-  *    data files committed before the delete (sequence-number
-  *    ordering, the Iceberg v2 rule). At 100 TB this is the
+  *    readers probe the delete keys inside the scan (a shuffle
+  *    anti-join for bulk deletes, whose size the manifest records)
+  *    against data files committed before the delete
+  *    (sequence-number ordering, the Iceberg v2 rule). At 100 TB this is the
   *    difference between a metadata-sized DELETE and a full rewrite;
   *    copy-on-write [[rewrite]] remains the compaction path that
   *    folds accumulated deletes back into data files.
@@ -112,7 +112,7 @@ object LakeTable {
       seq: Int = 0, bytes: Long = -1L, bucket: Int = -1)
   /** A data file's on-disk size: the manifest's record, or a stat on
     * the driver for an entry written before sizes were recorded. The
-    * one size source of both read paths ([[read]] and the DSv2 scan).
+    * one size source of the lake's scan.
     */
   private[graft] def fileBytes(f: FileEntry): Long =
     if (f.bytes >= 0) f.bytes
@@ -136,7 +136,14 @@ object LakeTable {
     */
   final case class Manifest(snapshotId: Int, parentId: Int, files: Seq[FileEntry],
       deletes: Seq[DeleteEntry] = Nil, note: String = "", schemaJson: String = "",
-      tsMs: Long = 0L, bucketCol: String = "", nBuckets: Int = 0)
+      tsMs: Long = 0L, bucketCol: String = "", nBuckets: Int = 0) {
+    /** The stored schema `schemaJson` records, parsed once; None on a
+      * manifest that records none.
+      */
+    lazy val schema: Option[StructType] =
+      if (schemaJson.isEmpty) None
+      else Some(DataType.fromJson(schemaJson).asInstanceOf[StructType])
+  }
 
   /** Bounded CAS retries for a commit racing other committers. */
   private val MaxCommitRetries = 20
@@ -606,9 +613,7 @@ object LakeTable {
     val mergeSnap = casLoop(root) { parent =>
       require(parent > 0, s"merge into empty table $root")
       val pm = manifest(root, parent)
-      val expect = pm.schemaJson
-      if (expect.nonEmpty) {
-        val expectS = DataType.fromJson(expect).asInstanceOf[StructType]
+      pm.schema.foreach { expectS =>
         if (ColumnMapping.hasMapping(expectS) || parentMapped.isDefined) {
           if (parentMapped.map(ColumnMapping.toPhysical).getOrElse(Map.empty) !=
               ColumnMapping.toPhysical(expectS))
@@ -627,10 +632,9 @@ object LakeTable {
           // where the table's column is not needs no re-stamp — the
           // rdd round-trips / .to() reconciles the callers paid just
           // to match nullability were pure overhead
-          val expectS = DataType.fromJson(expect).asInstanceOf[StructType]
           require(expectS.fields.map(f => (f.name, f.dataType)).toSeq ==
             updates.schema.fields.map(f => (f.name, f.dataType)).toSeq,
-            s"merge schema mismatch for $root: table has $expect, " +
+            s"merge schema mismatch for $root: table has ${pm.schemaJson}, " +
               s"updates have ${updates.schema.json}")
         }
       }
@@ -681,8 +685,7 @@ object LakeTable {
     val basis = currentSnapshot(root)
     require(basis > 0, s"overwriteWhere on empty table $root")
     val m = manifest(root, basis)
-    val stored = Option(m.schemaJson).filter(_.nonEmpty)
-      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
+    val stored = m.schema
     stored.foreach { st =>
       val live = ColumnMapping.logicalClean(st)
       require(live.fields.map(f => (f.name, f.dataType)).toSeq ==
@@ -718,7 +721,7 @@ object LakeTable {
     val newData =
       if (touched.isEmpty) df
       else {
-        val base = readFiles(spark, m, touched)
+        val base = readFiles(spark, root, m, touched)
         base.filter(!box(base)).unionByName(df)
       }
     val ndW =
@@ -903,8 +906,7 @@ object LakeTable {
     // staged delta files carry PHYSICAL names (the delta writer
     // physicalizes its row schema) — stat keys and the type-lookup
     // frame must match
-    val basisSchema = Option(manifest(root, basis).schemaJson).filter(_.nonEmpty)
-      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
+    val basisSchema = manifest(root, basis).schema
     val physMap = basisSchema.filter(ColumnMapping.hasMapping)
       .map(ColumnMapping.toPhysical).getOrElse(Map.empty)
     def phys(c: String) = physMap.getOrElse(c, c)
@@ -988,9 +990,7 @@ object LakeTable {
     val stagedSnap = casLoop(root) { parent =>
       var stored = schema
       if (parent > 0) {
-        val expectJson = manifest(root, parent).schemaJson
-        if (expectJson.nonEmpty) {
-          val expect = DataType.fromJson(expectJson).asInstanceOf[StructType]
+        manifest(root, parent).schema.foreach { expect =>
           if (ColumnMapping.hasMapping(expect) || parentMapped.isDefined) {
             if (parentMapped.map(ColumnMapping.toPhysical).getOrElse(Map.empty) !=
                 ColumnMapping.toPhysical(expect))
@@ -1130,9 +1130,7 @@ object LakeTable {
     val avroSnap = casLoop(root) { parent =>
       var stored = df.schema
       if (parent > 0) {
-        val expectJson = manifest(root, parent).schemaJson
-        if (expectJson.nonEmpty) {
-          val expect = DataType.fromJson(expectJson).asInstanceOf[StructType]
+        manifest(root, parent).schema.foreach { expect =>
           require(expect.fields.map(f => (f.name, f.dataType)).toSeq ==
               df.schema.fields.map(f => (f.name, f.dataType)).toSeq,
             s"avro append schema mismatch for $root: the avro plane is " +
@@ -1180,17 +1178,11 @@ object LakeTable {
       require(!ColumnMapping.hasMapping(s),
         s"avro data plane: column mapping unsupported on $root")
     }
-    // the delete-applied read may present the delete-key column first
-    // (anti-join using-column order); the container codec maps fields
-    // BY INDEX, so pin the manifest schema's order before writing
-    val stored = DataType.fromJson(manifest(root, head).schemaJson)
-      .asInstanceOf[StructType]
     // compaction preserves the DECLARED layout's clustering too —
     // consolidating a days-clustered ingest table must not shuffle
-    // its tight per-file time extents away
-    val df = avroClustered(spark, root,
-      read(spark, root, Some(head))
-        .select(stored.fieldNames.toIndexedSeq.map(col): _*),
+    // its tight per-file time extents away. The container codec maps
+    // fields BY INDEX; the read presents the manifest schema's order.
+    val df = avroClustered(spark, root, read(spark, root, Some(head)),
       parts = Some(parts))
     val entries = avroStage(spark, root, df, statCols)
     casLoop(root, replace = true) { parent =>
@@ -1217,7 +1209,7 @@ object LakeTable {
     casLoop(root) { parent =>
       require(parent > 0, s"schema evolution on empty table $root")
       val pm = manifest(root, parent)
-      val expect = DataType.fromJson(pm.schemaJson).asInstanceOf[StructType]
+      val expect = pm.schema.get
       val broken = expect.fields.filterNot(f =>
         newSchema.exists(g => g.name == f.name && g.dataType == f.dataType))
       require(broken.isEmpty,
@@ -1259,8 +1251,7 @@ object LakeTable {
   def storedSchemaOf(root: String): Option[StructType] = {
     val head = currentSnapshot(root)
     if (head == 0) None
-    else Option(manifest(root, head).schemaJson).filter(_.nonEmpty)
-      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
+    else manifest(root, head).schema
   }
 
   /** Rename a LOGICAL row schema to the table's PHYSICAL column names
@@ -1279,7 +1270,7 @@ object LakeTable {
     * by physical name, which rename/drop never alters).
     */
   /** The avro read path resolves columns BY NAME against each file's
-    * writer schema (AvroPlane.readFile — additive evolution rides
+    * writer schema (the scan's avro reader — additive evolution rides
     * that), which is exactly why the NON-additive verbs must reject a
     * table whose live snapshot holds avro files: after a RENAME the
     * old containers would silently null-fill the new name (their
@@ -1300,8 +1291,8 @@ object LakeTable {
       require(parent > 0, s"schema change on empty table $root")
       val pm = manifest(root, parent)
       requireNoAvro(pm, root, note)
-      require(pm.schemaJson.nonEmpty, s"table $root carries no schema")
-      val stored = DataType.fromJson(pm.schemaJson).asInstanceOf[StructType]
+      val stored = pm.schema.getOrElse(
+        throw new IllegalArgumentException(s"table $root carries no schema"))
       val next = f(pm, stored)
       val bCol =
         if (pm.bucketCol.isEmpty || voidBucketFor.contains(pm.bucketCol)) ""
@@ -1384,6 +1375,7 @@ object LakeTable {
     */
   val CoordPath = "_graft_file_path"
   val CoordIdx = "_graft_row_idx"
+  private val RowCoords = Seq(CoordPath, CoordIdx)
 
   /** A read decorated with each row's ([[CoordPath]], [[CoordIdx]])
     * delete coordinates — the address space [[deletePositions]]
@@ -1392,7 +1384,7 @@ object LakeTable {
   def withRowCoords(spark: SparkSession, root: String,
       asOf: Option[Int] = None): DataFrame = {
     val m = manifest(root, asOf.getOrElse(currentSnapshot(root)))
-    readFiles(spark, m, m.files, coords = true)
+    readFiles(spark, root, m, m.files, coords = RowCoords)
   }
 
   /** Delete payloads past this many rows per file fan out across
@@ -1403,11 +1395,12 @@ object LakeTable {
   val DeleteFileRowsKey = "spark.graft.lake.deleteFileRows"
   private val DefaultDeleteFileRows = 1L << 21
 
-  /** Read-side strategy pivot: delete files whose recorded row count
-    * (summed per applicable group) exceeds this are anti-joined with
-    * a SHUFFLE join instead of a broadcast — the manifest already
-    * knows the size, so a bulk delete never OOMs the driver/executors
-    * on a forced broadcast.
+  /** Read-side strategy pivot for [[read]] and its siblings: an
+    * equality-delete group (one key column, summed over the delete
+    * files that apply to a file set) whose recorded row count exceeds
+    * this is SHUFFLE anti-joined instead of probed from the per-reader
+    * hash set — the manifest already knows the size, so a bulk delete
+    * never has to fit in each executor. SQL reads always probe.
     */
   val BroadcastDeleteRowsKey = "spark.graft.lake.broadcastDeleteRows"
   private val DefaultBroadcastDeleteRows = 4L << 20
@@ -1562,9 +1555,7 @@ object LakeTable {
       // may have evolved the schema). Rewrites may reshape freely.
       var storedSchema = df.schema
       if (!replace && parent > 0) {
-        val expectJson = manifest(root, parent).schemaJson
-        if (expectJson.nonEmpty) {
-          val expect = DataType.fromJson(expectJson).asInstanceOf[StructType]
+        manifest(root, parent).schema.foreach { expect =>
           if (ColumnMapping.hasMapping(expect) || parentMapped.isDefined) {
             // the staged files were written under the mapping read
             // BEFORE staging — if a rename/drop landed in between,
@@ -1708,8 +1699,8 @@ object LakeTable {
     *
     * Returns None (caller falls back to the data-scan path) when any
     * needed stat is not footer-expressible: a stat column of a
-    * non-footer type, INT96 timestamps, missing/oversized binary
-    * stats, or an all-null column.
+    * non-footer type, INT96 timestamps or missing/oversized binary
+    * stats. An all-null column's stats are omitted for that file.
     */
   private def footerStats(paths: Seq[String], schema: StructType,
       statCols: Seq[String],
@@ -1741,45 +1732,49 @@ object LakeTable {
           try {
             val blocks = asScala(r.getFooter.getBlocks.iterator()).toSeq
             val nRows = blocks.map(_.getRowCount).sum
-            val stats = kinds.map { case (c, k) =>
+            val stats = kinds.flatMap { case (c, k) =>
               val chunks = blocks.map(b =>
                 asScala(b.getColumns.iterator())
                   .find(_.getPath.toDotString == c).getOrElse(bail()))
               val st = chunks.map(_.getStatistics)
               if (st.exists(s => s == null || s.isEmpty)) bail()
               val withVals = st.filter(_.hasNonNullValue)
-              if (withVals.isEmpty) bail()
-              val prim = chunks.head.getPrimitiveType
-              c -> (if (k == "s") {
-                if (prim.getPrimitiveTypeName != PrimitiveTypeName.BINARY) bail()
-                val mins = withVals.map(_.genericGetMin
-                  .asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8)
-                val maxs = withVals.map(_.genericGetMax
-                  .asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8)
-                // UTF-8 BINARY fold (what Spark's string ordering and
-                // parquet's UTF8 stat ordering both use) — Java's
-                // UTF-16 compareTo diverges on supplementary chars
-                ColStats(0, 0, "s", mins.reduce(utf8Min), maxs.reduce(utf8Max))
-              } else {
-                // INT96 timestamps carry no usable stats; micros only
-                // (the engine's sessions write TIMESTAMP_MICROS)
-                schema(c).dataType match {
-                  case TimestampType =>
-                    val ok = prim.getPrimitiveTypeName == PrimitiveTypeName.INT64 &&
-                      (prim.getLogicalTypeAnnotation match {
-                        case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                          t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS
-                        case _ => false
-                      })
-                    if (!ok) bail()
-                  case _ =>
-                    if (prim.getPrimitiveTypeName != PrimitiveTypeName.INT32 &&
-                      prim.getPrimitiveTypeName != PrimitiveTypeName.INT64) bail()
-                }
-                val mins = withVals.map(_.genericGetMin.asInstanceOf[Number].longValue)
-                val maxs = withVals.map(_.genericGetMax.asInstanceOf[Number].longValue)
-                ColStats(mins.min, maxs.max)
-              })
+              // an all-null column has no min/max: its stats entry is
+              // omitted, as the scan path omits it
+              if (withVals.isEmpty) None
+              else Some {
+                val prim = chunks.head.getPrimitiveType
+                c -> (if (k == "s") {
+                  if (prim.getPrimitiveTypeName != PrimitiveTypeName.BINARY) bail()
+                  val mins = withVals.map(_.genericGetMin
+                    .asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8)
+                  val maxs = withVals.map(_.genericGetMax
+                    .asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8)
+                  // UTF-8 BINARY fold (what Spark's string ordering and
+                  // parquet's UTF8 stat ordering both use) — Java's
+                  // UTF-16 compareTo diverges on supplementary chars
+                  ColStats(0, 0, "s", mins.reduce(utf8Min), maxs.reduce(utf8Max))
+                } else {
+                  // INT96 timestamps carry no usable stats; micros only
+                  // (the engine's sessions write TIMESTAMP_MICROS)
+                  schema(c).dataType match {
+                    case TimestampType =>
+                      val ok = prim.getPrimitiveTypeName == PrimitiveTypeName.INT64 &&
+                        (prim.getLogicalTypeAnnotation match {
+                          case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+                            t.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS
+                          case _ => false
+                        })
+                      if (!ok) bail()
+                    case _ =>
+                      if (prim.getPrimitiveTypeName != PrimitiveTypeName.INT32 &&
+                        prim.getPrimitiveTypeName != PrimitiveTypeName.INT64) bail()
+                  }
+                  val mins = withVals.map(_.genericGetMin.asInstanceOf[Number].longValue)
+                  val maxs = withVals.map(_.genericGetMax.asInstanceOf[Number].longValue)
+                  ColStats(mins.min, maxs.max)
+                })
+              }
             }.toMap
             (nRows, stats)
           } finally r.close()
@@ -1997,7 +1992,7 @@ object LakeTable {
     */
   def read(spark: SparkSession, root: String, asOf: Option[Int] = None): DataFrame = {
     val m = manifest(root, asOf.getOrElse(currentSnapshot(root)))
-    readFiles(spark, m, m.files)
+    readFiles(spark, root, m, m.files)
   }
 
   /** Largest snapshot committed at or before `tsMs` — AS OF TIMESTAMP
@@ -2036,13 +2031,10 @@ object LakeTable {
       // a delete-only / metadata-only range still needs the TABLE
       // schema — a schema-less emptyDataFrame would blow up a stream
       // consumer's select() over it
-      val schema =
-        if (m.schemaJson.nonEmpty)
-          ColumnMapping.logicalClean(
-            DataType.fromJson(m.schemaJson).asInstanceOf[StructType])
-        else readFiles(spark, m, m.files).schema
+      val schema = m.schema.map(ColumnMapping.logicalClean)
+        .getOrElse(readFiles(spark, root, m, m.files).schema)
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    } else readFiles(spark, m.copy(deletes = Nil), added)
+    } else readFiles(spark, root, m.copy(deletes = Nil), added)
   }
 
   /** CHANGE DATA FEED (the changelog read — Iceberg's
@@ -2099,10 +2091,10 @@ object LakeTable {
       DefaultBroadcastDeleteRows)
     def hinted(keys: DataFrame, rows: Long): DataFrame =
       if (rows <= bcastRows) broadcast(keys) else keys
-    // FLATTENED insert attribution: metadata-attributed commits whose
-    // added files are all parquet defer their insert frames here and
-    // are read in ONE scan per distinct snapshot schema after the
-    // walk, `_change_snap` resolved per row from a path→snapshot map
+    // FLATTENED insert attribution: metadata-attributed commits defer
+    // their insert frames here and are read in ONE scan per distinct
+    // snapshot schema after the walk, `_change_snap` resolved per row
+    // from the row's file coordinate through a path→snapshot map
     // literal (a single Literal node). The per-commit union used to
     // grow the plan by one parquet relation per commit in the range —
     // at stream cadence a long-lag refresh paid plan analysis linear
@@ -2136,8 +2128,8 @@ object LakeTable {
         // produced, which planned each side TWICE (4 MoR-resolved
         // reads, 2 replicate-and-subtract shuffles). NULL grouping
         // matches exceptAll's NULL-safe equality.
-        val pv = readFiles(spark, pre.get, pre.get.files)
-        val post = readFiles(spark, m, m.files)
+        val pv = readFiles(spark, root, pre.get, pre.get.files)
+        val post = readFiles(spark, root, m, m.files)
         val rowCols = post.columns.toIndexedSeq.map(col)
         val D = "_graft_cl_d"
         Seq(post.withColumn(D, lit(1L))
@@ -2151,20 +2143,13 @@ object LakeTable {
           .drop(D, "_graft_cl_rep"))
       } else {
         val added = m.files.filter(_.seq == s)
-        val ins =
-          if (added.isEmpty) Nil
-          else if (added.forall(f => !f.path.endsWith(".avro"))) {
-            flatIns += ((s, added, m)); Nil
-          } else Seq(tag(readFiles(spark, m.copy(deletes = Nil), added), "insert", s))
+        if (added.nonEmpty) flatIns += ((s, added, m))
         val delsAtS = m.deletes.filter(_.seq == s)
         val dels =
           if (delsAtS.isEmpty || pre.isEmpty) Nil
           else {
             val pm = pre.get
-            val stored =
-              if (pm.schemaJson.isEmpty) None
-              else Some(DataType.fromJson(pm.schemaJson).asInstanceOf[StructType])
-            val logicalName: Map[String, String] = stored
+            val logicalName: Map[String, String] = pm.schema
               .filter(ColumnMapping.hasMapping)
               .map(ColumnMapping.toLogical).getOrElse(Map.empty)
             val posD = delsAtS.filter(_.kind == "pos")
@@ -2173,14 +2158,14 @@ object LakeTable {
             val eqFrames = eqD.groupBy(_.keyCol).toSeq.sortBy(_._1).map {
               case (kc, entries) =>
                 val kcOut = logicalName.getOrElse(kc, kc)
-                readFiles(spark, pm, pm.files).join(
+                readFiles(spark, root, pm, pm.files).join(
                   hinted(spark.read.parquet(entries.map(_.path): _*)
                     .toDF(kcOut).distinct(), entries.map(_.rows).sum),
                   Seq(kcOut), "left_semi")
             }
             val posFrames =
               if (posD.isEmpty) Nil
-              else Seq(readFiles(spark, pm, pm.files, coords = true).join(
+              else Seq(readFiles(spark, root, pm, pm.files, coords = RowCoords).join(
                 hinted(spark.read.parquet(posD.map(_.path): _*)
                   .select(col(CoordPath), col(CoordIdx)).distinct(),
                   posD.map(_.rows).sum),
@@ -2201,7 +2186,7 @@ object LakeTable {
                     org.apache.spark.sql.types.StructField(DvCol,
                       org.apache.spark.sql.types.BinaryType))))
                 import org.apache.spark.sql.graftshim.DsV2Shim
-                Seq(readFiles(spark, pm, pm.files, coords = true)
+                Seq(readFiles(spark, root, pm, pm.files, coords = RowCoords)
                   .join(broadcast(dvDf), Seq(CoordPath), "inner")
                   .filter(DsV2Shim.exprColumn(graft.functions.DvContains(
                     DsV2Shim.columnExpr(col(DvCol)),
@@ -2210,7 +2195,7 @@ object LakeTable {
               }
             (eqFrames ++ posFrames ++ dvFrames).map(tag(_, "delete", s))
           }
-        ins ++ dels
+        dels
       }
     }
     // one scan per distinct snapshot schema over the deferred insert
@@ -2225,27 +2210,24 @@ object LakeTable {
       groups.values.toSeq.map { g =>
         if (g.size == 1) {
           val (s, added, m) = g.head
-          tag(readFiles(spark, m.copy(deletes = Nil), added), "insert", s)
+          tag(readFiles(spark, root, m.copy(deletes = Nil), added), "insert", s)
         } else {
           val m0 = g.head._3
           val files = g.flatMap(_._2).toSeq
           val snapOf: Map[String, Int] =
             g.flatMap { case (s, fs, _) => fs.map(f => f.path -> s) }.toMap
-          readFiles(spark, m0.copy(deletes = Nil), files, pathTag = true)
+          readFiles(spark, root, m0.copy(deletes = Nil), files, coords = Seq(CoordPath))
             .withColumn(CT, lit("insert"))
-            .withColumn(CS, element_at(typedLit(snapOf), col(FlatPathCol)))
-            .drop(FlatPathCol)
+            .withColumn(CS, element_at(typedLit(snapOf), col(CoordPath)))
+            .drop(CoordPath)
         }
       }
     }
     val allFrames = insFrames ++ frames
     if (allFrames.isEmpty) {
       val m = manifest(root, toSnap)
-      val schema =
-        if (m.schemaJson.nonEmpty)
-          ColumnMapping.logicalClean(
-            DataType.fromJson(m.schemaJson).asInstanceOf[StructType])
-        else readFiles(spark, m, m.files).schema
+      val schema = m.schema.map(ColumnMapping.logicalClean)
+        .getOrElse(readFiles(spark, root, m, m.files).schema)
       tag(spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), schema), "insert", 0)
         .limit(0)
@@ -2287,146 +2269,56 @@ object LakeTable {
       "n_rows", "n_added_rows", "n_delete_files", "n_delete_keys", "note")
   }
 
-  /** Transient column carrying `_metadata.file_path` through a
-    * flattened changelog scan ([[changelogRead]]'s multi-commit
-    * insert attribution) — stamped at the scan, consumed by the
-    * path→snapshot lookup, never part of a table schema.
+  /** The merge-on-read frame of `files` under manifest `m`: one DSv2
+    * scan of the lake relation pinned at `m` with exactly these files
+    * ([[graft.sources.GraftLakeTable.pinned]]), whose readers apply
+    * every positional, deletion-vector and equality delete — the one
+    * read path SQL takes too. The frame presents the snapshot's
+    * logical names in stored order, every field nullable; a manifest
+    * without a schema infers one from its files. The one plan choice:
+    * an equality-delete group (one key column) the readers should not
+    * hold — more recorded rows than [[BroadcastDeleteRowsKey]] allows,
+    * or a key type they have no probe for — comes off the pinned
+    * manifest and is shuffle anti-joined instead, per set of files it
+    * applies to. `coords` names the row-coordinate metadata columns
+    * ([[CoordPath]], [[CoordIdx]]) to append.
     */
-  private val FlatPathCol = "_graft_cl_path"
-
-  private def readFiles(spark: SparkSession, m: Manifest,
-      files: Seq[FileEntry], coords: Boolean = false,
-      pathTag: Boolean = false): DataFrame = {
-    // read under the SNAPSHOT's schema (the Iceberg rule): files
-    // committed before an additive evolution lack the new columns
-    // and null-fill them — no mergeSchema footer sweep needed. A
-    // renamed/dropped table reads files under their PHYSICAL names
-    // (what every file stores, immutably) and presents the snapshot's
-    // LOGICAL names — rename/drop are pure metadata.
-    val stored: Option[StructType] =
-      if (m.schemaJson.isEmpty) None
-      else Some(DataType.fromJson(m.schemaJson).asInstanceOf[StructType])
-    val mapped = stored.exists(ColumnMapping.hasMapping)
-    // physical → logical, for presenting equality-delete key columns
-    val logicalName: Map[String, String] =
-      if (mapped) ColumnMapping.toLogical(stored.get) else Map.empty
-    def tagPath(d: DataFrame): DataFrame =
-      if (pathTag) d.withColumn(FlatPathCol, col("_metadata.file_path")) else d
-    // a snapshot with a schema reads straight from the manifest's file
-    // list, sized by `fileBytes` as the DSv2 scan is: no glob, listing
-    // or listing job at any file count. Only a schema-less manifest
-    // goes through Spark's reader, for its schema inference
-    def rdParquet(fs: Seq[FileEntry]): DataFrame = {
-      def fromManifest(s: StructType) = org.apache.spark.sql.graftshim.DsV2Shim
-        .manifestParquet(spark, s, fs.map(f => (f.path, fileBytes(f))))
-      stored match {
-        case None => tagPath(spark.read.parquet(fs.map(_.path): _*))
-        case Some(s) if !mapped => tagPath(fromManifest(s))
-        case Some(s) =>
-          val names = ColumnMapping.logicalClean(s).fieldNames.toIndexedSeq
-          tagPath(fromManifest(ColumnMapping.physicalSchema(s)))
-            .toDF((if (pathTag) names :+ FlatPathCol else names): _*)
+  private def readFiles(spark: SparkSession, root: String, m: Manifest,
+      files: Seq[FileEntry], coords: Seq[String] = Nil): DataFrame = {
+    // an avro container has no parquet row index for a positional or
+    // deletion-vector delete to address
+    require(!coords.contains(CoordIdx) || !files.exists(_.path.endsWith(".avro")),
+      "avro data plane is append-only: positional/deletion-vector " +
+        "deletes need parquet row indexes (use equality deletes)")
+    val stored = m.schema.getOrElse(spark.read.parquet(files.map(_.path): _*).schema)
+    val bcastRows = confLong(spark, BroadcastDeleteRowsKey,
+      DefaultBroadcastDeleteRows)
+    def joined(f: FileEntry): Seq[(String, Seq[DeleteEntry])] =
+      m.deletes.filter(d => d.kind == "eq" && d.seq > f.seq).groupBy(_.keyCol)
+        .toSeq.sortBy(_._1).filter { case (kc, es) =>
+          es.map(_.rows).sum > bcastRows ||
+            ColumnMapping.fieldByPhysical(stored, kc)
+              .exists(k => graft.sources.GraftScan.probeTag(k.dataType).isEmpty)
+        }
+    val groups = files.groupBy(joined).toSeq.sortBy(_._2.head.path)
+    // delete files key by PHYSICAL name and hold exactly one column;
+    // the frame presents logical names
+    val logicalName = ColumnMapping.toLogical(stored)
+    (if (groups.isEmpty) Seq(Nil -> files) else groups).map { case (joins, fs) =>
+      val off = joins.flatMap(_._2).toSet
+      val rel = org.apache.spark.sql.graftshim.DsV2Shim.tableFrame(spark,
+        graft.sources.GraftLakeTable.pinned(spark, root,
+          m.copy(files = fs, deletes = m.deletes.filterNot(off)), stored))
+      joins.foldLeft(
+        if (coords.isEmpty) rel else rel.select(col("*") +: coords.map(col): _*)) {
+        case (d, (kc, es)) =>
+          // a join condition, not a using column: the frame keeps the
+          // stored field order
+          val k = logicalName.getOrElse(kc, kc)
+          val keys = spark.read.parquet(es.map(_.path): _*).toDF(k).distinct()
+          d.join(keys, d(k) === keys(k), "left_anti")
       }
-    }
-    // FORMAT DISPATCH: the avro data plane's container files decode
-    // through their own reader and union with any parquet siblings;
-    // everything downstream (equality-delete masks, schema
-    // presentation) is format-agnostic because it operates on the
-    // decoded frame. Avro tables forbid evolution/mapping at commit
-    // time, so the snapshot schema IS the file schema.
-    def rd(fs: Seq[FileEntry]): DataFrame = {
-      val (avro, pq) = fs.partition(_.path.endsWith(".avro"))
-      if (avro.isEmpty) rdParquet(fs)
-      else {
-        require(!mapped,
-          "avro data plane: column mapping unsupported on avro files")
-        val s = stored.getOrElse(throw new IllegalStateException(
-          "avro data plane: manifest lacks a schema"))
-        val av = AvroPlane.read(spark, avro.map(_.path), s)
-        if (pq.isEmpty) av else rdParquet(pq).unionByName(av)
-      }
-    }
-    val needCoords = coords ||
-      m.deletes.exists(d => d.kind == "pos" || d.kind == "dv")
-    def rdc(fs: Seq[FileEntry]): DataFrame =
-      if (!needCoords) rd(fs)
-      else {
-        // row coordinates ride parquet's _metadata.row_index — an avro
-        // container file has no equivalent, so the avro plane is
-        // append-only w.r.t. positional/DV deletes by construction
-        require(!fs.exists(_.path.endsWith(".avro")),
-          "avro data plane is append-only: positional/deletion-vector " +
-            "deletes need parquet row indexes (use equality deletes)")
-        rd(fs)
-        .withColumn(CoordPath, col("_metadata.file_path"))
-        .withColumn(CoordIdx, col("_metadata.row_index"))
-      }
-    def strip(d: DataFrame): DataFrame =
-      if (needCoords && !coords) d.drop(CoordPath, CoordIdx) else d
-    if (m.deletes.isEmpty)
-      strip(rdc(files))
-    else {
-      // Anti-join side strategy: the manifest records every delete
-      // file's row count, so the plan picks broadcast for
-      // takedown-sized deletes and a shuffle anti-join for bulk ones
-      // — a 1%-of-100-TB delete must never ride a broadcast.
-      val bcastRows = confLong(spark, BroadcastDeleteRowsKey,
-        DefaultBroadcastDeleteRows)
-      def hinted(keys: DataFrame, rows: Long): DataFrame =
-        if (rows <= bcastRows) broadcast(keys) else keys
-      // Group data files by the set of deletes that apply (in
-      // practice: by data seq) — each group is one scan with its
-      // anti-joins; commits are few, so the union is short.
-      files.groupBy(f => m.deletes.filter(_.seq > f.seq).map(_.path))
-        .toSeq.sortBy(_._2.head.path)
-        .map { case (_, fs) =>
-          val dels = m.deletes.filter(_.seq > fs.head.seq)
-          val posDels = dels.filter(_.kind == "pos")
-          val eqDels = dels.filter(_.kind == "eq")
-          val dvDels = dels.filter(_.kind == "dv")
-          val afterEq = eqDels.groupBy(_.keyCol).toSeq.sortBy(_._1)
-            .foldLeft(rdc(fs)) {
-              case (d, (kc, entries)) =>
-                // delete entries key by PHYSICAL name; the data frame
-                // presents logical names. Delete files hold exactly
-                // one column, so the rename is positional.
-                val kcOut = logicalName.getOrElse(kc, kc)
-                d.join(hinted(spark.read.parquet(entries.map(_.path): _*)
-                  .toDF(kcOut).distinct(), entries.map(_.rows).sum),
-                  Seq(kcOut), "left_anti")
-            }
-          // positional masks anti-join on the row coordinates
-          val afterPos =
-            if (posDels.isEmpty) afterEq
-            else afterEq.join(
-              hinted(spark.read.parquet(posDels.map(_.path): _*)
-                .select(col(CoordPath), col(CoordIdx)).distinct(),
-                posDels.map(_.rows).sum),
-              Seq(CoordPath, CoordIdx), "left_anti")
-          // deletion-vector masks: O(files)-row broadcast of (path,
-          // bitmap bytes) + an O(1) codegen'd bit probe per row — the
-          // payload and the join side stay file-count-bounded however
-          // many rows the vectors delete
-          strip(if (dvDels.isEmpty) afterPos
-          else {
-            val dv = mergedDv(dvDels.map(_.path))
-            val dvDf = spark.createDataFrame(
-              java.util.Arrays.asList(dv.map { case (p, b) =>
-                org.apache.spark.sql.Row(p, b) }: _*),
-              StructType(Seq(
-                org.apache.spark.sql.types.StructField(CoordPath, StringType),
-                org.apache.spark.sql.types.StructField(DvCol,
-                  org.apache.spark.sql.types.BinaryType))))
-            import org.apache.spark.sql.graftshim.DsV2Shim
-            afterPos.join(broadcast(dvDf), Seq(CoordPath), "left")
-              .filter(col(DvCol).isNull ||
-                !DsV2Shim.exprColumn(graft.functions.DvContains(
-                  DsV2Shim.columnExpr(col(DvCol)),
-                  DsV2Shim.columnExpr(col(CoordIdx)))))
-              .drop(DvCol)
-          })
-        }.reduce(_ unionByName _)
-    }
+    }.reduce(_ unionByName _)
   }
 
   /** Stats-pruned read: keep only files whose [min,max] stat ranges
@@ -2473,8 +2365,7 @@ object LakeTable {
     val m = manifest(root, asOf.getOrElse(currentSnapshot(root)))
     // per-file stats key by PHYSICAL name; callers predicate on
     // logical names
-    val physMap = Option(m.schemaJson).filter(_.nonEmpty)
-      .map(j => DataType.fromJson(j).asInstanceOf[StructType])
+    val physMap = m.schema
       .filter(ColumnMapping.hasMapping)
       .map(ColumnMapping.toPhysical).getOrElse(Map.empty)
     def phys(c: String) = physMap.getOrElse(c, c)
@@ -2485,7 +2376,7 @@ object LakeTable {
     // empty survivor set: read the full list (filters still yield 0
     // rows) — avoids the no-path read edge while staying correct.
     val chosen = if (keep.nonEmpty) keep else m.files
-    val base = readFiles(spark, m, chosen)
+    val base = readFiles(spark, root, m, chosen)
     val schema = base.schema
     def rowExpr(c: String): Column = schema(c).dataType match {
       case TimestampType => unix_micros(col(c))
@@ -3116,9 +3007,11 @@ object LakeTable {
             explode(array(cols.map(c =>
               struct(lit(c).as("c"), col(c).cast("string").as("v"))): _*)).as("kv"))
             .select(col("__f"), col("kv.c").as("c"), col("kv.v").as("v"))
-        // the avro plane's files melt through their own decoder with
-        // per-row path attribution (no input_file_name there); both
-        // formats land in the same (file, column) sketch shuffle
+        // the avro plane's files melt through the lake scan, each row
+        // attributed by its file coordinate (no input_file_name
+        // there; avro tables forbid column mapping, so the scan's
+        // names are the files'); both formats land in the same
+        // (file, column) sketch shuffle
         val (avroPaths, pqPaths) = newPaths.partition(_.endsWith(".avro"))
         val frames = Seq(
           if (pqPaths.isEmpty) None else {
@@ -3128,11 +3021,12 @@ object LakeTable {
             Some(melt(raw, input_file_name(), cols))
           },
           if (avroPaths.isEmpty) None else {
-            val stored = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-            val raw = AvroPlane.readWithPath(s, avroPaths, stored)
-            val cols = sketchable(stored)
+            val avro = avroPaths.toSet
+            val raw = readFiles(s, root, m.copy(deletes = Nil),
+              m.files.filter(f => avro(f.path)), coords = Seq(CoordPath))
+            val cols = sketchable(m.schema.get)
             require(cols.nonEmpty, s"no sketchable columns in $root")
-            Some(melt(raw, col(AvroPlane.PathCol), cols))
+            Some(melt(raw, col(CoordPath), cols))
           }).flatten
         val melted = frames.reduce(_.unionByName(_))
         // one shuffle keyed (file, column); the bitmap is a ≤1024-int
@@ -3181,8 +3075,7 @@ object LakeTable {
            else numericCols(
              s.read.option("mergeSchema", "true").parquet(pqPaths: _*).schema)) ++
           (if (avroPaths.isEmpty) Nil
-           else numericCols(
-             DataType.fromJson(m.schemaJson).asInstanceOf[StructType]))
+           else numericCols(m.schema.get))
         ).distinct
         // NaN/±Infinity never enter bounds or bins: the sidecar
         // serializes doubles as bare JSON literals, and a NaN token

@@ -200,12 +200,8 @@ object ClusterIndex {
       val fresh = merged.join(labels0.select(col("doc_id")), Seq("doc_id"), "left_anti")
       // align nullability to the MANIFEST schema (joins mark both
       // sides nullable; the merge validator is strict by design)
-      val mSchema = {
-        val j = LakeTable.manifest(root, LakeTable.currentSnapshot(root)).schemaJson
-        if (j.isEmpty) labels0.schema
-        else org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-      }
+      val mSchema = LakeTable.manifest(root, LakeTable.currentSnapshot(root)).schema
+        .getOrElse(labels0.schema)
       val upserts = s.createDataFrame(
         changed.unionByName(fresh).toDF(mSchema.fieldNames.toIndexedSeq: _*).rdd,
         mSchema)

@@ -161,7 +161,7 @@ case class MvRewrite(spark: SparkSession) extends Rule[LogicalPlan]
         yield (lc ++ rc ++ cond.toSeq.flatMap(splitConjunctivePredicates),
           lr ++ rr, ls ++ rs2)
     case r: DataSourceV2Relation => r.table match {
-      case t: GraftLakeTable if !t.isChangeFeed =>
+      case t: GraftLakeTable if t.mvRewritable =>
         Some((Nil, Seq(r), Map.empty))
       case _ => None
     }

@@ -226,12 +226,12 @@ object Lake {
       |ORDER BY snap, event_type""".stripMargin
 
   // --- lake_delete_bulk: BULK merge-on-read delete — the scale path
-  // of lake_delete_mor. A takedown-sized delete broadcasts its keys;
-  // a bulk DELETE (here 75% of the table; 1% of 100 TB in
-  // production) must not: the write fans the key files out across
+  // of lake_delete_mor. A takedown-sized delete's keys are probed in
+  // each reader; a bulk DELETE (here 75% of the table; 1% of 100 TB in
+  // production) must not be: the write fans the key files out across
   // tasks (no single-writer funnel) and the read side picks a SHUFFLE
   // anti-join because the manifest's recorded delete rows exceed the
-  // broadcast budget — LakeSpec pins both plan shapes. Thresholds are
+  // reader budget — LakeSpec pins both plan shapes. Thresholds are
   // forced down here so sf-scale data exercises the exact plan a
   // 100-TB delete takes; they are restored before returning (the
   // strategy is baked into the DataFrame at construction).

@@ -8,12 +8,14 @@ import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Un
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.util.SparkCharVarcharUtils
+import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
 import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Predicate}
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.execution.PartitionedFileUtil
-import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, FilePartition, FileStatusWithMetadata, HadoopFsRelation, LogicalRelation, PartitionDirectory, PartitionSpec, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, FilePartition, FileStatusWithMetadata, PartitionDirectory, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetScanBuilder}
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.sources.Filter
@@ -93,20 +95,12 @@ object DsV2Shim {
   def fileSourceSchema(s: StructType): StructType =
     SparkCharVarcharUtils.failIfHasCharVarchar(s).asInstanceOf[StructType].asNullable
 
-  /** A parquet frame over exactly `files` (manifest path, size) under
-    * `schema`: a file-source relation over a [[ManifestFileIndex]],
-    * so the read never globs, lists or stats a path and never starts a
-    * listing job. Plans, `_metadata` columns and size statistics are
-    * those of `spark.read.schema(schema).parquet(paths)`.
+  /** The frame of a DSv2 `table`'s relation, as a catalog or
+    * `format(..)` read of it resolves.
     */
-  def manifestParquet(spark: SparkSession, schema: StructType,
-      files: Seq[(String, Long)]): DataFrame = {
-    val session = spark.asInstanceOf[classic.SparkSession]
-    val relation = HadoopFsRelation(new ManifestFileIndex(spark, files),
-      partitionSchema = new StructType(), dataSchema = fileSourceSchema(schema),
-      bucketSpec = None, fileFormat = new ParquetFileFormat, options = Map.empty)(session)
-    classic.Dataset.ofRows(session, LogicalRelation(relation))
-  }
+  def tableFrame(spark: SparkSession, table: Table): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      DataSourceV2Relation.create(table, None, None, CaseInsensitiveStringMap.empty()))
 
   /** Materialize a (metadata-scale) frame as the InternalRow array a
     * DSv2 `LocalScan` serves — the executed plan's collect, so the

@@ -57,8 +57,10 @@ import graft.writer.BlockWriter
   * parquet row-index column, so they are exact even under split files
   * and row-group skipping. The per-executor set is bounded by the
   * table's delete debt; [[LakeTable.foldDeletes]] is the maintenance
-  * bound, and the Scala path ([[LakeTable.read]]) remains the
-  * shuffle-anti-join alternative for bulk-delete analytics.
+  * bound. This scan is the lake's one read path: [[LakeTable.read]]
+  * and its siblings build their frames over it
+  * ([[GraftLakeTable.pinned]]), taking only a bulk or unprobeable
+  * equality-delete group off the readers into a shuffle anti-join.
   *
   * Batch write: `df.write.format("graft-lake").mode("append"|
   * "overwrite").save(root)` — the official `V1Write` bridge onto the
@@ -178,10 +180,24 @@ object GraftLakeTable {
     * metadata + drop tombstones.
     */
   private[sources] def storedSchemaAt(spark: SparkSession, root: String,
-      snap: Int): StructType = {
-    val m = LakeTable.manifest(root, snap)
-    if (m.schemaJson.nonEmpty) DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
-    else LakeTable.read(spark, root, Some(snap)).schema
+      snap: Int): StructType =
+    LakeTable.manifest(root, snap).schema
+      .getOrElse(LakeTable.read(spark, root, Some(snap)).schema)
+
+  /** The relation `LakeTable.read` and its siblings scan: the table
+    * pinned at manifest `m` — whose file list may be a subset of its
+    * snapshot's, as an incremental or changelog read takes — under the
+    * stored schema `stored`. It presents the snapshot's logical names
+    * with every field nullable (the schema of a file-source read,
+    * which compaction stores back), and the MV rewrite never matches it.
+    */
+  private[graft] def pinned(spark: SparkSession, root: String, m: Manifest,
+      stored: StructType): GraftLakeTable = {
+    val mapped = graft.lake.ColumnMapping.hasMapping(stored)
+    new GraftLakeTable(spark, root, Some(m.snapshotId),
+      Some(DsV2Shim.fileSourceSchema(
+        if (mapped) graft.lake.ColumnMapping.logicalClean(stored) else stored)),
+      pinnedAt = Some((m, stored)))
   }
 
   /** The user-visible schema (tombstones out, mapping metadata
@@ -231,7 +247,10 @@ object GraftLakeTable {
   * table schema exists yet for Spark to check against).
   */
 class GraftLakeTable(spark: SparkSession, val root: String, asOf: Option[Int],
-    providedSchema: Option[StructType], changeFeed: Boolean = false)
+    providedSchema: Option[StructType], changeFeed: Boolean = false,
+    // ([[GraftLakeTable.pinned]]) the manifest and stored schema to
+    // scan instead of resolving `root` at `asOf`
+    pinnedAt: Option[(Manifest, StructType)] = None)
     extends Table
     with SupportsRead with SupportsWrite with SupportsDelete
     with SupportsMetadataColumns with SupportsRowLevelOperations {
@@ -240,10 +259,13 @@ class GraftLakeTable(spark: SparkSession, val root: String, asOf: Option[Int],
 
   private[graft] def resolvedSnapshot: Int = snap
 
-  /** Change-feed relations read a COMMIT RANGE, not table state —
-    * the MV query-rewrite rule must never match one.
+  /** Only a catalog or `format("graft-lake")` read of the table's
+    * state may be answered from an MV. A change feed reads a COMMIT
+    * RANGE, and a pinned relation is the engine's own read (an MV
+    * refresh among them), possibly of a file subset — the MV
+    * query-rewrite rule must never match either.
     */
-  private[graft] def isChangeFeed: Boolean = changeFeed
+  private[graft] def mvRewritable: Boolean = !changeFeed && pinnedAt.isEmpty
 
   /** A CREATE TABLE'd-but-never-written table's declared schema
     * (meta/_schema.json), for loads that bypass the catalog (the
@@ -295,9 +317,9 @@ class GraftLakeTable(spark: SparkSession, val root: String, asOf: Option[Int],
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     // snap == 0: a CREATE TABLE'd-but-never-written table reads as
     // zero rows of its declared schema
-    val m =
+    val m = pinnedAt.map(_._1).getOrElse(
       if (snap > 0) LakeTable.manifest(root, snap)
-      else LakeTable.Manifest(0, 0, Nil, schemaJson = schema().json)
+      else LakeTable.Manifest(0, 0, Nil, schemaJson = schema().json))
     // FORMAT DISPATCH: parquet files ride the delegated vectorized
     // scan; `.avro` files (the reference's own ingest format,
     // main.go:47-54) plan as their own partition set under the SAME
@@ -306,9 +328,9 @@ class GraftLakeTable(spark: SparkSession, val root: String, asOf: Option[Int],
     // (positional/DV deletes, UPDATE/MERGE delta writes) stays
     // parquet-only and rejects avro with a pointed error at plan time.
     val hasAvro = m.files.exists(_.path.endsWith(".avro"))
-    val stored =
+    val stored = pinnedAt.map(_._2).getOrElse(
       if (snap > 0) GraftLakeTable.storedSchemaAt(spark, root, snap)
-      else schema()
+      else schema())
     val mapped = graft.lake.ColumnMapping.hasMapping(stored)
     // unreachable by construction (appendAvro/rewriteAvro reject
     // mapped tables; evolution verbs reject avro tables) — but a
@@ -612,24 +634,28 @@ private[graft] final case class TaggedPartition(tag: Int, inner: FilePartition,
 }
 
 object GraftScan {
-  /** InternalRow accessor tag for an equality-delete key column. The
-    * unsupported types are rejected at PLAN time with a pointer to
-    * the paths that do handle them.
+  /** InternalRow accessor tag for an equality-delete key column, None
+    * for a type the readers have no probe for. [[LakeTable.read]]
+    * anti-joins such a group; the scan rejects it at PLAN time with a
+    * pointer to the paths that do handle it.
     */
-  private[sources] def keyTag(dt: DataType): String = dt match {
-    case LongType => "long"
-    case IntegerType | DateType => "int"
-    case ShortType => "short"
-    case ByteType => "byte"
-    case StringType => "string"
-    case DoubleType => "double"
-    case FloatType => "float"
-    case BooleanType => "bool"
-    case other => throw new UnsupportedOperationException(
-      s"graft-lake format read cannot apply equality deletes keyed on " +
-        s"$other; read via LakeTable.read or fold the deletes " +
-        "(LakeTable.foldDeletes) first")
+  private[graft] def probeTag(dt: DataType): Option[String] = dt match {
+    case LongType => Some("long")
+    case IntegerType | DateType => Some("int")
+    case ShortType => Some("short")
+    case ByteType => Some("byte")
+    case StringType => Some("string")
+    case DoubleType => Some("double")
+    case FloatType => Some("float")
+    case BooleanType => Some("bool")
+    case _ => None
   }
+
+  private[sources] def keyTag(dt: DataType): String =
+    probeTag(dt).getOrElse(throw new UnsupportedOperationException(
+      s"graft-lake format read cannot apply equality deletes keyed on " +
+        s"$dt; read via LakeTable.read or fold the deletes " +
+        "(LakeTable.foldDeletes) first"))
 }
 
 /** The lake's DSv2 scan: ONE logical `BatchScan` whose partitions are

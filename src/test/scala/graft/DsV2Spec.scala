@@ -1886,14 +1886,18 @@ class DsV2Spec extends AnyFunSuite {
     assert(st.filter(col("g") === "k3").isEmpty)
   }
 
-  /** Every lake-table root the optimized plan scans. */
+  /** Every lake-table root the optimized plan scans the state of. A
+    * compensated rewrite's delta side is a relation pinned to the
+    * appended files only (`LakeTable.incrementalRead`), not a scan of
+    * the table: it is left out.
+    */
   private def mvScanRoots(sql: String): Seq[String] =
     spark.sql(sql).queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
-        r.table.asInstanceOf[graft.sources.GraftLakeTable].root
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => r
       case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-        s.relation.table.asInstanceOf[graft.sources.GraftLakeTable].root
-    }
+        s.relation
+    }.map(_.table.asInstanceOf[graft.sources.GraftLakeTable]).filter(_.mvRewritable)
+      .map(_.root)
 
   /** Rename the head manifest's data files out of the way (hide) or
     * back (restore) — the "this plan never scanned the table" pin.

@@ -618,6 +618,8 @@ class MinhashIndexSpec extends AnyFunSuite {
             fs.location.rootPaths.map(_.toString).mkString(",")
           case other => other.toString
         }
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
+        r.table.name()
     }
     // corpus side comes from the index artifact's parquet files
     // (base + bands = at least 2 index reads)
@@ -655,6 +657,8 @@ class MinhashIndexSpec extends AnyFunSuite {
             fs.location.rootPaths.map(_.toString).mkString(",")
           case other => other.toString
         }
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
+        r.table.name()
     }
     // the probe reads the committed codebook + cells tables …
     assert(rels.count(_.contains("graft_ivfidx_")) >= 2,
@@ -690,6 +694,8 @@ class MinhashIndexSpec extends AnyFunSuite {
             fs.location.rootPaths.map(_.toString).mkString(",")
           case other => other.toString
         }
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
+        r.table.name()
     }
     // the probe reads the committed label table …
     assert(rels.exists(_.contains("graft_ccidx_")),

@@ -196,17 +196,27 @@ class LocalWriteSpec extends AnyFunSuite {
 
   test("job budget: a commit of a local frame whose stats footers serve runs no Spark job") {
     val cfg = BlockWriter.Config("g", "k", 4)
-    // no all-null stat column in any file: the null-key bucket's file
-    // would send the stats to the scan fallback, a job of its own
-    val rs = rows(60).filterNot(_.isNullAt(0))
-    val Seq(localJobs, frameJobs) = Seq(localFrame(rs, schema), jobFrame(rs, schema)).map { df =>
-      val root = graft.util.Scratch.dir("graft_lw_jobs_")
-      SparkJobs.during(spark)(LakeTable.commit(spark, root, df, cfg, Seq("g", "k")): Unit).size
-    }
+    // the null-key bucket's file holds only null `g` values: its
+    // footers serve every stat but `g`'s, which is omitted
+    val rs = rows(60)
+    val roots = Seq.fill(3)(graft.util.Scratch.dir("graft_lw_jobs_"))
+    val Seq(localJobs, frameJobs) =
+      Seq(localFrame(rs, schema), jobFrame(rs, schema)).zip(roots).map { case (df, root) =>
+        SparkJobs.during(spark)(LakeTable.commit(spark, root, df, cfg, Seq("g", "k")): Unit).size
+      }
     info(s"local commit $localJobs jobs, non-local commit $frameJobs jobs")
     assert(localJobs === 0)
     // the non-local frame keeps the shuffle and write jobs
     assert(frameJobs >= 2)
+    // the stats scan (a bloom column forces it) records the same
+    // entries, bloom aside
+    LakeTable.commit(spark, roots(2), localFrame(rs, schema), cfg, Seq("g", "k"),
+      bloomCols = Seq("k"))
+    def entries(root: String) = LakeTable.manifest(root, 1).files.map(f =>
+      (f.bucket, f.rows, f.stats.map { case (c, st) => c -> st.copy(bloom = "") },
+        f.bytes)).toSet
+    assert(entries(roots(0)).exists(e => !e._3.contains("g")), "an all-null g file")
+    assert(entries(roots(0)) === entries(roots(2)))
   }
 }
 

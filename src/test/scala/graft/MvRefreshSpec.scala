@@ -210,7 +210,7 @@ class MvRefreshSpec extends AnyFunSuite {
     // (fold, targeted, full) Spark jobs per refresh, as measured on
     // local[4] with 4 shuffle partitions; the bitmap domain check rides
     // the state jobs, so both laws run the same jobs
-    val budgets = Map("bitmap" -> ((11, 9, 17)), "hll" -> ((11, 9, 17)))
+    val budgets = Map("bitmap" -> ((11, 9, 11)), "hll" -> ((11, 9, 11)))
     val measured = Seq(bitmap, hll).map { k =>
       val (fact, mv) = fixture(k, "graft_mvr_jobs_", groups = 2)
       def refreshJobs(mode: String): Int = {
