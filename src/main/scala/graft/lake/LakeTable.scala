@@ -1396,11 +1396,12 @@ object LakeTable {
   private val DefaultDeleteFileRows = 1L << 21
 
   /** Read-side strategy pivot for [[read]] and its siblings: an
-    * equality-delete group (one key column, summed over the delete
-    * files that apply to a file set) whose recorded row count exceeds
-    * this is SHUFFLE anti-joined instead of probed from the per-reader
-    * hash set — the manifest already knows the size, so a bulk delete
-    * never has to fit in each executor. SQL reads always probe.
+    * equality-delete group (one key column) or the positional group,
+    * summed over the delete files that apply to a file set, whose
+    * recorded row count exceeds this is SHUFFLE anti-joined instead of
+    * probed from the per-reader hash set — the manifest already knows
+    * the size, so a bulk delete never has to fit in each executor. SQL
+    * reads always probe.
     */
   val BroadcastDeleteRowsKey = "spark.graft.lake.broadcastDeleteRows"
   private val DefaultBroadcastDeleteRows = 4L << 20
@@ -2276,12 +2277,14 @@ object LakeTable {
     * read path SQL takes too. The frame presents the snapshot's
     * logical names in stored order, every field nullable; a manifest
     * without a schema infers one from its files. The one plan choice:
-    * an equality-delete group (one key column) the readers should not
-    * hold — more recorded rows than [[BroadcastDeleteRowsKey]] allows,
-    * or a key type they have no probe for — comes off the pinned
-    * manifest and is shuffle anti-joined instead, per set of files it
-    * applies to. `coords` names the row-coordinate metadata columns
-    * ([[CoordPath]], [[CoordIdx]]) to append.
+    * a delete group the readers should not hold — an equality group
+    * (one key column) or the positional group with more recorded rows
+    * than [[BroadcastDeleteRowsKey]] allows, or an equality group whose
+    * key type they have no probe for — comes off the pinned manifest
+    * and is shuffle anti-joined instead (positional deletes on the row
+    * coordinates), per set of files it applies to. `coords` names the
+    * row-coordinate metadata columns ([[CoordPath]], [[CoordIdx]]) to
+    * append.
     */
   private def readFiles(spark: SparkSession, root: String, m: Manifest,
       files: Seq[FileEntry], coords: Seq[String] = Nil): DataFrame = {
@@ -2293,12 +2296,14 @@ object LakeTable {
     val stored = m.schema.getOrElse(spark.read.parquet(files.map(_.path): _*).schema)
     val bcastRows = confLong(spark, BroadcastDeleteRowsKey,
       DefaultBroadcastDeleteRows)
-    def joined(f: FileEntry): Seq[(String, Seq[DeleteEntry])] =
-      m.deletes.filter(d => d.kind == "eq" && d.seq > f.seq).groupBy(_.keyCol)
-        .toSeq.sortBy(_._1).filter { case (kc, es) =>
-          es.map(_.rows).sum > bcastRows ||
-            ColumnMapping.fieldByPhysical(stored, kc)
-              .exists(k => graft.sources.GraftScan.probeTag(k.dataType).isEmpty)
+    // (kind, key column) → the delete files of each group to anti-join
+    def joined(f: FileEntry): Seq[((String, String), Seq[DeleteEntry])] =
+      m.deletes.filter(d => d.kind != "dv" && d.seq > f.seq)
+        .groupBy(d => (d.kind, d.keyCol)).toSeq.sortBy(_._1).filter {
+          case ((kind, kc), es) =>
+            es.map(_.rows).sum > bcastRows || (kind == "eq" &&
+              ColumnMapping.fieldByPhysical(stored, kc)
+                .exists(k => graft.sources.GraftScan.probeTag(k.dataType).isEmpty))
         }
     val groups = files.groupBy(joined).toSeq.sortBy(_._2.head.path)
     // delete files key by PHYSICAL name and hold exactly one column;
@@ -2309,15 +2314,22 @@ object LakeTable {
       val rel = org.apache.spark.sql.graftshim.DsV2Shim.tableFrame(spark,
         graft.sources.GraftLakeTable.pinned(spark, root,
           m.copy(files = fs, deletes = m.deletes.filterNot(off)), stored))
-      joins.foldLeft(
-        if (coords.isEmpty) rel else rel.select(col("*") +: coords.map(col): _*)) {
-        case (d, (kc, es)) =>
-          // a join condition, not a using column: the frame keeps the
-          // stored field order
+      // a positional anti-join needs both coordinates on its side
+      val cs = if (joins.exists(_._1._1 == "pos")) RowCoords else coords
+      val masked = joins.foldLeft(
+        if (cs.isEmpty) rel else rel.select(col("*") +: cs.map(col): _*)) {
+        // join conditions, not using columns: the frame keeps the
+        // stored field order
+        case (d, (("pos", _), es)) =>
+          val keys = spark.read.parquet(es.map(_.path): _*)
+            .select(col(CoordPath), col(CoordIdx)).distinct()
+          d.join(keys, RowCoords.map(c => d(c) === keys(c)).reduce(_ && _), "left_anti")
+        case (d, ((_, kc), es)) =>
           val k = logicalName.getOrElse(kc, kc)
           val keys = spark.read.parquet(es.map(_.path): _*).toDF(k).distinct()
           d.join(keys, d(k) === keys(k), "left_anti")
       }
+      if (cs eq coords) masked else masked.drop(cs.filterNot(coords.contains): _*)
     }.reduce(_ unionByName _)
   }
 

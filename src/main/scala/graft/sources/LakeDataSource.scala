@@ -59,8 +59,9 @@ import graft.writer.BlockWriter
   * table's delete debt; [[LakeTable.foldDeletes]] is the maintenance
   * bound. This scan is the lake's one read path: [[LakeTable.read]]
   * and its siblings build their frames over it
-  * ([[GraftLakeTable.pinned]]), taking only a bulk or unprobeable
-  * equality-delete group off the readers into a shuffle anti-join.
+  * ([[GraftLakeTable.pinned]]), taking only a bulk equality or
+  * positional group, or an unprobeable equality group, off the
+  * readers into a shuffle anti-join.
   *
   * Batch write: `df.write.format("graft-lake").mode("append"|
   * "overwrite").save(root)` — the official `V1Write` bridge onto the
@@ -189,16 +190,13 @@ object GraftLakeTable {
     * snapshot's, as an incremental or changelog read takes — under the
     * stored schema `stored`. It presents the snapshot's logical names
     * with every field nullable (the schema of a file-source read,
-    * which compaction stores back), and the MV rewrite never matches it.
+    * which compaction stores back), its scan packs file splits as a
+    * file-source read does (no bucket layout report), and the MV
+    * rewrite never matches it.
     */
   private[graft] def pinned(spark: SparkSession, root: String, m: Manifest,
-      stored: StructType): GraftLakeTable = {
-    val mapped = graft.lake.ColumnMapping.hasMapping(stored)
-    new GraftLakeTable(spark, root, Some(m.snapshotId),
-      Some(DsV2Shim.fileSourceSchema(
-        if (mapped) graft.lake.ColumnMapping.logicalClean(stored) else stored)),
-      pinnedAt = Some((m, stored)))
-  }
+      stored: StructType): GraftLakeTable =
+    new GraftLakeTable(spark, root, None, None, pinnedAt = Some((m, stored)))
 
   /** The user-visible schema (tombstones out, mapping metadata
     * stripped — plan schemas never carry graft keys).
@@ -255,7 +253,10 @@ class GraftLakeTable(spark: SparkSession, val root: String, asOf: Option[Int],
     with SupportsRead with SupportsWrite with SupportsDelete
     with SupportsMetadataColumns with SupportsRowLevelOperations {
 
-  private lazy val snap: Int = asOf.getOrElse(LakeTable.currentSnapshot(root))
+  // the snapshot this table reads: a pinned manifest's, else `asOf`'s
+  private val at: Option[Int] = pinnedAt.map(_._1.snapshotId).orElse(asOf)
+
+  private lazy val snap: Int = at.getOrElse(LakeTable.currentSnapshot(root))
 
   private[graft] def resolvedSnapshot: Int = snap
 
@@ -280,13 +281,20 @@ class GraftLakeTable(spark: SparkSession, val root: String, asOf: Option[Int],
   }
 
   override def name(): String =
-    s"graft-lake.`$root`" + asOf.map(v => s" VERSION AS OF $v").getOrElse("")
+    s"graft-lake.`$root`" + at.map(v => s" VERSION AS OF $v").getOrElse("")
 
-  override def schema(): StructType =
-    providedSchema.orElse(declaredSchema).getOrElse {
-      require(snap > 0, s"graft-lake table $root has no committed snapshots")
-      GraftLakeTable.schemaOf(spark, root, snap)
-    }
+  override def schema(): StructType = pinnedAt match {
+    case Some((_, stored)) =>
+      DsV2Shim.fileSourceSchema(
+        if (graft.lake.ColumnMapping.hasMapping(stored))
+          graft.lake.ColumnMapping.logicalClean(stored)
+        else stored)
+    case None =>
+      providedSchema.orElse(declaredSchema).getOrElse {
+        require(snap > 0, s"graft-lake table $root has no committed snapshots")
+        GraftLakeTable.schemaOf(spark, root, snap)
+      }
+  }
 
   override def capabilities(): java.util.Set[TableCapability] = {
     val caps = java.util.EnumSet.of(
@@ -314,12 +322,17 @@ class GraftLakeTable(spark: SparkSession, val root: String, asOf: Option[Int],
     caps
   }
 
+  /** The manifest this table scans and its stored schema. snap == 0:
+    * a CREATE TABLE'd-but-never-written table reads as zero rows of its
+    * declared schema.
+    */
+  private def scanned: (Manifest, StructType) = pinnedAt.getOrElse(
+    if (snap > 0)
+      (LakeTable.manifest(root, snap), GraftLakeTable.storedSchemaAt(spark, root, snap))
+    else (LakeTable.Manifest(0, 0, Nil, schemaJson = schema().json), schema()))
+
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    // snap == 0: a CREATE TABLE'd-but-never-written table reads as
-    // zero rows of its declared schema
-    val m = pinnedAt.map(_._1).getOrElse(
-      if (snap > 0) LakeTable.manifest(root, snap)
-      else LakeTable.Manifest(0, 0, Nil, schemaJson = schema().json))
+    val (m, stored) = scanned
     // FORMAT DISPATCH: parquet files ride the delegated vectorized
     // scan; `.avro` files (the reference's own ingest format,
     // main.go:47-54) plan as their own partition set under the SAME
@@ -328,9 +341,6 @@ class GraftLakeTable(spark: SparkSession, val root: String, asOf: Option[Int],
     // (positional/DV deletes, UPDATE/MERGE delta writes) stays
     // parquet-only and rejects avro with a pointed error at plan time.
     val hasAvro = m.files.exists(_.path.endsWith(".avro"))
-    val stored = pinnedAt.map(_._2).getOrElse(
-      if (snap > 0) GraftLakeTable.storedSchemaAt(spark, root, snap)
-      else schema())
     val mapped = graft.lake.ColumnMapping.hasMapping(stored)
     // unreachable by construction (appendAvro/rewriteAvro reject
     // mapped tables; evolution verbs reject avro tables) — but a
@@ -360,7 +370,7 @@ class GraftLakeTable(spark: SparkSession, val root: String, asOf: Option[Int],
       if (mapped) graft.lake.ColumnMapping.toPhysical(stored) else Map.empty,
       (pscan, pushed, requested, limit) =>
         new GraftScan(spark, root, m, stored, pscan, pushed, requested,
-          limit),
+          limit, reportBuckets = pinnedAt.isEmpty),
       // bare COUNT(*) answers straight from manifest row counts on a
       // clean snapshot — exact regardless of mapping/widening/defaults
       manifestRows =
@@ -396,7 +406,7 @@ class GraftLakeTable(spark: SparkSession, val root: String, asOf: Option[Int],
   // metadata-only empty-rewrite commit.
 
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    asOf.isEmpty && snap > 0 &&
+    at.isEmpty && snap > 0 &&
       filters.forall(f => FilterToColumn.translate(f).isDefined)
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
@@ -422,7 +432,7 @@ class GraftLakeTable(spark: SparkSession, val root: String, asOf: Option[Int],
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo)
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder = {
-    require(asOf.isEmpty,
+    require(at.isEmpty,
       s"cannot run row-level ${info.command()} against a time-travel view of $root")
     () => new GraftDeltaOperation(spark, this, info.command())
   }
@@ -674,7 +684,10 @@ final class GraftScan(spark: SparkSession, root: String, m: Manifest,
     // full requested schema when row-coordinate metadata columns
     // (`_graft_file_path`/`_graft_row_idx`) are among the output
     requested: Option[StructType] = None,
-    limit: Option[Int] = None)
+    limit: Option[Int] = None,
+    // false: never report the bucket layout, so splits pack across
+    // buckets as a file-source read packs them
+    reportBuckets: Boolean = true)
   extends Scan with Batch with SupportsReportStatistics
   with SupportsRuntimeFiltering
   with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
@@ -702,7 +715,7 @@ final class GraftScan(spark: SparkSession, root: String, m: Manifest,
     * being feasible and not.
     */
   private lazy val spjSpec: Option[(String, Int)] =
-    if (m.bucketCol.nonEmpty && m.nBuckets > 0 && !coordsRequested &&
+    if (reportBuckets && m.bucketCol.nonEmpty && m.nBuckets > 0 && !coordsRequested &&
         !aggPushed && m.files.forall(_.bucket >= 0) &&
         DsV2Shim.v2BucketingEnabled)
       Some((m.bucketCol, m.nBuckets))
@@ -1118,8 +1131,8 @@ final class DeleteFilterReader(inner: PartitionReader[InternalRow],
     case "short" => java.lang.Long.valueOf(r.getShort(ord).toLong)
     case "byte" => java.lang.Long.valueOf(r.getByte(ord).toLong)
     case "string" => r.getUTF8String(ord).toString
-    case "double" => java.lang.Double.valueOf(r.getDouble(ord))
-    case "float" => java.lang.Double.valueOf(r.getFloat(ord).toDouble)
+    case "double" => DeleteSideCache.floating(r.getDouble(ord))
+    case "float" => DeleteSideCache.floating(r.getFloat(ord).toDouble)
     case _ => java.lang.Boolean.valueOf(r.getBoolean(ord))
   }
 
@@ -1192,8 +1205,14 @@ object DeleteSideCache {
     ParquetReader.builder(new GroupReadSupport(), new HPath(f))
       .withConf(new Configuration()).build()
 
+  /** A floating key as both sides box it, normalized as Spark's join
+    * keys are: -0.0 equals 0.0 and every NaN equals every other.
+    */
+  def floating(d: Double): java.lang.Double =
+    java.lang.Double.valueOf(if (d == 0.0) 0.0 else if (d.isNaN) Double.NaN else d)
+
   /** Values normalized to the same boxing [[DeleteFilterReader.keyOf]]
-    * produces: integer family → Long, float family → Double.
+    * produces: integer family → Long, float family → [[floating]].
     */
   private def loadKeys(files: Seq[String]): java.util.HashSet[AnyRef] = {
     val set = new java.util.HashSet[AnyRef]()
@@ -1208,8 +1227,8 @@ object DeleteSideCache {
               case PrimitiveTypeName.INT64 => java.lang.Long.valueOf(g.getLong(0, 0))
               case PrimitiveTypeName.INT32 => java.lang.Long.valueOf(g.getInteger(0, 0).toLong)
               case PrimitiveTypeName.BINARY => g.getString(0, 0)
-              case PrimitiveTypeName.DOUBLE => java.lang.Double.valueOf(g.getDouble(0, 0))
-              case PrimitiveTypeName.FLOAT => java.lang.Double.valueOf(g.getFloat(0, 0).toDouble)
+              case PrimitiveTypeName.DOUBLE => floating(g.getDouble(0, 0))
+              case PrimitiveTypeName.FLOAT => floating(g.getFloat(0, 0).toDouble)
               case PrimitiveTypeName.BOOLEAN => java.lang.Boolean.valueOf(g.getBoolean(0, 0))
               case other => throw new UnsupportedOperationException(
                 s"graft-lake: unsupported equality-delete key physical type $other")

@@ -197,20 +197,53 @@ class OneReadPathSpec extends AnyFunSuite {
     graft.util.Scratch.rmNow(root)
   }
 
-  test("a bulk equality-delete group is shuffle anti-joined; the rows stay the SQL read's") {
+  test("bulk equality and positional delete groups are shuffle anti-joined; the rows stay the SQL read's") {
     val (t, root) = deletesTable("onepath_bulk")
+    val key = Seq(LakeTable.CoordPath, LakeTable.CoordIdx)
     spark.conf.set(LakeTable.BroadcastDeleteRowsKey, "0")
     try {
       val got = LakeTable.read(spark, root)
-      // the eq group comes off the pinned manifest into one anti-join
-      // of the first commit's files; the later files read on their own
-      assert(joins(got).map(_.joinType.toString) === Seq("LeftAnti"))
+      // both groups come off the pinned manifest into anti-joins of the
+      // first commit's files — the positional one on the row
+      // coordinates; the DV stays in the readers and the later files
+      // read on their own
+      assert(joins(got).map(_.joinType.toString) === Seq("LeftAnti", "LeftAnti"))
+      assert(joins(got).flatMap(_.condition.toSeq.flatMap(_.references.map(_.name))).toSet ===
+        Set("event_type") ++ key)
       assert(lakeScans(got).size === 2)
       assert(lakeScans(got).forall(s => s.relation.table.asInstanceOf[GraftLakeTable]
         .mvRewritable === false))
-      assert(rows(got) === rows(spark.sql(s"SELECT * FROM $t")))
-      assert(got.schema === storedSchema(root, 5))
+      (1 to 5).foreach { s =>
+        val read = LakeTable.read(spark, root, Some(s))
+        assert(rows(read) === rows(spark.sql(s"SELECT * FROM $t VERSION AS OF $s")),
+          s"snapshot $s rows")
+        assert(read.schema === storedSchema(root, s), s"snapshot $s schema")
+        assert(rows(LakeTable.withRowCoords(spark, root, Some(s))
+          .select(("event_id" +: key).map(col): _*)) ===
+          rows(spark.sql(s"SELECT event_id, ${key.mkString(", ")} FROM $t VERSION AS OF $s")),
+          s"snapshot $s coordinates")
+      }
     } finally spark.conf.unset(LakeTable.BroadcastDeleteRowsKey)
+    graft.util.Scratch.rmNow(root)
+  }
+
+  test("a double-keyed equality delete matches -0.0 to 0.0 and NaN to NaN, as a join does") {
+    val root = graft.util.Scratch.dir("graft_onepath_dbl_")
+    val xs = spark.range(40).select(col("id").as("event_id"),
+      when(col("id") % 4 === 0, lit(0.0)).when(col("id") % 4 === 1, lit(-0.0))
+        .when(col("id") % 4 === 2, lit(Double.NaN)).otherwise(col("id").cast("double"))
+        .as("x"))
+    LakeTable.commit(spark, root, xs, BlockWriter.Config("event_id", "event_id",
+      maxRecordsPerFile = 16), Seq("event_id"))
+    val keys = spark.createDataFrame(Seq(Tuple1(0.0), Tuple1(Double.NaN))).toDF("x")
+    // the join the probe stands for
+    val expect = xs.join(keys, Seq("x"), "left_anti")
+    assert(expect.count() === 10)
+    LakeTable.deleteWhere(spark, root, "x", keys)
+    val got = LakeTable.read(spark, root)
+    assertOneScan(got, "double key")
+    assert(rows(got) === rows(expect))
+    assert(rows(spark.read.format("graft-lake").load(root)) === rows(expect))
     graft.util.Scratch.rmNow(root)
   }
 
