@@ -3,6 +3,8 @@ package graft.plans
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import graft.functions.{CosineSim, Hash60, IntL2, SimHash}
 
 /** Session extension registering graft's native expressions with the
@@ -11,10 +13,22 @@ import graft.functions.{CosineSim, Hash60, IntL2, SimHash}
   * enable via `spark.sql.extensions=graft.plans.GraftExtensions`
   * (GraftSession does) or [[GraftExtensions.register]] on a live
   * session.
+  *
+  * It also adds one physical rule, [[HoldLiterals]]: the primitive
+  * literals of filter comparisons and `IN` lists are read by generated
+  * code from the plan's references instead of being written into its
+  * source, so a query that differs from an earlier one only in its
+  * bounds hits Spark's codegen cache and compiles no new class. The
+  * rule runs before columnar transitions, so it covers adaptive query
+  * stages and streaming micro-batches. Only `spark.sql.extensions`
+  * installs it: [[GraftExtensions.register]] adds the functions alone.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.descriptors.foreach(ext.injectFunction)
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = HoldLiterals
+    })
     ext.injectOptimizerRule(FuseCosine)
     // answer aggregates over a fact table from a FRESH materialized
     // view built on it (exact-group projection or group-subset

@@ -1,13 +1,10 @@
 package graft.streaming
 
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.InSet
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graftshim.DsV2Shim
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
 import graft.lake.LakeTable
 import graft.operators.{Dedup, MinhashIndex}
 import graft.writer.BlockWriter
@@ -48,7 +45,12 @@ import graft.writer.BlockWriter
   * are batch-bounded: the batch's shingle sets and band keys are what
   * a broadcast of the batch side ships to the driver anyway, and the
   * probe and corpus reads return O(collisions) rows. Nothing is
-  * cached, so nothing outlives the batch.
+  * cached, so nothing outlives the batch. The probe, corpus and
+  * results filters are plain `isin` lists of the batch's own keys:
+  * [[graft.plans.HoldLiterals]] keeps a short list's values out of
+  * the generated code (over 10 values Spark builds an `InSet`, held
+  * by reference anyway), so new keys compile no new code, and both
+  * forms push down as the same source `In` filter.
   *
   * COMMIT ORDER — the three commits take driver-built frames
   * (results = the batch minus the verified ids, base and bands = the
@@ -91,17 +93,6 @@ object DedupStream {
       .select(col("probe_doc_id").as("doc_id"))
       .distinct()
   }
-
-  /** `c IN values` over a batch-derived value set, built as an
-    * `InSet` so generated code holds the set by reference. A literal
-    * `isin` list of ≤ 10 values is inlined into the generated code
-    * instead, so every batch's own ids compiled new code (measured:
-    * ~4 more codegen compilations per micro-batch). Still pushed down
-    * as a source `In` filter. `values` are Catalyst values
-    * (UTF8String for text).
-    */
-  private def inSet(c: String, values: Iterable[Any]): Column =
-    DsV2Shim.exprColumn(InSet(DsV2Shim.columnExpr(col(c)), values.toSet))
 
   /** One micro-batch's collected gate: every batch doc id (documents
     * too short to shingle included — they are never dups), the
@@ -156,7 +147,7 @@ object DedupStream {
     val pairs: Set[(Long, Long)] =
       if (probeKeys.isEmpty) Set.empty
       else LakeTable.read(spark, bandsRoot)
-        .filter(inSet("bk", probeKeys.keys.map(k => UTF8String.fromString(k._2))))
+        .filter(col("bk").isin(probeKeys.keys.map(_._2).toSeq.distinct: _*))
         .select("band", "bk", "doc_id").collect()
         .iterator.flatMap { r =>
           probeKeys.getOrElse((r.getInt(0), r.getString(1)), Nil)
@@ -166,7 +157,7 @@ object DedupStream {
     val corpusWhs =
       if (pairs.isEmpty) Map.empty[Long, Seq[Seq[Long]]]
       else LakeTable.read(spark, baseRoot)
-        .filter(inSet("doc_id", pairs.map(_._2)))
+        .filter(col("doc_id").isin(pairs.toSeq.map(_._2).distinct: _*))
         .select("doc_id", "whs").collect().toSeq
         .groupMap(_.getLong(0))(_.getSeq[Long](1))
     val cmp = for {
@@ -261,7 +252,7 @@ object DedupStream {
               if (!resultsDone)
                 LakeTable.commit(spark, resultsRoot,
                   if (v.dups.isEmpty) results
-                  else results.filter(!inSet("doc_id", v.dups)),
+                  else results.filter(!col("doc_id").isin(v.dups.toSeq: _*)),
                   cfg, Seq("doc_id"), note = note): Unit
             }
             // the probe side last: survivors' bands join the index

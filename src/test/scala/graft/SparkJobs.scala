@@ -51,4 +51,15 @@ object SparkJobs {
     import scala.jdk.CollectionConverters._
     seen.asScala.toSeq
   }
+
+  /** The Janino compilations (Spark codegen-cache misses) made while
+    * `body` ran: the delta of Spark's process-wide compile counter, so
+    * like [[during]] it counts every thread's, executor tasks included.
+    */
+  def compilesDuring(body: => Unit): Long = {
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    body
+    compiles.getCount - before
+  }
 }
